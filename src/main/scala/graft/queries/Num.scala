@@ -25,6 +25,15 @@ object Num {
   /** Deterministic round for computed floats of magnitude ≲ 1e6. */
   def r(c: Column, n: Int): Column = round(c + lit(1e-9), n)
 
+  /** [[r]] for a double already on the driver, bit-for-bit: the same
+    * nudge, then Spark's own double `round` (HALF_UP on the shortest
+    * decimal repr; NaN and ±Infinity pass through). */
+  def rHost(x: Double, n: Int): Double = {
+    val y = x + 1e-9
+    if (y.isNaN || y.isInfinite) y
+    else BigDecimal(y).setScale(n, BigDecimal.RoundingMode.HALF_UP).toDouble
+  }
+
   /** Deterministic round with a wider nudge for exp/log-amplified values
     * (libm implementations differ by ulps between JVM and C). */
   def rExp(c: Column, n: Int): Column = round(c + lit(1e-8), n)

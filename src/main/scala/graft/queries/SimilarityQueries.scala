@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -504,51 +504,109 @@ object SimilarityQueries {
     * trains (it fails fast instead), so a measured/production query is a
     * pure read.
     *
-    * Scale shape: each iteration is one broadcast join (K vectors) + one
-    * shuffle keyed (c_id, dim) for the mean — the classic distributed
-    * Lloyd step; only the K centroids themselves ever come to the driver
-    * (16×64 doubles — a model, not data). Components are rounded
-    * (epsilon-nudged, 6 dp), which keeps them stable across runs in
-    * practice; strictly, `avg` over doubles is accumulation-order
-    * dependent, so determinism is only guaranteed WITHIN a run — which
-    * suffices, because both engines read the same persisted bits and the
-    * model path is versioned by training code, not by float identity.
-    * Clusters that lose every member drop out (K may shrink); NPROBE
-    * probing tolerates that. */
+    * Scale shape: each iteration is [[lloydMeans]] — the K centroids
+    * ride ONE broadcast row, every vector picks its nearest centroid
+    * inside its own row, and the per-(c_id, dim) partial mean is the only
+    * exchange (K·dim rows per partition, never N·K vectors). The K·dim
+    * means come to the driver, which renormalizes them ([[ivfLloydStep]]).
+    * Both the broadcast and the collect are bounded by construction
+    * (ROADMAP item 5): K·dim doubles, K = `graft.ivf.nlist` — 16·64 by
+    * default, 160·64 in ScaleDemo's ×10 — independent of N. Components
+    * are rounded (epsilon-nudged, 6 dp), which keeps them stable across
+    * runs in practice; strictly, `avg` over doubles is
+    * accumulation-order dependent, so determinism is only guaranteed
+    * WITHIN a run — which suffices, because both engines read the same
+    * persisted bits and the model path is versioned by training code,
+    * not by float identity. Clusters that lose every member drop out
+    * (K may shrink); NPROBE probing tolerates that. */
   def trainIvfCentroids(spark: SparkSession, dir: String): Unit = {
     val path = ivfModelPath(dir)
     if (ivfModelTrained(spark, dir)) return
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val e = Tables(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    var cents: Seq[(Long, Seq[Double])] =
-      e.filter(col("vec_id") < NCENTROIDS)
-        .select(col("vec_id"), col("v")).as[(Long, Seq[Double])]
-        .collect().toSeq
-    for (_ <- 1 to LloydIters) {
-      val centDf = broadcast(cents.toDF("c_id", "cv"))
-      val wAssign = Window.partitionBy("vec_id")
-        .orderBy(col("sim").desc, col("c_id"))
-      val assigned = e.join(centDf)
-        .select(col("vec_id"), col("v"), col("c_id"),
-          Num.r(expr(dotSpark.format("v", "cv")), 6).as("sim"))
-        .withColumn("rn", row_number().over(wAssign))
-        .filter(col("rn") === 1)
-      cents = assigned
-        .select(col("c_id"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("c_id", "pos").agg(avg("x").as("m"))
-        .groupBy("c_id")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("c_id"), expr("transform(pm, s -> s.m)").as("cv0"))
-        .select(col("c_id"), col("cv0"),
-          expr("sqrt(aggregate(cv0, 0D, (a, y) -> a + y * y))").as("nrm"))
-        .select(col("c_id"),
-          expr("transform(cv0, x -> round(x / nrm + 1e-9, 6))").as("cv"))
-        .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
-    }
-    cents.toDF("c_id", "cv").coalesce(1)
+    ivfCentroidsOf(embeddingsOf(spark, dir)).toDF("c_id", "cv").coalesce(1)
       .write.mode("overwrite").parquet(path)
+  }
+
+  /** The trained IVF model of a (vec_id, v) frame, sorted by c_id:
+    * first-NCENTROIDS init, then LloydIters [[ivfLloydStep]]s. */
+  private[graft] def ivfCentroidsOf(e: DataFrame): Seq[(Long, Seq[Double])] = {
+    import e.sparkSession.implicits._
+    val init = e.filter(col("vec_id") < NCENTROIDS)
+      .select(col("vec_id"), col("v")).as[(Long, Seq[Double])]
+      .collect().toSeq
+    (1 to LloydIters).foldLeft(init)((cents, _) => ivfLloydStep(e, cents))
+  }
+
+  /** One model center as a broadcast-row element: `cs` arrays hold these
+    * sorted by id. IVF ids are c_id, PQ ids are codes. */
+  private[graft] case class Center(id: Long, cv: Seq[Double])
+
+  /** The nearest center of the row, picked inside the row: `cs` is the
+    * whole model as array<struct<id, cv>>, `score` rates one center
+    * (higher = nearer). The lexicographic array_max over (score, −id)
+    * sends ties to the smaller id — the batch `max_by` /
+    * `row_number(score DESC, id)` tie-break — with no shuffle and no
+    * state. The ONE nearest-center definition shared by Lloyd training
+    * and streaming model serving. */
+  private[graft] def nearestCenter(cs: Column,
+      score: Column => Column): Column =
+    -array_max(transform(cs, c => named_struct(
+      lit("score"), score(c), lit("nid"), -c.getField("id"))))
+      .getField("nid")
+
+  /** IVF list score: the 6-dp rounded cosine (unit vectors, so dot). */
+  private def ivfSim(v: Column, cv: Column): Column =
+    Num.r(call_function("dot_product", v, cv), 6)
+
+  /** A vector's IVF list against the one-row model `cs` ([[centersRow]]). */
+  private[graft] def ivfNearest(v: Column, cs: Column): Column =
+    nearestCenter(cs, c => ivfSim(v, c.getField("cv")))
+
+  /** A model as ONE row `cs` = array<struct<id, cv>> sorted by id — what
+    * [[nearestCenter]] scans and what a crossJoin broadcasts. */
+  private[graft] def centersRow(spark: SparkSession,
+      cents: Seq[(Long, Seq[Double])]): DataFrame = {
+    import spark.implicits._
+    Seq(Tuple1(cents.sortBy(_._1).map(c => Center(c._1, c._2))))
+      .toDF("cs")
+  }
+
+  /** One Lloyd iteration's executor side, shared by the IVF and PQ
+    * trainers: cross-join the ONE model row (broadcast — the model ships
+    * once per executor, not as a plan literal per task), pick each
+    * point's center inside its row (`nearest`, evaluated to `id`), then
+    * `avg` every coordinate per (keys…, id, pos). That partial aggregate
+    * is the only exchange: K·dim rows per partition. */
+  private def lloydMeans(points: DataFrame, model: DataFrame,
+      keys: Seq[String], nearest: Column, v: Column): DataFrame =
+    points.crossJoin(broadcast(model))
+      // pick the center BEFORE the explode: a projection next to the
+      // generator would evaluate it once per coordinate, not per point
+      .select(keys.map(col) ++ Seq(nearest.as("id"), v.as("v")): _*)
+      .select(keys.map(col) ++ Seq(col("id"),
+        posexplode(col("v")).as(Seq("pos", "x"))): _*)
+      .groupBy((keys ++ Seq("id", "pos")).map(col): _*)
+      .agg(avg("x").as("mu"))
+
+  /** IVF iteration means: (id, pos, mu) per surviving centroid. */
+  private[graft] def ivfLloydMeans(e: DataFrame,
+      cents: Seq[(Long, Seq[Double])]): DataFrame =
+    lloydMeans(e, centersRow(e.sparkSession, cents), Nil,
+      ivfNearest(col("v"), col("cs")), col("v"))
+
+  /** One IVF Lloyd iteration: the K·dim means (a model, not data) are
+    * finished on the driver with Spark's own arithmetic — left-fold sum
+    * of squares, `sqrt`, then [[Num.rHost]] on x / nrm — so the centers
+    * are bit-identical to the same finish done in SQL. */
+  private[graft] def ivfLloydStep(e: DataFrame,
+      cents: Seq[(Long, Seq[Double])]): Seq[(Long, Seq[Double])] = {
+    import e.sparkSession.implicits._
+    ivfLloydMeans(e, cents).as[(Long, Int, Double)].collect().toSeq
+      .groupBy(_._1).toSeq.sortBy(_._1).map { case (id, rows) =>
+        val cv0 = rows.sortBy(_._2).map(_._3)
+        val nrm = math.sqrt(cv0.foldLeft(0D)((a, y) => a + y * y))
+        id -> cv0.map(x => Num.rHost(x / nrm, 6))
+      }
   }
 
   // ---- the persisted inverted file: append-maintained assignments ----
@@ -634,7 +692,7 @@ object SimilarityQueries {
       .select(col("c_id"), col("cv")))
     e.join(centroids)
       .select(col("vec_id"), col("v"), col("c_id"),
-        Num.r(expr(dotSpark.format("v", "cv")), 6).as("c_sim"))
+        ivfSim(col("v"), col("cv")).as("c_sim"))
   }
 
   /** STREAMING-ingest append: assign one arriving micro-batch of
@@ -725,14 +783,14 @@ object SimilarityQueries {
     * (vec_id, v, c_id, c_sim) — one narrow broadcast-join pass.
     * Shared with [[DedupQueries]]'s SemDeDup, which reuses the same
     * trained coarse quantizer as its cluster assignment. */
-  private[queries] def centroidScored(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def centroidScored(spark: SparkSession, dir: String): DataFrame = {
     val e = embeddingsOf(spark, dir)
     val centroids = broadcast(spark.read.schema("c_id BIGINT, cv ARRAY<DOUBLE>")
       .parquet(ivfModelPath(dir))
       .select(col("c_id"), col("cv")))
     e.join(centroids)
       .select(col("vec_id"), col("v"), col("c_id"),
-        Num.r(expr(dotSpark.format("v", "cv")), 6).as("c_sim"))
+        ivfSim(col("v"), col("cv")).as("c_sim"))
   }
 
   /** List assignment (argmax c_sim, ties to the smaller c_id) as a
@@ -741,7 +799,7 @@ object SimilarityQueries {
     * — a row_number window would ship and sort all N·K. (The
     * struct-valued max_by plans as a sort-aggregate, so a local
     * per-partition sort remains; the full-input shuffle-sort does not.) */
-  private[queries] def centroidAssigned(scored: DataFrame): DataFrame =
+  private[graft] def centroidAssigned(scored: DataFrame): DataFrame =
     scored.groupBy("vec_id")
       .agg(max_by(struct(col("v"), col("c_id")),
         struct(col("c_sim"), col("c_id") * -1)).as("r"))
@@ -890,17 +948,18 @@ object SimilarityQueries {
 
   /** Long-form subvector view: (vec_id, m, subv) — each 64-dim vector
     * split into PQ_M contiguous PQ_SUBDIM-dim slices. */
-  private def subvectorsOf(e: DataFrame): DataFrame =
+  private[graft] def subvectorsOf(e: DataFrame): DataFrame =
     e.selectExpr("vec_id",
         s"""explode(transform(sequence(0, ${PQ_M - 1}),
              m -> named_struct('m', m, 'subv', slice(v, m * $PQ_SUBDIM + 1, $PQ_SUBDIM)))) AS s""")
       .selectExpr("vec_id", "s.m AS m", "s.subv AS subv")
 
-  /** L2 nearest-code distance surrogate: argmin ‖x−c‖² ≡
+  /** L2 nearest-code distance surrogate, 6-dp rounded: argmin ‖x−c‖² ≡
     * argmin (‖c‖² − 2·x·c) — both dot products are the proven
     * bit-identical left fold, so assignment agrees across engines. */
-  private val pqDistExpr =
-    "dot_product(cv, cv) - 2 * dot_product(subv, cv)"
+  private def pqDist(subv: Column, cv: Column): Column =
+    Num.r(call_function("dot_product", cv, cv) -
+      lit(2) * call_function("dot_product", subv, cv), 6)
 
   /** Offline product-quantization training: independent L2 k-means per
     * subspace (first-PQ_K init, LloydIters iterations, 6-dp rounded
@@ -910,37 +969,57 @@ object SimilarityQueries {
     * parquet; both engines read the same trained bits. PQ is the
     * COMPRESSION tier of the standard 100 TB ANN stack: 64 doubles
     * (512 B) become PQ_M 4-bit codes (4 B) — the corpus scan that ADC
-    * scoring pays is 128× smaller than the raw vectors. */
+    * scoring pays is 128× smaller than the raw vectors.
+    *
+    * Scale shape: [[pqLloydStep]] — one broadcast row of PQ_M codebooks
+    * (PQ_M·PQ_K·PQ_SUBDIM = 1024 doubles, bounded by construction), one
+    * exchange keyed (m, code, pos) per iteration. */
   def trainPqCodebooks(spark: SparkSession, dir: String): Unit = {
     if (pqModelTrained(spark, dir)) return
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val sub = subvectorsOf(embeddingsOf(spark, dir))
-    var cents: Seq[(Int, Int, Seq[Double])] =
-      sub.filter(col("vec_id") < PQ_K)
-        .select(col("m"), col("vec_id").cast("int").as("code"), col("subv"))
-        .as[(Int, Int, Seq[Double])].collect().toSeq
-    for (_ <- 1 to LloydIters) {
-      val cdf = broadcast(cents.toDF("m", "code", "cv"))
-      val wAssign = Window.partitionBy("vec_id", "m")
-        .orderBy(col("d"), col("code"))
-      val assigned = sub.join(cdf, "m")
-        .select(col("vec_id"), col("m"), col("subv"), col("code"),
-          Num.r(expr(pqDistExpr), 6).as("d"))
-        .withColumn("rn", row_number().over(wAssign))
-        .filter(col("rn") === 1)
-      cents = assigned
-        .select(col("m"), col("code"), posexplode(col("subv")).as(Seq("pos", "x")))
-        .groupBy("m", "code", "pos").agg(avg("x").as("mu"))
-        .groupBy("m", "code")
-        .agg(array_sort(collect_list(struct(col("pos"), col("mu")))).as("pm"))
-        .select(col("m"), col("code"),
-          expr("transform(pm, s -> round(s.mu + 1e-9, 6))").as("cv"))
-        .as[(Int, Int, Seq[Double])].collect().toSeq
-        .sortBy(t => (t._1, t._2))
-    }
-    cents.toDF("m", "code", "cv").coalesce(1)
+    pqCodebooksOf(subvectorsOf(embeddingsOf(spark, dir)))
+      .toDF("m", "code", "cv").coalesce(1)
       .write.mode("overwrite").parquet(pqModelPath(dir))
+  }
+
+  /** The trained PQ codebooks of a (vec_id, m, subv) frame, sorted by
+    * (m, code): first-PQ_K init, then LloydIters [[pqLloydStep]]s. */
+  private[graft] def pqCodebooksOf(
+      sub: DataFrame): Seq[(Int, Int, Seq[Double])] = {
+    import sub.sparkSession.implicits._
+    val init = sub.filter(col("vec_id") < PQ_K)
+      .select(col("m"), col("vec_id").cast("int").as("code"), col("subv"))
+      .as[(Int, Int, Seq[Double])].collect().toSeq
+    (1 to LloydIters).foldLeft(init)((cents, _) => pqLloydStep(sub, cents))
+  }
+
+  /** PQ iteration means: (m, id, pos, mu) per surviving code. The model
+    * row holds one id-sorted codebook per subspace, indexed by m; a
+    * subvector scores only its own subspace's codes (higher = nearer,
+    * so the L2 surrogate is negated). */
+  private[graft] def pqLloydMeans(sub: DataFrame,
+      cents: Seq[(Int, Int, Seq[Double])]): DataFrame = {
+    val spark = sub.sparkSession
+    import spark.implicits._
+    val byM = cents.groupBy(_._1)
+    val books = (0 to byM.keys.max).map(m => byM.getOrElse(m, Nil)
+      .sortBy(_._2).map(c => Center(c._2.toLong, c._3)))
+    lloydMeans(sub, Seq(Tuple1(books)).toDF("cbs"), Seq("m"),
+      nearestCenter(element_at(col("cbs"), col("m") + 1),
+        c => -pqDist(col("subv"), c.getField("cv"))),
+      col("subv"))
+  }
+
+  /** One PQ Lloyd iteration: centers = the 6-dp rounded means
+    * ([[Num.rHost]]), finished on the driver like [[ivfLloydStep]]. */
+  private[graft] def pqLloydStep(sub: DataFrame,
+      cents: Seq[(Int, Int, Seq[Double])]): Seq[(Int, Int, Seq[Double])] = {
+    import sub.sparkSession.implicits._
+    pqLloydMeans(sub, cents).as[(Int, Long, Int, Double)].collect().toSeq
+      .groupBy(r => (r._1, r._2)).toSeq.sortBy(_._1).map {
+        case ((m, id), rows) =>
+          (m, id.toInt, rows.sortBy(_._3).map(r => Num.rHost(r._4, 6)))
+      }
   }
 
   /** Persisted PQ code location — sibling of the codebooks, so a
@@ -994,7 +1073,7 @@ object SimilarityQueries {
       .select(col("m"), col("code"), col("cv")))
     sub.join(cb, "m")
       .select(col("vec_id"), col("m"), col("code"),
-        Num.r(expr(pqDistExpr), 6).as("d"))
+        pqDist(col("subv"), col("cv")).as("d"))
       .groupBy("vec_id", "m")
       // argmin(d, ties to smaller code) via min_by: the partial aggregate
       // collapses each (vec, m)'s PQ_K rows before the exchange, so the

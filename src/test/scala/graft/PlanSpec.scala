@@ -730,6 +730,47 @@ class PlanSpec extends SparkSpec {
         s"plan, found $n:\n$txt")
   }
 
+  test("Lloyd step: centers broadcast as one row, one exchange keyed (id, pos), no window") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.queries.SimilarityQueries
+    object Plans extends AdaptiveSparkPlanHelper
+    val e = Tables(spark, sf, "embeddings")
+      .selectExpr("vec_id", "cast(embedding AS array<double>) AS v")
+    val sub = SimilarityQueries.subvectorsOf(e)
+    val ivfInit = e.filter(col("vec_id") < 16).as[(Long, Seq[Double])]
+      .collect().toSeq
+    val pqInit = sub.filter(col("vec_id") < 16)
+      .select(col("m"), col("vec_id").cast("int"), col("subv"))
+      .as[(Int, Int, Seq[Double])].collect().toSeq
+    // a nearest-center window over the N·K scored rows would add two
+    // exchanges and ship every vector once per centroid
+    Seq(
+      (SimilarityQueries.ivfLloydMeans(e, ivfInit), Seq("id", "pos"), "cs"),
+      (SimilarityQueries.pqLloydMeans(sub, pqInit), Seq("m", "id", "pos"), "cbs"))
+      .foreach { case (df, keys, model) =>
+        df.collect()
+        val plan = df.queryExecution.executedPlan
+        assert(Plans.collect(plan) { case w: WindowExec => w }.isEmpty,
+          s"a Lloyd step must not window the scored rows:\n$plan")
+        val shuffles = Plans.collect(plan) { case x: ShuffleExchangeExec => x }
+        assert(shuffles.size == 1,
+          s"a Lloyd step must shuffle exactly once:\n$plan")
+        val keyed = shuffles.head.outputPartitioning match {
+          case h: HashPartitioning =>
+            h.expressions.flatMap(_.references.map(_.name))
+          case _ => Nil
+        }
+        assert(keyed == keys, s"the one exchange must be keyed $keys:\n$plan")
+        val bcasts = Plans.collect(plan) { case b: BroadcastExchangeExec => b }
+        assert(bcasts.exists(_.child.output.map(_.name) == Seq(model)),
+          s"the centers must arrive as one broadcast row:\n$plan")
+      }
+  }
+
   test("basket pairs: the collect_set baskets exchange is runtime-reused") {
     // one lineitem scan + collect_set exchange feeds BOTH the pair
     // explode and the per-item frequency branch; if AQE's stage reuse

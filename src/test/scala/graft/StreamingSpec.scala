@@ -607,31 +607,32 @@ class StreamingSpec extends SparkSpec {
     import graft.queries.SimilarityQueries
     val dir = "/root/testdata/sf0.001"
     SimilarityQueries.trainIvfCentroids(spark, dir)
-    // the trained coarse quantizer is a MODEL (K×64 doubles): bake it
-    // into the plan as a literal so each arriving vector is scored
-    // array-locally — per-row enrichment, NO shuffle, NO streaming state;
-    // this is the serving shape for assigning new corpus arrivals to
-    // their inverted list at ingest time
-    val cents = spark.read.parquet(SimilarityQueries.ivfModelPath(dir))
-      .select("c_id", "cv").as[(Long, Seq[Double])].collect().sortBy(_._1)
-    val centArr = cents.map { case (cid, cv) =>
-      s"named_struct('c_id', ${cid}L, 'cv', array(${cv.map(v => s"${v}D").mkString(",")}))"
-    }.mkString("array(", ", ", ")")
-    // argmax by (sim, -c_id): lexicographic array_max ties to the
-    // smaller centroid id, mirroring the batch max_by tie-break
-    val assignExpr = s"array_max(transform($centArr, " +
-      "c -> named_struct('sim', round(dot_product(v, c.cv) + 1e-9, 6), " +
-      "'nc', -c.c_id))).nc * -1 AS c_id"
-    val batch = Tables(spark, dir, "embeddings")
-      .selectExpr("vec_id", "cast(embedding AS array<double>) AS v")
-      .selectExpr("vec_id", assignExpr)
+    // the trained coarse quantizer is a MODEL (K×64 doubles): ONE
+    // broadcast row each arriving vector is scored against array-locally
+    // — per-row enrichment, NO shuffle, NO streaming state; this is the
+    // serving shape for assigning new corpus arrivals to their inverted
+    // list at ingest time, and the same nearest-center expression the
+    // Lloyd trainer assigns with
+    val model = SimilarityQueries.centersRow(spark,
+      spark.read.parquet(SimilarityQueries.ivfModelPath(dir))
+        .select("c_id", "cv").as[(Long, Seq[Double])].collect().toSeq)
+    def assign(df: org.apache.spark.sql.DataFrame) = df.crossJoin(broadcast(model))
+      .select(col("vec_id"), SimilarityQueries.ivfNearest(col("v"), col("cs")).as("c_id"))
+    val batch = assign(Tables(spark, dir, "embeddings")
+      .selectExpr("vec_id", "cast(embedding AS array<double>) AS v"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+    // row-local argmax ≡ the batch max_by assignment (ties to the
+    // smaller centroid id in both)
+    val maxBy = SimilarityQueries.centroidAssigned(
+      SimilarityQueries.centroidScored(spark, dir))
+      .collect().map(r => (r.getLong(0), r.getLong(2))).sorted
+    assert(batch.sameElements(maxBy))
     val mem = MemoryStream[(Long, Seq[Double])]
     Tables(spark, dir, "embeddings")
       .selectExpr("vec_id", "cast(embedding AS array<double>) AS v")
       .as[(Long, Seq[Double])].collect().grouped(40)
       .foreach(c => mem.addData(c.toSeq))
-    val served = mem.toDF.toDF("vec_id", "v").selectExpr("vec_id", assignExpr)
+    val served = assign(mem.toDF.toDF("vec_id", "v"))
     StreamingPipeline.drainAvailableNow(served, "ivf_serve")
     val streamed = spark.table("ivf_serve")
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
