@@ -16,13 +16,16 @@ import graft.queries.Registry
   *  - run_sec   Σ executorRunTime (adds I/O wait, fetch wait, GC);
   *  - input_mb  Σ bytes read from storage (pass-counting evidence: a
   *              plan that scans the corpus 3× reads ~3× the bytes);
-  *  - shuffle_mb Σ shuffle WRITE bytes (exchange volume).
+  *  - shuffle_mb Σ shuffle WRITE bytes (exchange volume);
+  *  - wall      the per-query median wall time (the per-query A/B loop
+  *              Bench is too coarse for).
   *
-  * Discipline mirrors QBench (warmup rep, rep-major measured reps,
-  * medians), plus a listener-drain wait so async task-end events cannot
-  * leak across queries. Usage:
-  *   SPARK_GRAFT_SF_DIR=… [SPARK_GRAFT_SKIP_TRAIN=1] \
-  *     sbt "runMain graft.CpuBench q_macd [reps]" */
+  * Set-up trains every artifact the corpus has a source table for
+  * ([[graft.sources.Artifacts.ensureAll]] — a documents-only corpus gets
+  * the documents-sourced ones), then one warmup rep and rep-major
+  * measured reps, medians, plus a listener-drain wait so async task-end
+  * events cannot leak across queries. Usage:
+  *   SPARK_GRAFT_SF_DIR=… sbt "runMain graft.CpuBench q_macd [reps]" */
 object CpuBench {
   private class Acc extends SparkListener {
     val cpu = new LongAdder // ns
@@ -63,23 +66,7 @@ object CpuBench {
     val reps = numeric.lastOption.map(_.toInt).getOrElse(3).max(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val skipTrain = sys.env.get("SPARK_GRAFT_SKIP_TRAIN")
-      .exists(v => v != "0" && v.toLowerCase != "false")
-    if (!skipTrain) {
-      graft.queries.DedupQueries.trainShingleIndex(spark, sfDir)
-      graft.queries.SimilarityQueries.trainIvfCentroids(spark, sfDir)
-      graft.queries.SimilarityQueries.trainIvfAssignments(spark, sfDir)
-      graft.queries.SimilarityQueries.trainPqCodes(spark, sfDir)
-      graft.queries.TextQueries.trainBpeMerges(spark, sfDir)
-      graft.queries.TextQueries.trainUnigramPieces(spark, sfDir)
-      graft.queries.DedupQueries.trainClusterLabels(spark, sfDir)
-      graft.queries.MultimodalQueries.trainAudioSigIndex(spark, sfDir)
-      graft.queries.MultimodalQueries.trainVideoSigIndex(spark, sfDir)
-      graft.queries.MultimodalQueries.trainMediaSigIndex(spark, sfDir)
-      graft.queries.MultimodalQueries.trainMediaClusterLabels(spark, sfDir)
-      graft.queries.MultimodalQueries.trainVideoClusterLabels(spark, sfDir)
-      graft.queries.MultimodalQueries.trainAudioClusterLabels(spark, sfDir)
-    }
+    graft.sources.Artifacts.ensureAll(spark, sfDir)
     val qs = names.toSeq.map(Registry.byName)
     // warmup: codegen + page cache + shared artifacts, not measured
     qs.foreach(_.fn(spark, sfDir).count())

@@ -16,29 +16,9 @@ object ExplainDump {
     val (tag, suffix, names) = (args(0), args(1), args.drop(2).toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    // SPARK_GRAFT_SKIP_TRAIN=1 (QBench semantics): the caller guarantees
-    // the named queries' artifacts exist — lets a plan dump run on a
-    // partial synthetic corpus (e.g. a documents-only SynthDocs dir,
-    // where the vector/media training below would fail on missing
-    // parquet)
-    val skipTrain = sys.env.get("SPARK_GRAFT_SKIP_TRAIN")
-      .exists(v => v != "0" && v.toLowerCase != "false")
-    if (!skipTrain) {
-    // artifacts the queries read must exist (idempotent no-ops when trained)
-    graft.queries.DedupQueries.trainShingleIndex(spark, sfDir)
-    graft.queries.SimilarityQueries.trainIvfCentroids(spark, sfDir)
-    graft.queries.SimilarityQueries.trainIvfAssignments(spark, sfDir)
-    graft.queries.SimilarityQueries.trainPqCodes(spark, sfDir)
-    graft.queries.TextQueries.trainBpeMerges(spark, sfDir)
-    graft.queries.TextQueries.trainUnigramPieces(spark, sfDir)
-    graft.queries.DedupQueries.trainClusterLabels(spark, sfDir)
-    graft.queries.MultimodalQueries.trainAudioSigIndex(spark, sfDir)
-    graft.queries.MultimodalQueries.trainVideoSigIndex(spark, sfDir)
-    graft.queries.MultimodalQueries.trainMediaSigIndex(spark, sfDir)
-    graft.queries.MultimodalQueries.trainMediaClusterLabels(spark, sfDir)
-    graft.queries.MultimodalQueries.trainVideoClusterLabels(spark, sfDir)
-    graft.queries.MultimodalQueries.trainAudioClusterLabels(spark, sfDir)
-    }
+    // artifacts the queries read must exist (idempotent no-ops when
+    // trained; a documents-only corpus gets its documents-sourced ones)
+    graft.sources.Artifacts.ensureAll(spark, sfDir)
     val outDir = java.nio.file.Paths.get("plans", tag)
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { n =>

@@ -12,8 +12,7 @@ object PlanDump {
       else Seq("q_scan_filter", "q_join_snowflake", "q_b3_metrics")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-    graft.queries.SimilarityQueries.trainIvfCentroids(spark, sfDir)
-    graft.queries.SimilarityQueries.trainPqCodes(spark, sfDir)
+    graft.sources.Artifacts.ensureAll(spark, sfDir)
     names.foreach { n =>
       val df = Registry.byName(n).fn(spark, sfDir)
       // collect() executes THIS DataFrame's own queryExecution (count()

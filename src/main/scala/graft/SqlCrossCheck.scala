@@ -575,16 +575,7 @@ object SqlCrossCheck {
     val outPath = if (args.length > 1) args(1) else "SQL_CROSSCHECK.md"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = Sessions.local(cpus)
-    graft.queries.DedupQueries.trainShingleIndex(spark, sfDir)
-    SimilarityQueries.trainIvfCentroids(spark, sfDir)
-    SimilarityQueries.trainIvfAssignments(spark, sfDir)
-    SimilarityQueries.trainPqCodes(spark, sfDir)
-    graft.queries.TextQueries.trainBpeMerges(spark, sfDir)
-    graft.queries.TextQueries.trainUnigramPieces(spark, sfDir)
-    graft.queries.DedupQueries.trainClusterLabels(spark, sfDir)
-    graft.queries.MultimodalQueries.trainMediaClusterLabels(spark, sfDir)
-    graft.queries.MultimodalQueries.trainVideoClusterLabels(spark, sfDir)
-    graft.queries.MultimodalQueries.trainAudioClusterLabels(spark, sfDir)
+    graft.sources.Artifacts.ensureAll(spark, sfDir)
     // one view per testdata table, through the SAME read path as the
     // DataFrame queries (events ns→µs truncation included)
     Tables.names.foreach { n =>

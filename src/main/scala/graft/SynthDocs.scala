@@ -4,7 +4,7 @@ package graft
   * the same token-salting discipline as [[ScaleDemo]] (within-replica
   * structure identical, zero cross-replica overlap). For cluster-shaped
   * A/B measurement of text-family plans at data-bound sizes (pair with
-  * `CpuBench` + SPARK_GRAFT_SKIP_TRAIN=1).
+  * `CpuBench`, which trains the documents-sourced artifacts itself).
   * Usage: `sbt "runMain graft.SynthDocs <src> <dst> <factor>"` */
 object SynthDocs {
   def main(args: Array[String]): Unit = {

@@ -18,21 +18,8 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // Setup, not query work: q_ann_ivf / q_ann_pq are pure reads that
     // fail fast without their trained models, so train (idempotent) first.
-    try {
-      graft.queries.DedupQueries.trainShingleIndex(spark, sfDir)
-      graft.queries.SimilarityQueries.trainIvfCentroids(spark, sfDir)
-      graft.queries.SimilarityQueries.trainIvfAssignments(spark, sfDir)
-      graft.queries.SimilarityQueries.trainPqCodes(spark, sfDir)
-      graft.queries.TextQueries.trainBpeMerges(spark, sfDir)
-      graft.queries.TextQueries.trainUnigramPieces(spark, sfDir)
-      graft.queries.DedupQueries.trainClusterLabels(spark, sfDir)
-      graft.queries.MultimodalQueries.trainAudioSigIndex(spark, sfDir)
-      graft.queries.MultimodalQueries.trainVideoSigIndex(spark, sfDir)
-      graft.queries.MultimodalQueries.trainMediaSigIndex(spark, sfDir)
-      graft.queries.MultimodalQueries.trainMediaClusterLabels(spark, sfDir)
-      graft.queries.MultimodalQueries.trainVideoClusterLabels(spark, sfDir)
-      graft.queries.MultimodalQueries.trainAudioClusterLabels(spark, sfDir)
-    } catch { case e: Throwable =>
+    try graft.sources.Artifacts.ensureAll(spark, sfDir)
+    catch { case e: Throwable =>
       System.err.println(s"[verify] offline model training failed: ${e.getMessage}")
     }
     SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>

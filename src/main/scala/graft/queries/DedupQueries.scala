@@ -220,7 +220,7 @@ object DedupQueries {
     * is computed twice per append (census + slice) — same trade as
     * [[shingleHashesOf]]: a second narrow scan+hash pass beats
     * materializing the full stream. */
-  private def shingleIndex(dir: String): graft.sources.SliceLadder =
+  private[graft] def shingleIndex(dir: String): graft.sources.SliceLadder =
     new graft.sources.SliceLadder(shingleIndexBase(dir), "shingle index",
       idCol = "src_num",
       readSchema = "h BIGINT, doc_id BIGINT, src_num INT",
@@ -497,13 +497,6 @@ object DedupQueries {
   def compactShingleSlices(spark: SparkSession, dir: String,
       upTo: Int): Unit =
     shingleIndex(dir).compactSlices(spark, upTo.toLong)
-
-  /** Size-tiered (LSM-style) maintenance merge — see
-    * [[graft.sources.SliceLadder.compactTiered]]; the bounded-write-
-    * amplification alternative to the full-prefix collapse, exposed on
-    * every modality's index. Censuses untouched, read unchanged. */
-  def compactShingleTiered(spark: SparkSession, dir: String,
-      minRun: Int = 4): Int = shingleIndex(dir).compactTiered(spark, minRun)
 
   /** Ensure the index covers src_num < `bound` (default: full corpus).
     * Idempotent; a partially-covering index is ADVANCED by appending

@@ -214,7 +214,7 @@ object MultimodalQueries {
     Multimodal.encodeSynthPngPartitioned(dims, "doc_id", "w", "h")
   }
 
-  private def mediaSigIndex(dir: String): graft.sources.SliceLadder =
+  private[graft] def mediaSigIndex(dir: String): graft.sources.SliceLadder =
     new graft.sources.SliceLadder(mediaSigBase(dir), "image signature",
       idCol = "media_id",
       readSchema = "media_id BIGINT, phash BIGINT",
@@ -242,18 +242,10 @@ object MultimodalQueries {
   def trainMediaSigIndex(spark: SparkSession, dir: String,
       bound: Long = Long.MaxValue): Unit =
     mediaSigIndex(dir).train(spark, bound)
-  def compactMediaSigSlices(spark: SparkSession, dir: String,
-      upTo: Long): Unit = mediaSigIndex(dir).compactSlices(spark, upTo)
-  def compactMediaSigTiered(spark: SparkSession, dir: String,
-      minRun: Int = 4): Int = mediaSigIndex(dir).compactTiered(spark, minRun)
-  /** Explicit trash GC for a quiesced image signature index — see
-    * [[graft.sources.SliceLadder.gc]]. */
-  def gcMediaSigIndex(spark: SparkSession, dir: String,
-      graceMs: Long = 0L): Unit = mediaSigIndex(dir).gc(spark, graceMs)
   private[graft] def sigsFromIndex(spark: SparkSession,
       dir: String): DataFrame = mediaSigIndex(dir).read(spark)
 
-  private def audioSigIndex(dir: String): graft.sources.SliceLadder =
+  private[graft] def audioSigIndex(dir: String): graft.sources.SliceLadder =
     new graft.sources.SliceLadder(audioSigBase(dir), "audio fingerprint",
       idCol = "media_id",
       readSchema = "media_id BIGINT, phash BIGINT",
@@ -280,14 +272,6 @@ object MultimodalQueries {
   def trainAudioSigIndex(spark: SparkSession, dir: String,
       bound: Long = Long.MaxValue): Unit =
     audioSigIndex(dir).train(spark, bound)
-  def compactAudioSigSlices(spark: SparkSession, dir: String,
-      upTo: Long): Unit = audioSigIndex(dir).compactSlices(spark, upTo)
-  def compactAudioSigTiered(spark: SparkSession, dir: String,
-      minRun: Int = 4): Int = audioSigIndex(dir).compactTiered(spark, minRun)
-  /** Explicit trash GC for a quiesced audio fingerprint index — see
-    * [[graft.sources.SliceLadder.gc]]. */
-  def gcAudioSigIndex(spark: SparkSession, dir: String,
-      graceMs: Long = 0L): Unit = audioSigIndex(dir).gc(spark, graceMs)
   private[graft] def audioSigsFromIndex(spark: SparkSession,
       dir: String): DataFrame = audioSigIndex(dir).read(spark)
 
@@ -1238,7 +1222,7 @@ object MultimodalQueries {
 
   private[graft] def videoSigBase(dir: String): String = sigBase(dir, "vsc63")
 
-  private def videoSigIndex(dir: String): graft.sources.SliceLadder =
+  private[graft] def videoSigIndex(dir: String): graft.sources.SliceLadder =
     new graft.sources.SliceLadder(videoSigBase(dir), "video signature",
       idCol = "media_id",
       readSchema = "media_id BIGINT, phash BIGINT",
@@ -1265,14 +1249,8 @@ object MultimodalQueries {
   def trainVideoSigIndex(spark: SparkSession, dir: String,
       bound: Long = Long.MaxValue): Unit =
     videoSigIndex(dir).train(spark, bound)
-  def compactVideoSigSlices(spark: SparkSession, dir: String,
-      upTo: Long): Unit = videoSigIndex(dir).compactSlices(spark, upTo)
   def compactVideoSigTiered(spark: SparkSession, dir: String,
       minRun: Int = 4): Int = videoSigIndex(dir).compactTiered(spark, minRun)
-  /** Explicit trash GC for a quiesced video scene-signature index — see
-    * [[graft.sources.SliceLadder.gc]]. */
-  def gcVideoSigIndex(spark: SparkSession, dir: String,
-      graceMs: Long = 0L): Unit = videoSigIndex(dir).gc(spark, graceMs)
   private[graft] def videoSigsFromIndex(spark: SparkSession,
       dir: String): DataFrame = videoSigIndex(dir).read(spark)
 

@@ -648,7 +648,7 @@ object SimilarityQueries {
     * [[graft.sources.SliceLadder]]'s — this instance supplies only the
     * assignment stage (score against the frozen model, argmax) and the
     * on-disk inverted-list layout (`partitionBy(c_id)`). */
-  private def ivfAssignIndex(dir: String): graft.sources.SliceLadder =
+  private[graft] def ivfAssignIndex(dir: String): graft.sources.SliceLadder =
     new graft.sources.SliceLadder(ivfAssignBase(dir), "IVF inverted file",
       idCol = "vec_id",
       readSchema = "vec_id BIGINT, v ARRAY<DOUBLE>, c_id BIGINT",
@@ -726,23 +726,12 @@ object SimilarityQueries {
       upTo: Long): Unit =
     ivfAssignIndex(dir).compactSlices(spark, upTo)
 
-  /** Size-tiered maintenance merge for the inverted file — see
-    * [[graft.sources.SliceLadder.compactTiered]]; merged slices re-land
-    * through the same `partitionBy(c_id)` writer. */
-  def compactIvfTiered(spark: SparkSession, dir: String,
-      minRun: Int = 4): Int = ivfAssignIndex(dir).compactTiered(spark, minRun)
-
-  /** Explicit trash GC for a quiesced inverted file — see
-    * [[graft.sources.SliceLadder.gc]]. */
-  def gcIvfIndex(spark: SparkSession, dir: String,
-      graceMs: Long = 0L): Unit = ivfAssignIndex(dir).gc(spark, graceMs)
-
   /** Ensure the inverted file covers vec_id < `bound` (default: full
     * corpus). Idempotent; partial coverage is ADVANCED by appending;
     * coverage beyond `bound` forces a from-scratch rebuild at `bound`
     * (a test-ladder reset, never a production step). Requires the
-    * centroid model ([[trainIvfCentroids]] first — Verify/Bench setup
-    * orders the calls). */
+    * centroid model ([[trainIvfCentroids]] first — the
+    * [[graft.sources.Artifacts]] table orders the calls). */
   def trainIvfAssignments(spark: SparkSession, dir: String,
       bound: Long = Long.MaxValue): Unit = {
     if (!ivfModelTrained(spark, dir))

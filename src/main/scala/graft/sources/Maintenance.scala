@@ -5,13 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** The ONE maintenance entry point a lake operator schedules: runs the
   * bounded-write-amplification tiered merge and then the time-graced
   * trash GC over EVERY append-maintained artifact the engine owns for
-  * a lake dir — the text shingle index, the IVF inverted file and the
-  * image/audio/video signature indexes. Before this existed, each
-  * artifact's compaction and gc were five separate per-modality calls
-  * (and four of the five gc entries were not even reachable from
-  * outside their query module) — a quiesced media artifact kept its
-  * trashed slice data forever unless someone remembered its specific
-  * hook.
+  * a lake dir — the ladder rows of [[Artifacts]]: the text shingle
+  * index, the IVF inverted file and the image/audio/video signature
+  * indexes. Each leg is named by its row's first word ("shingle",
+  * "ivf", "image", "audio", "video").
   *
   * Safety is inherited wholesale from [[SliceLadder]]: merges run
   * UNLOCKED (live streaming ingest keeps committing mid-merge), commits
@@ -41,70 +38,15 @@ import org.apache.spark.sql.SparkSession
 object Maintenance {
   def runAll(spark: SparkSession, dir: String, graceMs: Long,
       minRun: Int = 4): Int = {
-    var merges = 0
-    val errors = scala.collection.mutable.ArrayBuffer.empty[Throwable]
-    def leg(what: String)(f: => Int): Unit =
-      try merges += f
-      catch { case scala.util.control.NonFatal(e) =>
-        errors += new RuntimeException(s"maintenance leg '$what' failed",
-          e) }
-    import graft.queries.{DedupQueries, MultimodalQueries,
-      SimilarityQueries}
-    leg("shingle") {
-      val n =
-        if (DedupQueries.shingleIndexBound(spark, dir).isDefined)
-          DedupQueries.compactShingleTiered(spark, dir, minRun)
-        else 0
-      DedupQueries.gcShingleIndex(spark, dir, graceMs); n
-    }
-    leg("ivf") {
-      val n =
-        if (SimilarityQueries.ivfAssignBound(spark, dir).isDefined)
-          SimilarityQueries.compactIvfTiered(spark, dir, minRun)
-        else 0
-      SimilarityQueries.gcIvfIndex(spark, dir, graceMs); n
-    }
-    leg("image") {
-      val n =
-        if (MultimodalQueries.mediaSigBound(spark, dir).isDefined)
-          MultimodalQueries.compactMediaSigTiered(spark, dir, minRun)
-        else 0
-      MultimodalQueries.gcMediaSigIndex(spark, dir, graceMs); n
-    }
-    leg("audio") {
-      val n =
-        if (MultimodalQueries.audioSigBound(spark, dir).isDefined)
-          MultimodalQueries.compactAudioSigTiered(spark, dir, minRun)
-        else 0
-      MultimodalQueries.gcAudioSigIndex(spark, dir, graceMs); n
-    }
-    leg("video") {
-      val n =
-        if (MultimodalQueries.videoSigBound(spark, dir).isDefined)
-          MultimodalQueries.compactVideoSigTiered(spark, dir, minRun)
-        else 0
-      MultimodalQueries.gcVideoSigIndex(spark, dir, graceMs); n
-    }
-    if (errors.nonEmpty) {
-      // the per-leg root causes belong in the MESSAGE: schedulers and
-      // test reports routinely print only getMessage, and a composite
-      // that says "1 leg failed" without the why costs a log dive per
-      // incident (suppressed exceptions still carry the full traces)
-      val causes = errors.map { e =>
-        // bounded walk: a deserialized/hand-built cause CYCLE must not
-        // hang the error-reporting path itself (20 levels is far past
-        // any real chain; on a cycle the 20th element stands in for the
-        // root, which still names the failure)
-        val root = Iterator.iterate(e: Throwable)(_.getCause)
-          .take(20).takeWhile(_ != null).toSeq.last
-        s"${e.getMessage}: ${root.getClass.getSimpleName}: ${root.getMessage}"
-      }.mkString("; ")
-      val ex = new RuntimeException(
-        s"${errors.size} maintenance leg(s) failed " +
-          s"(${merges} merges completed on the others): $causes")
-      errors.foreach(ex.addSuppressed)
-      throw ex
-    }
-    merges
+    val legs = Artifacts.all.flatMap(a =>
+      a.ladder.map(mk => (a.name.takeWhile(_ != '_'), mk)))
+    Artifacts.runIsolated("maintenance leg", legs)(_._1) {
+      case (_, mk) =>
+        val ladder = mk(dir)
+        val n =
+          if (ladder.bound(spark).isDefined) ladder.compactTiered(spark, minRun)
+          else 0
+        ladder.gc(spark, graceMs); n
+    }(merges => s"${merges.sum} merges completed on the others").sum
   }
 }
