@@ -180,24 +180,26 @@ class PlanSpec extends SparkSpec {
       s"q_trigram_logprob must not sort-merge the triple stream:\n$plan")
   }
 
-  test("ewma family: blocked scan, never a sequential fold or cartesian") {
-    // the EWMA scan must keep its two-level shape: bounded windows plus a
-    // per-key fold over COLLECTED block summaries (n/B elements). Losing
-    // collect_list would mean the fold silently became something
-    // row-count-proportional; a cartesian would mean the carry rejoin
-    // lost its keys. The fact table must shuffle by key ONCE, shared by
-    // the prefix and summary branches (ReusedExchange) — the carry rejoin
-    // itself rides that partitioning (broadcast under AQE at test scale;
-    // at 100 TB a co-partitioned join with no new fact-side exchange)
-    Seq("q_ewma", "q_macd").foreach { q =>
-      val plan = executedPlan(q)
-      assert(!plan.contains("CartesianProduct"),
-        s"$q must never cross rows:\n$plan")
-      assert(plan.contains("collect_list"),
-        s"$q lost the block-summary fold:\n$plan")
-      assert(plan.contains("ReusedExchange"),
-        s"$q branches must share the key shuffle:\n$plan")
-    }
+  test("recurrence family: one key exchange, no collect_list, no join, no cartesian") {
+    // every exact recurrence is a per-key ordered fold over ONE
+    // (user_id)-partitioned sort: MACD's signal line, Holt's coupled
+    // trend and RSI's lag all ride it. A second user_id exchange (even a
+    // reused one), a collected per-key array or a rejoin would mean the
+    // series was split and stitched back together. Count inside the
+    // final AQE plan only (its toString appends the initial plan).
+    Seq("q_ewma", "q_macd", "q_rsi_wilder", "q_ewma_adjusted",
+      "q_ewm_volatility", "q_holt").foreach { q =>
+        val plan = executedPlan(q).split("== Initial Plan ==").head
+        val keyExchanges = "Exchange hashpartitioning\\(user_id".r
+          .findAllIn(plan).length
+        assert(keyExchanges == 1,
+          s"$q shuffled by key $keyExchanges times:\n$plan")
+        assert(!plan.contains("collect_list"),
+          s"$q collects per-key arrays:\n$plan")
+        assert(!plan.contains("Join"), s"$q rejoins the series:\n$plan")
+        assert(!plan.contains("CartesianProduct"),
+          s"$q must never cross rows:\n$plan")
+      }
   }
 
   test("heaps curve: first-occurrence census is aggregated, never a running distinct") {
@@ -602,31 +604,6 @@ class PlanSpec extends SparkSpec {
     val finalP = plan.split("== Initial Plan ==").head
     assert(!finalP.contains("SortMergeJoin"),
       s"the c_id co-occupancy join degraded to sort-merge:\n$finalP")
-  }
-
-  test("holt 2-state scan: block folds over collected arrays, no cartesian, one fact shuffle") {
-    val plan = executedPlan("q_holt")
-    assert(!plan.contains("CartesianProduct"),
-      s"q_holt must never cross rows:\n$plan")
-    // the block fold input must be COLLECTED arrays per (key, blk) — the
-    // prefix-state computation is one aggregate() per block, never a
-    // row-count-proportional window of matrix ops
-    assert(plan.contains("collect_list"),
-      s"q_holt lost the block-array fold:\n$plan")
-    // the (key, blk) groupBy must ride the row_number sort's key hash
-    // partitioning (subset clustering — NO exchange between window and
-    // aggregate), and the summary branch must REUSE the one fact
-    // exchange rather than re-shuffling the corpus. Count inside the
-    // final plan only (AdaptiveSparkPlan's toString appends the initial
-    // plan, which still shows the pre-reuse shape).
-    val finalPlan = plan.split("== Initial Plan ==").head
-    val factExchanges = "Exchange hashpartitioning\\(user_id".r
-      .findAllIn(finalPlan).length
-    val reused = "ReusedExchange".r.findAllIn(finalPlan).length
-    assert(factExchanges - reused <= 1,
-      s"q_holt fact shuffled ${factExchanges - reused} times:\n$finalPlan")
-    assert(reused >= 1,
-      s"q_holt summary branch stopped reusing the fact exchange:\n$finalPlan")
   }
 
   test("unigram tokenizer: fold runs per distinct word; model rides a 1-row broadcast") {
