@@ -60,6 +60,13 @@ object CpuBench {
     }
   }
 
+  /** Computes every output column: the `noop` sink writes nothing but
+    * evaluates each row. A `count()` would let the optimizer prune the
+    * columns nobody reads — window expressions included — and price a
+    * plan that never ran. */
+  private def run(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
   def main(args: Array[String]): Unit = {
     val (numeric, names) =
       args.partition(a => a.nonEmpty && a.forall(_.isDigit))
@@ -69,7 +76,7 @@ object CpuBench {
     graft.sources.Artifacts.ensureAll(spark, sfDir)
     val qs = names.toSeq.map(Registry.byName)
     // warmup: codegen + page cache + shared artifacts, not measured
-    qs.foreach(_.fn(spark, sfDir).count())
+    qs.foreach(q => run(q.fn(spark, sfDir)))
     val acc = new Acc
     spark.sparkContext.addSparkListener(acc)
     case class Reading(wall: Double, cpu: Double, run: Double,
@@ -80,7 +87,7 @@ object CpuBench {
       drain(acc)
       val base = acc.snapshot
       val t0 = System.nanoTime()
-      q.fn(spark, sfDir).count()
+      run(q.fn(spark, sfDir))
       val wall = (System.nanoTime() - t0) / 1e9
       drain(acc)
       val now = acc.snapshot

@@ -1,65 +1,56 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.expressions.{Aggregator, Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
-/** Distributed EXACT first-order linear recurrence — the family pandas
-  * users assume "doesn't distribute" (`Series.ewm(adjust=False).mean()`,
-  * Wilder smoothing, MACD lines):
+/** Exact first-order linear recurrences per key — the family pandas users
+  * assume "doesn't distribute" (`Series.ewm(adjust=False).mean()`, Wilder
+  * smoothing, MACD lines, RiskMetrics volatility, Holt's trend):
   *
-  *   y_1 = x_1;   y_n = α·x_n + (1−α)·y_{n−1}
+  *   y_1 = x_1;   y_n = f·x_n + (1−α)·y_{n−1}
   *
-  * A naive translation is a per-key sequential fold (driver loop or a
-  * single-threaded UDAF over the whole series). This operator instead runs
-  * the classic two-level parallel scan (Blelloch, "Prefix Sums and Their
-  * Applications", CMU-CS-90-190; the same decomposition cuDF/RAPIDS uses
-  * for `ewm`), expressed entirely in Spark windows + one higher-order
-  * fold — no UDF, no driver iteration, no unbounded state:
+  * Every series is one per-key ordered fold: a private [[Aggregator]]
+  * whose `reduce` is the step function below, evaluated over
+  * `Window.partitionBy(key).orderBy(order)` with a ROWS frame from the
+  * first row to the current one. Spark's growing-frame window feeds each
+  * row to `reduce` once and reads the running state after it, so the fold
+  * is O(n) per key; `merge` is never called on a growing frame. The step
+  * functions are also what [[graft.streaming.StreamingPipeline]]'s
+  * `ewmaState`/`holtState` run, so batch and stream compute one
+  * definition.
   *
-  *  1. rows get a per-key row_number and are cut into fixed blocks of
-  *     [[BlockSize]]; within a block the homogeneous solution is a
-  *     pow-weighted prefix sum computed by ONE (key, block) window:
-  *       P_p = Σ_{q≤p} b_q·a^{p−q}   (computed as a^p · Σ b_q·a^{−q},
-  *     so the largest exponent is bounded by the BLOCK length, never the
-  *     series length — a^{−n} over a raw row_number overflows a double at
-  *     n ≈ 3100 for α = 0.2, which is exactly the 100×-scale-up trap this
-  *     blocking avoids);
-  *  2. each block reduces to a 2-number summary (T = P at block end —
-  *     computed as a^len·Σ b_q·a^{−q}, an order-independent plain
-  *     aggregate with map-side partials, no second window — and len);
-  *     the per-key carry INTO block k is the tiny fold
-  *       c_1 = 0;  c_{k+1} = c_k·a^{len_k} + T_k
-  *     over the sorted block summaries — n/B elements per key, evaluated
-  *     by `aggregate(...)` inside codegen;
-  *  3. carries rejoin on (key, block) and each row closes locally:
-  *       y_p = c·a^p + P_p.
+  * Cost at any scale: one hash shuffle of the input by key plus one sort
+  * by (key, order) — the same exchange and sort a `row_number` over the
+  * key would run. Every column of one call, and every call that reuses
+  * the same key and order downstream (MACD's signal line), shares them;
+  * nothing is joined, collected or driver-side.
   *
-  * Cost at any scale: two hash shuffles of the fact table (the (key) and
-  * (key, block) window sorts — AQE-sized), one block-summary aggregation
-  * (|rows|/B), one (key, block) join. Nothing driver-side, nothing
-  * proportional to series length in memory except the per-key summary
-  * array (n/B elements — 4 GB of rows per key fold to ~1 MB at B = 32;
-  * production would raise B to 1024).
+  * Hot keys: the window buffers one key's rows at a time (spilling past
+  * `spark.sql.windowExec.buffer.spill.threshold`), the same bound as that
+  * key's `row_number` window. A single key's series runs in one task.
   *
-  * Numerics: a^{−q} spans at most a^{−B}; the in-block sum is dominated by
-  * its largest term, which also dominates the result after the a^p
-  * rescale, so relative error stays O(√B·ulp) — verified against the
-  * row-by-row fold in FunctionsSpec to 1e-9 and against the DuckDB
-  * recursive-CTE oracle at 6 decimals.
-  *
-  * Several decay constants vectorize over the SAME two shuffles (the
-  * windows are shared; only the weighted columns multiply), which is how
-  * [[ewma]] computes MACD's three lines in one scan.
+  * Numerics: each step is the literal expression `f * x + (1.0 - α) * y'`
+  * in series order — the same operations in the same order as the DuckDB
+  * recursive-CTE oracle and the streaming operators, so batch and stream
+  * agree bit for bit and no exponent ever grows with series length.
   */
 object LinearRecurrence {
 
-  /** Block length for the two-level scan. 32 keeps multiple blocks per key
-    * alive even at the test scale factors (≤ 99 events per user), so the
-    * cross-block carry path is exercised by every gate run; at production
-    * scale a larger block (1024) amortizes the summary fold further. Safe
-    * for any α ∈ (0, 0.93]: the worst in-block weight is (1−α)^{−32}. */
-  val BlockSize = 32
+  /** One EWMA step: y = f·x + (1−α)·y'. f = α is `ewm(adjust=False)`;
+    * f = 1 is the unnormalized `adjust=True` sum. Seed: y₁ = x₁. */
+  def ewmaStep(alpha: Double, f: Double, prev: Double, x: Double): Double =
+    f * x + (1.0 - alpha) * prev
+
+  /** One Holt step from (l', t'): l = α·x + (1−α)(l' + t'),
+    * t = β(l − l') + (1−β)t'. Seed: (l₁, t₁) = (x₁, 0). */
+  def holtStep(alpha: Double, beta: Double, l: Double, t: Double,
+               x: Double): (Double, Double) = {
+    val ln = alpha * x + (1.0 - alpha) * (l + t)
+    (ln, beta * (ln - l) + (1.0 - beta) * t)
+  }
 
   /** Append one exact EWMA column per (outName → α) to `df`.
     *
@@ -67,10 +58,7 @@ object LinearRecurrence {
     * @param key    series key column name
     * @param order  total order within a key (must be unique per row)
     * @param x      value column expression the recursion reads; must be
-    *               non-null on every row (window sums SKIP nulls, so a
-    *               null observation would silently drop out of the scan
-    *               where literal recursion poisons its tail — coalesce
-    *               or filter upstream)
+    *               non-null on every row (filter or coalesce upstream)
     * @param alphas output column name → smoothing factor α = 2/(span+1)
     */
   def ewma(df: DataFrame, key: String, order: Seq[Column], x: Column,
@@ -80,216 +68,88 @@ object LinearRecurrence {
 
   /** General form: each output column smooths ITS OWN input expression
     * (e.g. Wilder's RSI smooths gains and losses side by side). All
-    * series still share the two windows and the one summary fold. */
+    * columns are folds over the one window. */
   def ewmaCols(df: DataFrame, key: String, order: Seq[Column],
                specs: Seq[(String, Column, Double)]): DataFrame =
-    scan(df, key, order, specs.map { case (name, x, al) =>
-      // adjust=False: y₁ = x₁, then each step feeds α·xₙ
-      (name, x, al, al)
-    })
+    fold(df, key, order, specs.map { case (name, x, al) => (name, x, al, al) })
 
   /** pandas `ewm(adjust=True)` building block: the UNNORMALIZED weighted
-    * sum Sₙ = xₙ + (1−α)·Sₙ₋₁ (step factor 1 — the same recurrence
-    * engine, a different forcing term). adjust=True's debiased mean is
+    * sum Sₙ = xₙ + (1−α)·Sₙ₋₁ (step factor 1 — the same recurrence,
+    * a different forcing term). adjust=True's debiased mean is
     * S(x)/S(1) and its biased variance S(x²)/S(1) − (S(x)/S(1))² — all
-    * plain ratios of these sums, each an extra column on the ONE scan. */
+    * plain ratios of these sums, each an extra column on the one window. */
   def ewSumCols(df: DataFrame, key: String, order: Seq[Column],
                 specs: Seq[(String, Column, Double)]): DataFrame =
-    scan(df, key, order, specs.map { case (name, x, al) =>
-      (name, x, al, 1.0)
-    })
+    fold(df, key, order, specs.map { case (name, x, al) => (name, x, al, 1.0) })
 
   /** Holt's linear-trend double exponential smoothing — the COUPLED
-    * 2-state extension of the scalar scan:
-    *
-    *   l₁ = x₁, t₁ = 0;
-    *   lₙ = α·xₙ + (1−α)(lₙ₋₁ + tₙ₋₁)
-    *   tₙ = β(lₙ − lₙ₋₁) + (1−β)tₙ₋₁
-    *
-    * i.e. sₙ = A·sₙ₋₁ + b·xₙ with the CONSTANT matrix
-    * A = [[1−α, 1−α], [−αβ, 1−αβ]], b = [α, αβ]. A's eigenvalues are
-    * complex for typical (α, β) — damped oscillation — so the scalar
-    * scan's pow-weighted window trick doesn't diagonalize over the
-    * reals. Instead each block folds its ≤[[BlockSize]] rows row-locally
-    * (ONE `aggregate` per block producing the whole prefix-state array),
-    * blocks reduce to their end state, the per-key carry fold applies
-    * A^len per block (all 32 matrix powers precomputed on the driver and
-    * baked as a literal array — constant-folded once), and every row
-    * closes locally as A^pos·carry + prefix. Linearity makes the
-    * decomposition exact; block 0's special y₁ = [x₁, 0] seed rides the
-    * zero carry.
-    *
-    * Cost at any scale: the fact shuffles ONCE (the row_number sort; the
-    * (key, blk) groupBy reuses the key hash partitioning), summaries are
-    * blocks-count-sized, the carry join is co-partitioned on key. Unlike
-    * the pow-window scalar scan there is no a^{−B} magnitude constraint:
-    * folds never form negative powers, so any α, β ∈ (0, 1) is safe at
-    * any block size.
-    *
-    * Determinism: every fold walks its array in sorted (_pos / _blk)
-    * order — bit-reproducible under any partitioning (PropertySpec). */
+    * 2-state recurrence [[holtStep]], folded per key as one struct-valued
+    * (level, trend) state over the same window as [[ewma]]. */
   def holt(df: DataFrame, key: String, order: Seq[Column], x: Column,
            alpha: Double, beta: Double,
            outLevel: String, outTrend: String): DataFrame = {
     require(alpha > 0.0 && alpha < 1.0 && beta > 0.0 && beta < 1.0,
       "Holt smoothing needs alpha, beta in (0, 1)")
-    type M = (Double, Double, Double, Double)
-    val a: M = (1 - alpha, 1 - alpha, -alpha * beta, 1 - alpha * beta)
-    def mul(m: M, n: M): M = (
-      m._1 * n._1 + m._2 * n._3, m._1 * n._2 + m._2 * n._4,
-      m._3 * n._1 + m._4 * n._3, m._3 * n._2 + m._4 * n._4)
-    // A^1..A^BlockSize as a literal array (1-indexed by element_at);
-    // Double.toString + "D" round-trips each coefficient bit-exactly
-    // through the SQL parser
-    def d(v: Double): String = java.lang.Double.toString(v) + "D"
-    val pows = Iterator.iterate(a)(mul(a, _)).take(BlockSize).toSeq
-    val amLit = pows.map { m =>
-      s"named_struct('m11', ${d(m._1)}, 'm12', ${d(m._2)}, " +
-        s"'m21', ${d(m._3)}, 'm22', ${d(m._4)})"
-    }.mkString("array(", ", ", ")")
-    val (bl, bt) = (d(alpha), d(alpha * beta))
-    val (a11, a12, a21, a22) = (d(a._1), d(a._2), d(a._3), d(a._4))
-    val wKey = Window.partitionBy(key).orderBy(order: _*)
-    val rows = df
-      .withColumn("_pay", struct(df.columns.map(col): _*))
-      .withColumn("_x", x.cast("double"))
-      .withColumn("_rn", row_number().over(wKey))
-      .withColumn("_blk", expr(s"CAST((_rn - 1) div $BlockSize AS INT)"))
-      .withColumn("_pos", expr(s"CAST(_rn - _blk * $BlockSize AS INT)"))
-    val payType = rows.schema("_pay").dataType.sql
-    // one fold per block: the full prefix-state array from the zero state
-    // (block 0 seeds [x₁, 0] at pos 1 — the only special step)
-    val prevL = "IF(size(acc) = 0, 0.0D, element_at(acc, -1).l)"
-    val prevT = "IF(size(acc) = 0, 0.0D, element_at(acc, -1).t)"
-    val blocks = rows.groupBy(col(key), col("_blk"))
-      .agg(expr("array_sort(collect_list(struct(_pos, _x, _pay)))").as("_arr"))
-      .withColumn("_pref", expr(
-        s"""aggregate(_arr,
-              CAST(array() AS array<struct<p: int, pay: $payType,
-                                           l: double, t: double>>),
-              (acc, e) -> concat(acc, array(named_struct(
-                'p', e._pos, 'pay', e._pay,
-                'l', IF(_blk = 0 AND e._pos = 1, e._x,
-                        $a11 * ($prevL) + $a12 * ($prevT) + $bl * e._x),
-                't', IF(_blk = 0 AND e._pos = 1, 0.0D,
-                        $a21 * ($prevL) + $a22 * ($prevT) + $bt * e._x)))))"""))
-      .select(col(key), col("_blk"), col("_pref"),
-        expr("size(_pref)").as("_len"),
-        expr("element_at(_pref, -1).l").as("_sl"),
-        expr("element_at(_pref, -1).t").as("_st"))
-    // per-key carry fold over sorted block summaries: carry INTO block
-    // k+1 = A^len_k · carry_k + T_k (matrix power via the literal table)
-    val carries = blocks
-      .groupBy(col(key))
-      .agg(sort_array(collect_list(
-        expr("named_struct('_blk', _blk, '_len', _len, '_sl', _sl, '_st', _st)")))
-        .as("_sums"))
-      .select(col(key), explode(expr(
-        s"""aggregate(_sums,
-              named_struct('cl', 0.0D, 'ct', 0.0D,
-                'out', CAST(array() AS array<struct<b: int, cl: double,
-                                                    ct: double>>)),
-              (acc, s) -> named_struct(
-                'cl', element_at($amLit, s._len).m11 * acc.cl
-                    + element_at($amLit, s._len).m12 * acc.ct + s._sl,
-                'ct', element_at($amLit, s._len).m21 * acc.cl
-                    + element_at($amLit, s._len).m22 * acc.ct + s._st,
-                'out', concat(acc.out, array(named_struct(
-                  'b', s._blk, 'cl', acc.cl, 'ct', acc.ct)))),
-              acc -> acc.out)""")).as("_c"))
-      .select(col(key), col("_c.b").as("_blk"),
-        col("_c.cl").as("_cl"), col("_c.ct").as("_ct"))
-    // close every row locally: s_pos = A^pos · carry + prefix_pos; the
-    // inline generator re-emits the original row columns from the payload
-    blocks.join(carries, Seq(key, "_blk"))
-      .selectExpr(s"""inline(transform(_pref, r -> named_struct(
-          'pay', r.pay,
-          '$outLevel', IF(_blk = 0, r.l,
-            element_at($amLit, r.p).m11 * _cl
-              + element_at($amLit, r.p).m12 * _ct + r.l),
-          '$outTrend', IF(_blk = 0, r.t,
-            element_at($amLit, r.p).m21 * _cl
-              + element_at($amLit, r.p).m22 * _ct + r.t))))""")
-      .selectExpr("pay.*", outLevel, outTrend)
+    val lt = udaf(new HoltFold(alpha, beta), Encoders.scalaDouble)(
+      x.cast("double")).over(series(key, order))
+    df.withColumn("_lt", lt)
+      .withColumns(ListMap(outLevel -> col("_lt._1"), outTrend -> col("_lt._2")))
+      .drop("_lt")
   }
 
-  /** yₙ = step·xₙ + (1−α)·yₙ₋₁ with y₁ = x₁ — the shared scan. */
-  private def scan(df: DataFrame, key: String, order: Seq[Column],
+  /** The per-key growing frame every recurrence folds over. */
+  private def series(key: String, order: Seq[Column]): WindowSpec =
+    Window.partitionBy(key).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  /** Each (name, x, α, f) becomes yₙ = f·xₙ + (1−α)·yₙ₋₁, y₁ = x₁ — all
+    * in one projection, hence one `Window` node. */
+  private def fold(df: DataFrame, key: String, order: Seq[Column],
                    specs: Seq[(String, Column, Double, Double)]): DataFrame = {
-    val alphas = specs.map { case (name, _, al, _) => (name, al) }
-    require(alphas.nonEmpty && alphas.forall { case (_, al) =>
-      al > 0.0 && al <= 0.93 }, "α must lie in (0, 0.93] for BlockSize=32")
-    val wKey = Window.partitionBy(key).orderBy(order: _*)
-    val rows = specs.foldLeft(df
-        .withColumn("_rn", row_number().over(wKey))
-        .withColumn("_blk", expr(s"CAST((_rn - 1) div $BlockSize AS INT)"))
-        .withColumn("_pos", expr(s"CAST(_rn - _blk * $BlockSize AS INT)"))) {
-      case (d, (name, xc, _, _)) => d.withColumn(s"_x_$name", xc)
-    }
-    // in-block prefixes, one weighted column pair per α over ONE window
-    val wBlk = Window.partitionBy(col(key), col("_blk")).orderBy(col("_pos"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val prefixed = specs.foldLeft(rows) { case (d, (name, _, al, step)) =>
-      val a = 1.0 - al
-      val x = col(s"_x_$name")
-      // b_1 = x_1 (both ewm modes seed with the first observation)
-      val b = when(col("_rn") === 1, x).otherwise(x * step)
-      d.withColumn(s"_p_$name",
-        pow(lit(a), col("_pos")) * sum(b * pow(lit(a), -col("_pos"))).over(wBlk))
-    }
-    // 2-number block summaries per α: T = P at the block's last row
-    // = a^len · Σ_q b_q·a^{−q}. The inner sum is ORDER-INDEPENDENT, so the
-    // summaries aggregate directly over `rows` (map-side-combinable sum +
-    // count) instead of reading the windowed prefixes — the summary branch
-    // of the DAG then re-derives only the row_number pass, not the block
-    // window, when Spark recomputes the shared lineage (exchange reuse
-    // covers the scan shuffle; everything downstream is in-stage compute)
-    val sumAggs = specs.map { case (name, _, al, step) =>
-      val x = col(s"_x_$name")
-      val b = when(col("_rn") === 1, x).otherwise(x * step)
-      sum(b * pow(lit(1.0 - al), -col("_pos"))).as(s"_su_$name")
-    } :+ count(lit(1)).as("_len")
-    val summaries = rows.groupBy(col(key), col("_blk"))
-      .agg(sumAggs.head, sumAggs.tail: _*)
-      .select(Seq(col(key), col("_blk"), col("_len")) ++
-        alphas.map { case (name, al) =>
-          (pow(lit(1.0 - al), col("_len")) * col(s"_su_$name"))
-            .as(s"_t_$name") }: _*)
-    // per-key fold over the sorted summaries → carry INTO each block
-    val tFields = alphas.map { case (name, _) => s"_t_$name" }
-    val structCols = (Seq("_blk") ++ tFields :+ "_len")
-      .map(f => s"'$f', $f").mkString(", ")
-    val zeroCarries = alphas.map { case (name, _) =>
-      s"'c_$name', CAST(0.0 AS DOUBLE)" }.mkString(", ")
-    val stepCarries = alphas.map { case (name, al) =>
-      val a = 1.0 - al
-      s"'c_$name', acc.c_$name * power(${a}D, s._len) + s._t_$name"
-    }.mkString(", ")
-    val outType = "array<struct<" +
-      ("_blk: int" +: alphas.map { case (n, _) => s"c_$n: double" })
-        .mkString(", ") + ">>"
-    val outElem = ("'_blk', s._blk" +: alphas.map { case (n, _) =>
-      s"'c_$n', acc.c_$n" }).mkString(", ")
-    val carries = summaries.groupBy(col(key))
-      .agg(sort_array(collect_list(expr(s"named_struct($structCols)")))
-        .as("_blocks"))
-      .select(col(key), explode(expr(
-        s"""aggregate(_blocks,
-              named_struct($zeroCarries,
-                           'out', CAST(array() AS $outType)),
-              (acc, s) -> named_struct($stepCarries,
-                'out', concat(acc.out, array(named_struct($outElem)))),
-              acc -> acc.out)""")).as("_c"))
-      .select(col(key) +: col("_c._blk").as("_blk") +:
-        alphas.map { case (n, _) => col(s"_c.c_$n").as(s"_c_$n") }: _*)
-    // close each row locally: y_p = c·a^p + P_p
-    val closed = alphas.foldLeft(prefixed.join(carries, Seq(key, "_blk"))) {
-      case (d, (name, al)) =>
-        d.withColumn(name,
-          col(s"_c_$name") * pow(lit(1.0 - al), col("_pos")) + col(s"_p_$name"))
-    }
-    closed.drop(
-      (Seq("_rn", "_blk", "_pos") ++
-        alphas.flatMap { case (n, _) => Seq(s"_x_$n", s"_p_$n", s"_c_$n") }): _*)
+    require(specs.nonEmpty && specs.forall { case (_, _, al, _) =>
+      al > 0.0 && al <= 1.0 }, "α must lie in (0, 1]")
+    val w = series(key, order)
+    df.withColumns(ListMap(specs.map { case (name, x, al, f) =>
+      name -> udaf(new EwmaFold(al, f), Encoders.scalaDouble)(
+        x.cast("double")).over(w)
+    }: _*))
   }
+
+  /** Running EWMA state: (seen a row, y). */
+  private final class EwmaFold(alpha: Double, f: Double)
+      extends Aggregator[Double, (Boolean, Double), Double] {
+    def zero: (Boolean, Double) = (false, 0.0)
+    def reduce(b: (Boolean, Double), x: Double): (Boolean, Double) =
+      (true, if (b._1) ewmaStep(alpha, f, b._2, x) else x)
+    def merge(b1: (Boolean, Double), b2: (Boolean, Double)): (Boolean, Double) =
+      unordered()
+    def finish(b: (Boolean, Double)): Double = b._2
+    def bufferEncoder: Encoder[(Boolean, Double)] =
+      Encoders.tuple(Encoders.scalaBoolean, Encoders.scalaDouble)
+    def outputEncoder: Encoder[Double] = Encoders.scalaDouble
+  }
+
+  /** Running Holt state: (seen a row, level, trend). */
+  private final class HoltFold(alpha: Double, beta: Double)
+      extends Aggregator[Double, (Boolean, Double, Double), (Double, Double)] {
+    def zero: (Boolean, Double, Double) = (false, 0.0, 0.0)
+    def reduce(b: (Boolean, Double, Double), x: Double): (Boolean, Double, Double) =
+      if (!b._1) (true, x, 0.0)
+      else {
+        val (l, t) = holtStep(alpha, beta, b._2, b._3, x)
+        (true, l, t)
+      }
+    def merge(b1: (Boolean, Double, Double),
+              b2: (Boolean, Double, Double)): (Boolean, Double, Double) =
+      unordered()
+    def finish(b: (Boolean, Double, Double)): (Double, Double) = (b._2, b._3)
+    def bufferEncoder: Encoder[(Boolean, Double, Double)] =
+      Encoders.tuple(Encoders.scalaBoolean, Encoders.scalaDouble,
+        Encoders.scalaDouble)
+    def outputEncoder: Encoder[(Double, Double)] =
+      Encoders.tuple(Encoders.scalaDouble, Encoders.scalaDouble)
+  }
+
+  private def unordered(): Nothing = throw new UnsupportedOperationException(
+    "a recurrence folds rows in order; partial states cannot be merged")
 }

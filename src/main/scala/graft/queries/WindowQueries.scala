@@ -417,13 +417,10 @@ object WindowQueries {
   }
 
   /** Exact EWMA, pandas `ewm(span=9, adjust=False).mean()` — the
-    * recurrence y₁ = x₁, yₙ = α·xₙ + (1−α)·yₙ₋₁ distributed via the
-    * blocked parallel scan in [[graft.operators.LinearRecurrence]] (two
-    * bounded window passes + a per-key fold over n/32 block summaries —
-    * never a per-row sequential fold, never an unbounded pow exponent).
-    * The oracle computes the same recursion row-by-row in a recursive
-    * CTE, so the gate cross-checks the scan algebra against literal
-    * recursion. */
+    * recurrence y₁ = x₁, yₙ = α·xₙ + (1−α)·yₙ₋₁ as the per-key ordered
+    * fold in [[graft.operators.LinearRecurrence]] (one user_id shuffle,
+    * one sort, one window). The oracle's recursive CTE runs the same
+    * step expression row by row. */
   private def ewma(spark: SparkSession, dir: String): DataFrame =
     graft.operators.LinearRecurrence.ewma(
         Tables(spark, dir, "events"), "user_id",
@@ -434,10 +431,10 @@ object WindowQueries {
       .orderBy("event_id")
 
   /** MACD(12, 26, 9) — three coupled EWMA recursions (fast, slow, and the
-    * signal line over their difference). The fast and slow lines ride ONE
-    * blocked scan (the decay constants vectorize over shared windows);
-    * the signal line is a second scan over the derived macd series. Zero
-    * driver iteration; 100 TB cost = 2× the single-EWMA plan. */
+    * signal line over their difference). The fast and slow lines are two
+    * folds in ONE window node; the signal line is a second window on the
+    * same key and order, so it adds no exchange and no sort. 100 TB cost
+    * ≈ the single-EWMA plan. */
   private def macd(spark: SparkSession, dir: String): DataFrame = {
     val lines = graft.operators.LinearRecurrence.ewma(
         Tables(spark, dir, "events"), "user_id",
@@ -457,14 +454,14 @@ object WindowQueries {
   /** Wilder-smoothed RSI — the [[rsi]] indicator's classic recursive
     * form: avg_gain/avg_loss are EWMAs (α = 1/14) of the up/down moves,
     * not box-window sums, so one bad tick decays geometrically instead
-    * of falling off a 14-row cliff. Both series ride ONE blocked scan
-    * ([[graft.operators.LinearRecurrence.ewmaCols]] — per-column inputs,
-    * shared windows and summary fold). Seeding follows ewm(adjust=False)
-    * (first move seeds the average); Wilder's original 14-SMA seed
-    * differs only during warmup, the steady state is identical.
-    * RSI = 100·g/(g+l); an all-zero-loss prefix gives exactly g+l = 0 in
-    * BOTH the scan algebra and literal recursion (no cancellation — all
-    * terms non-negative), so the NULL branch agrees across engines. */
+    * of falling off a 14-row cliff. Both series are folds in ONE window
+    * ([[graft.operators.LinearRecurrence.ewmaCols]] — per-column inputs),
+    * which rides the lag window's user_id shuffle and sort. Seeding
+    * follows ewm(adjust=False) (first move seeds the average); Wilder's
+    * original 14-SMA seed differs only during warmup, the steady state is
+    * identical. RSI = 100·g/(g+l); an all-zero-loss prefix gives exactly
+    * g+l = 0 (no cancellation — all terms non-negative), so the NULL
+    * branch agrees across engines. */
   private def rsiWilder(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables(spark, dir, "events")
       .withColumn("_delta", col("value") - lag("value", 1).over(byUser))
@@ -487,8 +484,8 @@ object WindowQueries {
     * debiased finite-window form Σ(1−α)ⁱ·xₙ₋ᵢ / Σ(1−α)ⁱ. Both the
     * weighted sum and the weight total are first-order linear
     * recurrences with step factor 1 ([[graft.operators.LinearRecurrence
-    * .ewSumCols]]), so the pair rides ONE blocked scan and the mean is a
-    * per-row ratio. Complements [[ewma]] (adjust=False): together they
+    * .ewSumCols]]), so the pair is two folds in ONE window and the mean
+    * is a per-row ratio. Complements [[ewma]] (adjust=False): together they
     * cover both pandas ewm modes exactly. */
   private def ewmaAdjusted(spark: SparkSession, dir: String): DataFrame =
     graft.operators.LinearRecurrence.ewSumCols(
@@ -502,7 +499,7 @@ object WindowQueries {
   /** RiskMetrics EW volatility (J.P. Morgan TD4e, λ = 0.94): the
     * exponentially-weighted mean and BIASED variance as ratios of three
     * linear recurrences — S(1), S(x), S(x²), all with decay λ and step
-    * factor 1 — in ONE blocked scan: var = S(x²)/S(1) − mean²,
+    * factor 1 — as three folds in ONE window: var = S(x²)/S(1) − mean²,
     * vol = √max(var, 0). The one-pass streaming-friendly volatility
     * estimator, exact at any series length (no window truncation). At
     * n = 1 the variance is exactly 0 in both engines (identical products
@@ -527,12 +524,10 @@ object WindowQueries {
   /** Holt double exponential smoothing (α = 0.2, β = 0.1): level, trend
     * and the one-step forecast l + t per key — the trend-aware cousin of
     * [[ewma]], running on [[graft.operators.LinearRecurrence.holt]]'s
-    * blocked 2-state matrix scan (the recurrence matrix has COMPLEX
-    * eigenvalues, so this is the family the scalar pow-window scan
-    * can't diagonalize; see the operator's scaladoc). The oracle is the
-    * literal recursive CTE, so the gate cross-checks the blocked matrix
-    * algebra against row-by-row recursion. Forecast sums the ROUNDED
-    * level and trend (identical addends on both engines). */
+    * per-key fold of one (level, trend) state over the same single
+    * window plan. The oracle's recursive CTE runs the same step
+    * expressions row by row. Forecast sums the ROUNDED level and trend
+    * (identical addends on both engines). */
   private def holt(spark: SparkSession, dir: String): DataFrame =
     graft.operators.LinearRecurrence.holt(
         Tables(spark, dir, "events")

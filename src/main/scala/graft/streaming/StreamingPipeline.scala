@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, Trigger}
+
+import graft.operators.LinearRecurrence
 
 /** One keyed, timestamped, tie-broken record — the unit of the engine's
   * latest-per-key streaming state. */
@@ -242,96 +244,85 @@ object StreamingPipeline {
       }
   }
 
-  /** Streaming EWMA — the online form of the batch blocked scan in
-    * [[graft.operators.LinearRecurrence]]: the recurrence
-    * y₁ = x₁, yₙ = α·xₙ + (1−α)·yₙ₋₁ carried as ONE (ts, seq, y) triple
-    * of keyed state per active series — O(active keys), never O(history),
-    * expired by the event-time timeout once the watermark passes the
-    * key's newest observation by the lateness horizon. Eviction FORGETS
-    * the recursion: a key's next observation reseeds y = x, so choose
-    * `lateness` longer than any real key's silence (the price of bounded
-    * state on an endless stream). Within a micro-batch rows are processed
-    * in (ts, seq) order; an observation at or before the state's frontier
-    * is late and is DROPPED rather than folded out of order (the batch
-    * scan would have placed it earlier in the recursion — folding it now
-    * would silently compute a different series; the twin spec proves the
-    * on-time path equals the batch scan). Emits every accepted row with
-    * its smoothed value. */
+  /** Streaming EWMA — the online form of the batch fold in
+    * [[graft.operators.LinearRecurrence]], running the same
+    * `ewmaStep`: y₁ = x₁, yₙ = α·xₙ + (1−α)·yₙ₋₁ carried as ONE
+    * (ts, seq, y) triple of keyed state per active series — O(active
+    * keys), never O(history), expired by the event-time timeout once the
+    * watermark passes the key's newest observation by the lateness
+    * horizon. Eviction FORGETS the recursion: a key's next observation
+    * reseeds y = x, so choose `lateness` longer than any real key's
+    * silence (the price of bounded state on an endless stream). Rows
+    * are folded in (ts, seq) order and late rows are dropped (see
+    * [[orderedFold]]); StreamingSpec proves the on-time path equals the
+    * batch fold exactly. Emits every accepted row with its smoothed
+    * value. */
   def ewmaState(src: Dataset[KeyedValue], alpha: Double, lateness: String):
       Dataset[KeyedValue] = {
     import src.sparkSession.implicits._
+    orderedFold[(java.sql.Timestamp, Long, Double), KeyedValue](src, lateness)(
+      s => (s._1, s._2),
+      (cur, r) => (r.ts, r.seq, cur.fold(r.value)(c =>
+        LinearRecurrence.ewmaStep(alpha, alpha, c._3, r.value))),
+      (k, s) => KeyedValue(k, s._1, s._2, s._3))
+  }
+
+  /** [[ewmaState]]'s coupled-state sibling: Holt level+trend smoothing
+    * served online through the batch operator's `holtStep`. State per
+    * key is ONE (ts, seq, level, trend) tuple with event-time timeout
+    * eviction. StreamingSpec proves cross-micro-batch equality with the
+    * batch fold ([[graft.operators.LinearRecurrence.holt]]). */
+  def holtState(src: Dataset[KeyedValue], alpha: Double, beta: Double,
+      lateness: String): Dataset[HoltPoint] = {
+    import src.sparkSession.implicits._
+    orderedFold[(java.sql.Timestamp, Long, Double, Double), HoltPoint](
+        src, lateness)(
+      s => (s._1, s._2),
+      (cur, r) => {
+        val (l, t) = cur.fold((r.value, 0.0))(c =>
+          LinearRecurrence.holtStep(alpha, beta, c._3, c._4, r.value))
+        (r.ts, r.seq, l, t)
+      },
+      (k, s) => HoltPoint(k, s._1, s._2, s._3, s._4))
+  }
+
+  /** Keyed in-order fold with one state record `S` per key. Within a
+    * micro-batch a key's rows are folded in (ts, seq) order; a row at or
+    * behind the state's (ts, seq) `frontier` is late and is DROPPED rather
+    * than folded out of order (the batch fold would have placed it
+    * earlier in the series — folding it now would silently compute a
+    * different one). `step` maps the previous state (None for a new or
+    * evicted key) and the row to the new state, which `emit` turns into
+    * the row's output. The key expires by event-time timeout once the
+    * watermark passes its frontier by `lateness`. */
+  private def orderedFold[S: Encoder, O: Encoder](src: Dataset[KeyedValue],
+      lateness: String)(frontier: S => (java.sql.Timestamp, Long),
+      step: (Option[S], KeyedValue) => S, emit: (String, S) => O): Dataset[O] = {
+    import src.sparkSession.implicits._
     src.withWatermark("ts", lateness)
       .groupByKey(_.key)
-      .flatMapGroupsWithState[
-        (java.sql.Timestamp, Long, Double), KeyedValue](
+      .flatMapGroupsWithState[S, O](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (_, rows, state) =>
+        case (key, rows, state) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
-            val sorted = rows.toSeq.sortBy(r => (r.ts.getTime, r.seq))
-            val out = Seq.newBuilder[KeyedValue]
+            val out = Seq.newBuilder[O]
             var cur = state.getOption
-            sorted.foreach { r =>
-              val accept = cur.forall { case (ts, seq, _) =>
+            rows.toSeq.sortBy(r => (r.ts.getTime, r.seq)).foreach { r =>
+              val accept = cur.forall { c =>
+                val (ts, seq) = frontier(c)
                 r.ts.getTime > ts.getTime ||
-                  (r.ts.getTime == ts.getTime && r.seq > seq) }
+                  (r.ts.getTime == ts.getTime && r.seq > seq)
+              }
               if (accept) {
-                val y = cur match {
-                  case None => r.value
-                  case Some((_, _, prev)) => alpha * r.value + (1.0 - alpha) * prev
-                }
-                cur = Some((r.ts, r.seq, y))
-                out += KeyedValue(r.key, r.ts, r.seq, y)
+                val next = step(cur, r)
+                cur = Some(next)
+                out += emit(key, next)
               } // else: late row — the recursion's frontier already passed it
             }
             cur.foreach { c =>
               state.update(c)
-              state.setTimeoutTimestamp(c._1.getTime, lateness)
-            }
-            out.result().iterator
-          }
-      }
-  }
-
-  /** [[ewmaState]]'s coupled-state sibling: Holt level+trend smoothing
-    * served online. State per key is ONE (ts, seq, level, trend) tuple
-    * with event-time timeout eviction; late rows (at or behind the
-    * frontier) are dropped, never folded out of order — the recursion a
-    * re-ordered fold would silently corrupt. StreamingSpec proves
-    * cross-micro-batch equality with the batch blocked matrix scan
-    * ([[graft.operators.LinearRecurrence.holt]]). */
-  def holtState(src: Dataset[KeyedValue], alpha: Double, beta: Double,
-      lateness: String): Dataset[HoltPoint] = {
-    import src.sparkSession.implicits._
-    src.withWatermark("ts", lateness)
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[
-        (java.sql.Timestamp, Long, Double, Double), HoltPoint](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (_, rows, state) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = rows.toSeq.sortBy(r => (r.ts.getTime, r.seq))
-            val out = Seq.newBuilder[HoltPoint]
-            var cur = state.getOption
-            sorted.foreach { r =>
-              val accept = cur.forall { case (ts, seq, _, _) =>
-                r.ts.getTime > ts.getTime ||
-                  (r.ts.getTime == ts.getTime && r.seq > seq) }
-              if (accept) {
-                val (l, t) = cur match {
-                  case None => (r.value, 0.0)
-                  case Some((_, _, pl, pt)) =>
-                    val ln = alpha * r.value + (1.0 - alpha) * (pl + pt)
-                    (ln, beta * (ln - pl) + (1.0 - beta) * pt)
-                }
-                cur = Some((r.ts, r.seq, l, t))
-                out += HoltPoint(r.key, r.ts, r.seq, l, t)
-              }
-            }
-            cur.foreach { c =>
-              state.update(c)
-              state.setTimeoutTimestamp(c._1.getTime, lateness)
+              state.setTimeoutTimestamp(frontier(c)._1.getTime, lateness)
             }
             out.result().iterator
           }

@@ -3,36 +3,37 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.LinearRecurrence
 
-/** The blocked parallel scan must equal literal row-by-row recursion —
-  * on every block-boundary shape (1 row, B−1, B, B+1, several blocks)
-  * and for several decay constants sharing one pass. The oracle here is
-  * an in-test sequential fold, independent of both Spark and DuckDB. */
+/** The per-key ordered fold must equal literal row-by-row recursion
+  * exactly (==, not a tolerance: it runs the same step expressions in
+  * the same order) — on short keys, on one 5 000-row key, and for several
+  * decay constants sharing one pass. The oracle here is an in-test
+  * sequential fold, independent of both Spark and DuckDB. */
 class LinearRecurrenceSpec extends SparkSpec {
-
-  private val B = LinearRecurrence.BlockSize
 
   /** Literal recursion y₁ = x₁, yₙ = α·xₙ + (1−α)·yₙ₋₁. */
   private def foldEwma(xs: Seq[Double], alpha: Double): Seq[Double] =
     xs.tail.scanLeft(xs.head)((y, x) => alpha * x + (1.0 - alpha) * y)
 
-  /** Keys exercising every boundary: single row, one short block, exactly
-    * one block, one-past, several full blocks, and a long tail. */
+  /** Keys of 1, 2, 7 and 200 rows plus one 5 000-row key. At α = 0.9 a
+    * closed form through (1−α)^{−n} overflows a double by row 309, so
+    * only a step-by-step fold passes; α = 0.02 decays slowly, so each
+    * row's state carries across hundreds of rows. */
   private def series(seed: Int): Map[String, Seq[Double]] = {
     val rnd = new scala.util.Random(seed)
-    Seq(1, B - 1, B, B + 1, 3 * B, 3 * B + 7, 200)
+    Seq(1, 2, 7, 200, 5000)
       .zipWithIndex
       .map { case (n, i) =>
         s"k$i" -> Seq.fill(n)(math.rint(rnd.nextDouble() * 50000) / 100.0)
       }.toMap
   }
 
-  test("blocked scan equals literal recursion on every block-boundary shape") {
+  test("ordered fold equals literal recursion, including a 5 000-row key") {
     import spark.implicits._
     val data = series(42)
     val df = data.toSeq.flatMap { case (k, xs) =>
       xs.zipWithIndex.map { case (x, i) => (k, i.toLong, x) }
     }.toDF("k", "o", "x")
-    Seq(0.2, 2.0 / 13.0, 0.9).foreach { al =>
+    Seq(0.9, 0.02).foreach { al =>
       val got = LinearRecurrence
         .ewma(df, "k", Seq(col("o")), col("x"), Seq("y" -> al))
         .select("k", "o", "y").collect()
@@ -41,8 +42,7 @@ class LinearRecurrenceSpec extends SparkSpec {
         val want = foldEwma(xs, al)
         want.zipWithIndex.foreach { case (w, i) =>
           val g = got((k, i.toLong))
-          assert(math.abs(g - w) <= 1e-9 * math.max(1.0, math.abs(w)),
-            s"α=$al key=$k row=$i: scan=$g fold=$w")
+          assert(g == w, s"α=$al key=$k row=$i: operator=$g fold=$w")
         }
       }
     }
@@ -89,13 +89,13 @@ class LinearRecurrenceSpec extends SparkSpec {
     data.foreach { case (k, xs) =>
       // literal adjust=True: Sₙ = xₙ + (1−α)·Sₙ₋₁; mean = S(x)/S(1)
       val sx = xs.tail.scanLeft(xs.head)((s, x) => x + (1.0 - al) * s)
-      val sw = xs.indices.map(i =>
-        (0 to i).map(j => math.pow(1.0 - al, j)).sum)
+      val sw = xs.tail.scanLeft(1.0)((s, _) => 1.0 + (1.0 - al) * s)
       xs.indices.foreach { i =>
         val (gx, gw) = got((k, i.toLong))
-        assert(math.abs(gx - sx(i)) <= 1e-9 * math.max(1.0, math.abs(sx(i))))
-        assert(math.abs(gw - sw(i)) <= 1e-9 * sw(i))
-        // the ratio reproduces the closed-form weighted mean
+        assert(gx == sx(i), s"key=$k row=$i: S(x) operator=$gx fold=${sx(i)}")
+        assert(gw == sw(i), s"key=$k row=$i: S(1) operator=$gw fold=${sw(i)}")
+        // the ratio reproduces the closed-form weighted mean (a different
+        // association, hence the tolerance)
         val want = xs.take(i + 1).reverse.zipWithIndex
           .map { case (x, j) => x * math.pow(1.0 - al, j) }.sum / sw(i)
         assert(math.abs(gx / gw - want) <= 1e-9 * math.max(1.0, math.abs(want)))
@@ -103,7 +103,7 @@ class LinearRecurrenceSpec extends SparkSpec {
     }
   }
 
-  test("holt: blocked 2-state matrix scan equals literal coupled recursion") {
+  test("holt: ordered 2-state fold equals literal coupled recursion") {
     import spark.implicits._
     val data = series(13)
     val df = data.toSeq.flatMap { case (k, xs) =>
@@ -124,23 +124,27 @@ class LinearRecurrenceSpec extends SparkSpec {
       data.foreach { case (k, xs) =>
         foldHolt(xs, al, be).zipWithIndex.foreach { case ((wl, wt), i) =>
           val (gl, gt) = got((k, i.toLong))
-          assert(math.abs(gl - wl) <= 1e-9 * math.max(1.0, math.abs(wl)),
-            s"α=$al β=$be key=$k row=$i level: scan=$gl fold=$wl")
-          assert(math.abs(gt - wt) <= 1e-9 * math.max(1.0, math.abs(wt)),
-            s"α=$al β=$be key=$k row=$i trend: scan=$gt fold=$wt")
+          assert(gl == wl, s"α=$al β=$be key=$k row=$i level: operator=$gl fold=$wl")
+          assert(gt == wt, s"α=$al β=$be key=$k row=$i trend: operator=$gt fold=$wt")
         }
       }
     }
   }
 
-  test("α outside (0, 0.93] is rejected (block-bounded exponent contract)") {
+  test("α outside (0, 1] or NaN is rejected; 0.95 and 1.0 fold") {
     import spark.implicits._
-    val df = Seq(("k", 0L, 1.0)).toDF("k", "o", "x")
-    Seq(0.0, -0.1, 0.95, 1.0).foreach { al =>
+    val df = Seq(("k", 0L, 1.0), ("k", 1L, 3.0)).toDF("k", "o", "x")
+    Seq(0.0, -0.1, 1.0001, Double.NaN).foreach { al =>
       intercept[IllegalArgumentException] {
         LinearRecurrence.ewma(df, "k", Seq(col("o")), col("x"),
           Seq("y" -> al))
       }
+    }
+    Seq(0.95, 1.0).foreach { al =>
+      val got = LinearRecurrence.ewma(df, "k", Seq(col("o")), col("x"),
+          Seq("y" -> al))
+        .orderBy("o").select("y").as[Double].collect().toSeq
+      assert(got == foldEwma(Seq(1.0, 3.0), al), s"α=$al")
     }
   }
 }

@@ -180,26 +180,32 @@ class PlanSpec extends SparkSpec {
       s"q_trigram_logprob must not sort-merge the triple stream:\n$plan")
   }
 
-  test("recurrence family: one key exchange, no collect_list, no join, no cartesian") {
-    // every exact recurrence is a per-key ordered fold over ONE
-    // (user_id)-partitioned sort: MACD's signal line, Holt's coupled
-    // trend and RSI's lag all ride it. A second user_id exchange (even a
-    // reused one), a collected per-key array or a rejoin would mean the
-    // series was split and stitched back together. Count inside the
-    // final AQE plan only (its toString appends the initial plan).
+  /** Every exact recurrence is a per-key ordered fold over ONE
+    * (user_id)-partitioned sort: MACD's signal line, Holt's coupled
+    * trend and RSI's lag all ride it. A second user_id exchange (even a
+    * reused one), a collected per-key array or a rejoin would mean the
+    * series was split and stitched back together. Count inside the
+    * final AQE plan only (its toString appends the initial plan). */
+  private def assertOneKeyFold(q: String): Unit = {
+    val plan = executedPlan(q).split("== Initial Plan ==").head
+    val keyExchanges = "Exchange hashpartitioning\\(user_id".r
+      .findAllIn(plan).length
+    assert(keyExchanges == 1,
+      s"$q shuffled by key $keyExchanges times:\n$plan")
+    assert(!plan.contains("collect_list"),
+      s"$q collects per-key arrays:\n$plan")
+    assert(!plan.contains("Join"), s"$q rejoins the series:\n$plan")
+    assert(!plan.contains("CartesianProduct"),
+      s"$q must never cross rows:\n$plan")
+  }
+
+  test("ewma family: one key exchange, no collect_list, no join, no cartesian") {
     Seq("q_ewma", "q_macd", "q_rsi_wilder", "q_ewma_adjusted",
-      "q_ewm_volatility", "q_holt").foreach { q =>
-        val plan = executedPlan(q).split("== Initial Plan ==").head
-        val keyExchanges = "Exchange hashpartitioning\\(user_id".r
-          .findAllIn(plan).length
-        assert(keyExchanges == 1,
-          s"$q shuffled by key $keyExchanges times:\n$plan")
-        assert(!plan.contains("collect_list"),
-          s"$q collects per-key arrays:\n$plan")
-        assert(!plan.contains("Join"), s"$q rejoins the series:\n$plan")
-        assert(!plan.contains("CartesianProduct"),
-          s"$q must never cross rows:\n$plan")
-      }
+      "q_ewm_volatility").foreach(assertOneKeyFold)
+  }
+
+  test("holt 2-state fold: one key exchange, no collect_list, no join, no cartesian") {
+    assertOneKeyFold("q_holt")
   }
 
   test("heaps curve: first-occurrence census is aggregated, never a running distinct") {

@@ -249,7 +249,7 @@ class StreamingSpec extends SparkSpec {
     assert(rows == Seq((1L, 10.0), (2L, 12.0), (4L, 0.2 * 30.0 + 0.8 * 12.0)))
   }
 
-  test("streaming twin: ewmaState over chunked real events equals the batch blocked scan") {
+  test("streaming twin: ewmaState over chunked real events equals the batch fold") {
     import spark.implicits._
     import graft.streaming.KeyedValue
     implicit val sqlCtx = spark.sqlContext
@@ -287,14 +287,12 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.size == n) // nothing dropped on the on-time path
     batch.foreach { case (k, seq, y) =>
       val s = streamed((k, seq))
-      // literal online recursion vs blocked scan: same algebra, float
-      // association differs — equal far below the oracle's 6 decimals
-      assert(math.abs(s - y) <= 1e-9 * math.max(1.0, math.abs(y)),
-        s"key=$k seq=$seq streamed=$s batch=$y")
+      // one step function, one row order: bit-identical
+      assert(s == y, s"key=$k seq=$seq streamed=$s batch=$y")
     }
   }
 
-  test("streaming twin: holtState over chunked real events equals the batch matrix scan") {
+  test("streaming twin: holtState over chunked real events equals the batch fold") {
     import spark.implicits._
     import graft.streaming.KeyedValue
     implicit val sqlCtx = spark.sqlContext
@@ -326,12 +324,9 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.size == n)
     batch.foreach { case (k, seq, l, t) =>
       val (sl, st) = streamed((k, seq))
-      // online coupled recursion vs blocked matrix scan: same algebra,
-      // float association differs — equal far below the oracle's 6 dp
-      assert(math.abs(sl - l) <= 1e-9 * math.max(1.0, math.abs(l)),
-        s"key=$k seq=$seq level streamed=$sl batch=$l")
-      assert(math.abs(st - t) <= 1e-9 * math.max(1.0, math.abs(t)),
-        s"key=$k seq=$seq trend streamed=$st batch=$t")
+      // one step function, one row order: bit-identical
+      assert(sl == l, s"key=$k seq=$seq level streamed=$sl batch=$l")
+      assert(st == t, s"key=$k seq=$seq trend streamed=$st batch=$t")
     }
   }
 
