@@ -4,8 +4,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.util.concurrent.atomic.LongAdder
 import graft.queries.Registry
 
-/** Resource-cost probe: total TASK CPU / run time / scan + shuffle bytes
-  * per query, via a SparkListener over task metrics. Local wall-clock is
+/** Resource-cost probe: total TASK CPU / run time / shuffle bytes per
+  * query, via a SparkListener over task metrics. Local wall-clock is
   * the WRONG instrument for pass-collapsing decisions — duplicated plan
   * branches overlap for free on idle local cores, so a 3× corpus-CPU
   * plan can win wall-clock at sf0.1 and lose a busy 100 TB cluster
@@ -14,8 +14,6 @@ import graft.queries.Registry
   *  - cpu_sec   Σ executorCpuTime over every task of the query's jobs —
   *              the cores×seconds the work costs regardless of overlap;
   *  - run_sec   Σ executorRunTime (adds I/O wait, fetch wait, GC);
-  *  - input_mb  Σ bytes read from storage (pass-counting evidence: a
-  *              plan that scans the corpus 3× reads ~3× the bytes);
   *  - shuffle_mb Σ shuffle WRITE bytes (exchange volume);
   *  - wall      the per-query median wall time (the per-query A/B loop
   *              Bench is too coarse for).
@@ -30,7 +28,6 @@ object CpuBench {
   private class Acc extends SparkListener {
     val cpu = new LongAdder // ns
     val run = new LongAdder // ms
-    val input = new LongAdder // bytes
     val shuffle = new LongAdder // bytes
     val tasks = new LongAdder
     override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
@@ -38,13 +35,12 @@ object CpuBench {
       if (m != null) {
         cpu.add(m.executorCpuTime)
         run.add(m.executorRunTime)
-        input.add(m.inputMetrics.bytesRead)
         shuffle.add(m.shuffleWriteMetrics.bytesWritten)
         tasks.increment()
       }
     }
-    def snapshot: (Long, Long, Long, Long, Long) =
-      (cpu.sum, run.sum, input.sum, shuffle.sum, tasks.sum)
+    def snapshot: (Long, Long, Long, Long) =
+      (cpu.sum, run.sum, shuffle.sum, tasks.sum)
   }
 
   /** The listener bus is async: wait until the task counter is stable
@@ -80,7 +76,7 @@ object CpuBench {
     val acc = new Acc
     spark.sparkContext.addSparkListener(acc)
     case class Reading(wall: Double, cpu: Double, run: Double,
-      inputMb: Double, shuffleMb: Double, tasks: Long)
+      shuffleMb: Double, tasks: Long)
     val rows = Array.fill(qs.size)(
       scala.collection.mutable.ArrayBuffer.empty[Reading])
     for (_ <- 0 until reps; (q, i) <- qs.zipWithIndex) {
@@ -93,8 +89,7 @@ object CpuBench {
       val now = acc.snapshot
       rows(i) += Reading(wall,
         (now._1 - base._1) / 1e9, (now._2 - base._2) / 1e3,
-        (now._3 - base._3) / 1e6, (now._4 - base._4) / 1e6,
-        now._5 - base._5)
+        (now._3 - base._3) / 1e6, now._4 - base._4)
     }
     def med(v: scala.collection.Seq[Double]): Double = {
       val s = v.sorted; s(s.size / 2)
@@ -103,7 +98,6 @@ object CpuBench {
       val r = rows(i)
       println(f"CPUBENCH ${q.name}%-28s wall=${med(r.map(_.wall))}%7.3f " +
         f"cpu=${med(r.map(_.cpu))}%7.3f run=${med(r.map(_.run))}%7.3f " +
-        f"input_mb=${med(r.map(_.inputMb))}%8.2f " +
         f"shuffle_mb=${med(r.map(_.shuffleMb))}%8.2f " +
         f"tasks=${r.map(_.tasks).sorted.apply(r.size / 2)}")
     }

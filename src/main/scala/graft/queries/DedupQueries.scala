@@ -229,8 +229,8 @@ object DedupQueries {
         rawShingleHashesOf(
           batch.withColumn("src_num", col("src_num").cast("int")),
           keep = Seq("src_num")),
-      prepareSlice = (spark, raw, lo, hi) =>
-        mergeCensusAndCap(spark, raw, lo, hi, dir),
+      prepareSlice = Some((spark, raw, lo, hi) =>
+        mergeCensusAndCap(spark, raw, lo, hi, dir)),
       onMutate = () => clearShingleCache(),
       sentinel = ShingleSentinel,
       // many documents share one boundary src_num, so in-batch id

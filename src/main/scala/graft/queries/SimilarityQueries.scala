@@ -646,19 +646,17 @@ object SimilarityQueries {
   /** The inverted file's slice-ladder mechanics (paths, atomic marker
     * commit, replay guard, writer locking) are
     * [[graft.sources.SliceLadder]]'s — this instance supplies only the
-    * assignment stage (score against the frozen model, argmax) and the
-    * on-disk inverted-list layout (`partitionBy(c_id)`). */
+    * assignment stage ([[listAssigned]]) and the on-disk inverted-list
+    * layout (`partitionBy(c_id)`). */
   private[graft] def ivfAssignIndex(dir: String): graft.sources.SliceLadder =
     new graft.sources.SliceLadder(ivfAssignBase(dir), "IVF inverted file",
       idCol = "vec_id",
       readSchema = "vec_id BIGINT, v ARRAY<DOUBLE>, c_id BIGINT",
       deriveRange = (spark, lo, hi) =>
-        centroidAssigned(scoredAgainstModel(spark, dir,
-          embeddingsOf(spark, dir)
-            .filter(col("vec_id") >= lo && col("vec_id") < hi))),
+        listAssigned(spark, dir, embeddingsOf(spark, dir)
+          .filter(col("vec_id") >= lo && col("vec_id") < hi)),
       deriveBatch = (spark, batch) =>
-        centroidAssigned(scoredAgainstModel(spark, dir,
-          batch.select(col("vec_id"), col("v")))),
+        listAssigned(spark, dir, batch.select(col("vec_id"), col("v"))),
       writeSliceFiles = (df, path) =>
         df.write.mode("overwrite").partitionBy("c_id").parquet(path))
 
@@ -683,16 +681,21 @@ object SimilarityQueries {
   def dropIvfAssignments(spark: SparkSession, dir: String): Unit =
     ivfAssignIndex(dir).drop(spark)
 
-  /** Score an arbitrary (vec_id, v) frame against the frozen centroid
-    * model — one broadcast join, K vectors. */
-  private def scoredAgainstModel(spark: SparkSession, dir: String,
+  /** Assign an arbitrary (vec_id, v) frame to its IVF lists against the
+    * frozen centroid model: each row picks its list inside the row
+    * ([[ivfNearest]] — the argmax and tie-break of [[centroidAssigned]])
+    * from the model as ONE broadcast row. The model's K rows are folded
+    * into that row within a single partition, so the assignment has no
+    * exchange: a streaming append's only shuffle is its ladder guard. */
+  private def listAssigned(spark: SparkSession, dir: String,
       e: DataFrame): DataFrame = {
-    val centroids = broadcast(spark.read.schema("c_id BIGINT, cv ARRAY<DOUBLE>")
+    val model = spark.read.schema("c_id BIGINT, cv ARRAY<DOUBLE>")
       .parquet(ivfModelPath(dir))
-      .select(col("c_id"), col("cv")))
-    e.join(centroids)
-      .select(col("vec_id"), col("v"), col("c_id"),
-        ivfSim(col("v"), col("cv")).as("c_sim"))
+      .coalesce(1)
+      .agg(collect_list(struct(col("c_id").as("id"), col("cv"))).as("cs"))
+    e.crossJoin(broadcast(model))
+      .select(col("vec_id"), col("v"),
+        ivfNearest(col("v"), col("cs")).as("c_id"))
   }
 
   /** STREAMING-ingest append: assign one arriving micro-batch of

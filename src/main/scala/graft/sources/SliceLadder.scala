@@ -1,7 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The ONE slice-ladder implementation behind every append-maintained
@@ -18,10 +19,11 @@ import org.apache.spark.sql.functions._
   * scene hashing) runs exactly once per item, AT INGEST, into an
   * append-only artifact under `base/`:
   *
-  *  - `slices/s<lo>-<hi>/` — the derived rows of ids ∈ [lo, hi). Written
-  *    whole, never rewritten by later appends. A per-modality
-  *    [[prepareSlice]] hook may write side artifacts keyed to `hi` (the
-  *    shingle df census) before the rows land.
+  *  - `slices/s<lo>-<hi>/` — the derived rows of ids ∈ [lo, hi).
+  *    Renamed into place whole from a scratch dir (below), never
+  *    rewritten by later appends. A per-modality [[prepareSlice]] hook
+  *    may write side artifacts keyed to `hi` (the shingle df census)
+  *    before the rows land.
   *  - `ladder/e<lo>-<hi>` — one EMPTY MARKER FILE per committed slice,
   *    created LAST via a same-directory temp + rename: the artifact's
   *    commit. The ladder is reconstructed by listing the directory, so
@@ -46,16 +48,19 @@ import org.apache.spark.sql.functions._
   *    forever under the mutation-driven sweep — [[gc]] is the explicit
   *    maintenance entry that collects it on a TIME-based grace window
   *    instead.
-  *  - `slices/.merge-<lo>-<hi>-<nonce>/` — a compaction merge's
-  *    job-scoped SCRATCH output. Merges never write at a committable
-  *    slice path: the merged rows land here (invisible to every
-  *    reader — slice reads go through [[slicePath]] only) and are
-  *    RENAMED into place inside the locked commit. So two compactors —
-  *    even cross-process, where the in-JVM locks cannot see each
-  *    other — can never interleave `mode("overwrite")` writes on one
-  *    committed directory, and a merge that crashes mid-write leaves
-  *    garbage only at a scratch path no reader or commit will ever
-  *    resolve ([[gc]] ages it out).
+  *  - `slices/.merge-<label>-<nonce>/` — a slice write's job-scoped
+  *    SCRATCH output. No write — append or compaction merge — ever
+  *    lands at a committable slice path: the rows land here (invisible
+  *    to every reader — slice reads go through [[slicePath]] only) and
+  *    the ONE commit step, [[commitScratch]], RENAMES the dir into
+  *    place and then creates the slice's marker, under the writer
+  *    lock. So two compactors — even cross-process, where the in-JVM
+  *    locks cannot see each other — can never interleave
+  *    `mode("overwrite")` writes on one committed directory; a write
+  *    that crashes leaves garbage only at a scratch path no reader or
+  *    commit will ever resolve ([[gc]] ages it out); and a streaming
+  *    append can write its rows BEFORE it knows its upper bound (the
+  *    batch's guard metrics, observed on that same write, give it).
   *  - `ladder/x<epoch>` — the REBUILD EPOCH marker. [[drop]] (and so
   *    every from-scratch [[train]]) bumps it; an in-flight merge
   *    snapshots the epoch when its run is picked and refuses to commit
@@ -97,7 +102,9 @@ import org.apache.spark.sql.functions._
   * DUPLICATE rows for a fresh id fails fast — silently committing
   * coverage over unprocessed ids would drop them forever as "replays",
   * and silently committing an at-least-once producer's in-batch
-  * duplicates would break the exactly-once artifact property.
+  * duplicates would break the exactly-once artifact property. The
+  * guard costs no pass of its own: its figures are `observe()` metrics
+  * on the slice write itself (see [[appendBatch]]).
   */
 final class SliceLadder(
     val base: String,
@@ -111,9 +118,12 @@ final class SliceLadder(
     /** derive slice rows from an arriving micro-batch's own payload */
     deriveBatch: (SparkSession, DataFrame) => DataFrame,
     /** post-derivation hook run before the slice lands: may write side
-      * artifacts keyed to `hi` (census merge) and reshape the rows */
-    prepareSlice: (SparkSession, DataFrame, Long, Long) => DataFrame =
-      (_, df, _, _) => df,
+      * artifacts keyed to `hi` (census merge) and reshape the rows.
+      * None (the default) = the rows land as derived. A hook needs `hi`
+      * before the rows are written, so [[appendBatch]] settles the
+      * batch's range with a separate pass first for such a ladder. */
+    prepareSlice: Option[(SparkSession, DataFrame, Long, Long) => DataFrame] =
+      None,
     /** how slice rows land on disk (e.g. partitionBy the list id) */
     writeSliceFiles: (DataFrame, String) => Unit =
       (df, path) => df.write.mode("overwrite").parquet(path),
@@ -145,12 +155,13 @@ final class SliceLadder(
   private val TrashRe = "^t(\\d+|full)-(\\d+|full)$".r
   private val EpochRe = "^x(\\d+)$".r
   private val MergeTmpRe = "^\\.merge-.*$".r
-  /** Job-scoped merge scratch dir: the nonce makes racing compactors —
+  /** Job-scoped scratch dir for one slice write (`label` names the
+    * range, as far as it is known): the nonce makes racing writers —
     * including CROSS-PROCESS ones the in-JVM locks cannot serialize —
     * write disjoint scratch paths, so the last writer standing renames
     * into place and the loser's files never touch committed state. */
-  private def mergeTmpPath(lo: Long, hi: Long): String =
-    s"$base/slices/.merge-${tok(lo)}-${tok(hi)}-" +
+  private def scratchPath(label: String): String =
+    s"$base/slices/.merge-$label-" +
       java.util.UUID.randomUUID().toString.take(8)
 
   private def fs(spark: SparkSession, p: String) =
@@ -420,41 +431,31 @@ final class SliceLadder(
     *    [[train]] rebuild may have replaced the DATA under identical
     *    boundaries) — on either, abandon: the scratch dir is deleted
     *    outright (no reader ever saw it, so it needs no trash grace).
-    *    Otherwise RENAME the scratch dir into the committable path
-    *    (same-filesystem dir rename — atomic on HDFS/POSIX; an object
-    *    store swaps in its copy+conditional-put here), commit the
-    *    containing marker, drop the subsumed markers, enqueue their
-    *    data on the trash list (physically deleted at the NEXT
-    *    mutation — the reader grace window), and evict session caches
-    *    so new plans resolve the merged ladder. */
+    *    Otherwise [[commitScratch]] — the same rename + marker step
+    *    every append commits through — puts the merged slice in place;
+    *    then drop the subsumed markers, enqueue their data on the trash
+    *    list (physically deleted at the NEXT mutation — the reader
+    *    grace window), and evict session caches so new plans resolve
+    *    the merged ladder. */
   private def mergeRun(spark: SparkSession, run: Seq[(Long, Long)]): Unit = {
     val (lo, hi) = (run.head._1, run.last._2)
     val ep = epochOf(spark)
-    val scratch = mergeTmpPath(lo, hi)
+    val scratch = scratchPath(s"${tok(lo)}-${tok(hi)}")
     val rows = run.map { case (a, b) =>
         spark.read.schema(readSchema).parquet(slicePath(a, b)) }
       .reduce(_.unionByName(_))
     writeSliceFiles(rows, scratch)
     SliceLadder.failpoint(what, "merge-staged")
     lock.synchronized {
-      val hfs = fs(spark, base)
-      def abandon(): Unit = { hfs.delete(new Path(scratch), true); () }
       val live = ladder(spark).toSet
       if (!run.forall(live.contains) || epochOf(spark) != ep) {
-        abandon() // lost a compactor race or a rebuild replaced the data
+        // lost a compactor race or a rebuild replaced the data
+        fs(spark, base).delete(new Path(scratch), true)
         return
       }
-      // the committable path cannot be a LIVE slice here (the run's
-      // members are live and the resolved ladder admits no overlap), so
-      // anything already at it is crash garbage or trash-pending data —
-      // clear it so the rename lands
-      val target = new Path(slicePath(lo, hi))
-      if (hfs.exists(target)) hfs.delete(target, true)
-      if (!hfs.rename(new Path(scratch), target)) {
-        abandon() // cross-process racer took the path between our two
-        return    // metadata ops; its commit is as good as ours
-      }
-      commitMarker(spark, lo, hi)
+      // a lost rename means a cross-process racer took the path between
+      // two metadata ops; its commit is as good as ours
+      if (!commitScratch(spark, scratch, lo, hi)) return
       SliceLadder.failpoint(what, "merge-committed")
       val mfs = fs(spark, markerDir)
       run.foreach { case (a, b) =>
@@ -546,11 +547,12 @@ final class SliceLadder(
     *  1. trash-listed slice data whose trash entry is older than
     *     `graceMs` (younger entries stay — an in-flight reader inside
     *     the window keeps its files);
-    *  2. orphaned merge scratch dirs (`slices/.merge-…`) older than
-    *     `graceMs` — a crashed merge's leftovers, never readable;
+    *  2. orphaned scratch dirs (`slices/.merge-…`) older than
+    *     `graceMs` — a crashed append's or merge's leftovers, never
+    *     readable;
     *  3. orphaned slice dirs at committable paths with neither a marker
     *     nor a trash entry, older than `graceMs` — the residue of a
-    *     crash between a merge's rename and its marker commit (a
+    *     crash between a commit's rename and its marker (a
     *     two-metadata-op window, but nonzero);
     *  4. the [[gcSide]] hook's per-modality side artifacts at dead
     *     bounds, same cutoff.
@@ -607,10 +609,10 @@ final class SliceLadder(
                   hfs.delete(st.getPath, true)) deleted = true
             case SliceDirRe(a, b) =>
               val range = (untok(a), untok(b))
-              // an orphan: no raw marker claims it (an IN-FLIGHT
-              // append's pre-marker write stays newer than the grace
-              // by its own task activity — see newestMtime) and no
-              // trash entry defers it
+              // an orphan: no raw marker claims it (a commit IN
+              // FLIGHT between its rename and its marker carries files
+              // written just before the rename — see newestMtime) and
+              // no trash entry defers it
               if (!raw.contains(range) && !trashed.contains(range) &&
                   newestMtime(hfs, st.getPath) <= cutoff) {
                 if (hfs.delete(st.getPath, true)) deleted = true
@@ -650,10 +652,48 @@ final class SliceLadder(
     }
   }
 
+  /** THE slice commit, shared by every append and merge (caller holds
+    * [[lock]]; `scratch` is fully written): rename the scratch dir into
+    * the committable path, then [[commitMarker]]. The committable path
+    * cannot hold a LIVE slice here — an append's range lies above the
+    * top boundary, a merge's run members are live and the resolved
+    * ladder admits no overlap — so anything already at it is crash
+    * garbage or trash-pending data, cleared so the rename lands (a
+    * same-filesystem dir rename — atomic on HDFS/POSIX; an object store
+    * swaps in its copy + conditional put here). Returns false, with the
+    * scratch dir deleted, when the rename loses to a cross-process
+    * racer that took the path between the two metadata ops. */
+  private def commitScratch(spark: SparkSession, scratch: String, lo: Long,
+      hi: Long): Boolean = {
+    val hfs = fs(spark, base)
+    val target = new Path(slicePath(lo, hi))
+    if (hfs.exists(target)) hfs.delete(target, true)
+    if (!hfs.rename(new Path(scratch), target)) {
+      hfs.delete(new Path(scratch), true)
+      false
+    } else {
+      commitMarker(spark, lo, hi)
+      true
+    }
+  }
+
+  /** Commit an append's fully written scratch dir as slice [lo, hi). */
+  private def publish(spark: SparkSession, scratch: String, lo: Long,
+      hi: Long): Unit = {
+    onMutate()
+    if (!commitScratch(spark, scratch, lo, hi))
+      throw new IllegalStateException(
+        s"$what commit of [$lo, $hi) failed: could not rename $scratch")
+  }
+
+  /** Derive-side write of a range whose bounds are known up front: the
+    * [[prepareSlice]] hook, the rows to scratch, then [[publish]]. */
   private def stage(spark: SparkSession, rows: DataFrame, lo: Long,
       hi: Long): Unit = {
-    writeSliceFiles(prepareSlice(spark, rows, lo, hi), slicePath(lo, hi))
-    commitMarker(spark, lo, hi)
+    val scratch = scratchPath(s"${tok(lo)}-${tok(hi)}")
+    writeSliceFiles(prepareSlice.fold(rows)(_(spark, rows, lo, hi)),
+      scratch)
+    publish(spark, scratch, lo, hi)
   }
 
   /** Advance the artifact to `batchBound` by deriving ONLY the new id
@@ -672,7 +712,6 @@ final class SliceLadder(
       require(batchBound > cur,
         s"$what append: batchBound $batchBound must exceed current " +
           s"coverage $cur (shrinking coverage is a rebuild, not an append)")
-      onMutate()
       stage(spark, deriveRange(spark, cur, batchBound), cur, batchBound)
     }
 
@@ -682,7 +721,30 @@ final class SliceLadder(
     * (ids below coverage) are dropped; the fresh remainder must satisfy
     * the dense-monotone contract, and — for one-row-per-id modalities —
     * carry no in-batch duplicates (guarded — see the class doc).
-    * Bootstraps an empty artifact at lo = 0. */
+    * Bootstraps an empty artifact at lo = 0.
+    *
+    * ONE Spark query per call when the derivation adds no exchange of
+    * its own (the IVF list assignment, image hashing): the guard's
+    * figures (null ids, the fresh range's min/max, distinct fresh ids,
+    * fresh rows) are `observe()` metrics on the slice write itself, and
+    * the per-id row numbering they need is a window over ids clustered
+    * by the write's one exchange. That exchange deals ids to tasks by
+    * `id mod n` (n = the session's shuffle partitions), which AQE
+    * leaves as it is: a dense batch of r ids spreads evenly over
+    * min(r, n) tasks, so same-size batches write same-size slices —
+    * what [[compactTiered]]'s size tiers assume. (A hash exchange
+    * scatters a small batch over an uneven, batch-dependent number of
+    * files; a coalesced one collapses every small batch into one
+    * file.) The upper bound is known only once the rows are written,
+    * so they land in a scratch dir that the shared rename + marker
+    * commit ([[commitScratch]], as in [[mergeRun]]) puts in place
+    * after the guard passes; a failed guard deletes the scratch dir and
+    * commits nothing. The guard takes a pass of its own into the
+    * `noop` sink — the same observed plan, so the contract is still
+    * checked in one place — where the write cannot report it: a
+    * derivation that shuffles above the guard (audio, video), and a
+    * ladder with a [[prepareSlice]] hook (the shingle census, keyed to
+    * `hi`, needs the bound before its rows exist). */
   def appendBatch(spark: SparkSession, batch: DataFrame): Unit =
     lock.synchronized {
       sweep(spark)
@@ -691,38 +753,79 @@ final class SliceLadder(
       require(cur != sentinel,
         s"$what artifact is sealed at full coverage; a live ingest " +
           "artifact must not be sealed (rebuild with train(bound))")
-      val b = batch.withColumn(idCol, col(idCol).cast("long"))
-      // one pass: null-id count (a malformed producer id — or a failed
-      // cast — must fail fast, not silently drop the row while the
-      // range math claims it covered), then the fresh range's stats
-      val st = b.agg(
-        sum(when(col(idCol).isNull, 1L).otherwise(0L)),
-        min(when(col(idCol) >= cur, col(idCol))),
-        max(when(col(idCol) >= cur, col(idCol))),
-        countDistinct(when(col(idCol) >= cur, col(idCol))),
-        count(when(col(idCol) >= cur, lit(1L)))).head()
-      require(st.isNullAt(0) || st.getLong(0) == 0L,
-        s"$what ingest batch carries ${st.getLong(0)} rows with a null " +
-          s"$idCol (malformed producer id or failed cast) — committing " +
-          "would silently drop them while claiming range coverage")
-      if (st.isNullAt(1)) return // whole batch was a replay (or empty)
-      val (lo, hi, n) = (st.getLong(1), st.getLong(2) + 1L, st.getLong(3))
-      val fresh = b.filter(col(idCol) >= cur)
-      require(lo == cur,
-        s"$what ingest broke the dense-monotone id contract: fresh ids " +
-          s"start at $lo but coverage ends at $cur — committing would " +
-          s"claim ids [$cur, $lo) as covered without processing them")
-      require(n == hi - cur,
-        s"$what ingest broke the dense-monotone id contract: range " +
-          s"[$cur, $hi) spans ${hi - cur} ids but the batch carries $n " +
-          "distinct — the holes would be dropped as replays forever")
-      require(!oneRowPerId || st.getLong(4) == n,
-        s"$what ingest batch carries ${st.getLong(4)} rows for $n fresh " +
-          s"ids — an at-least-once producer duplicated rows WITHIN one " +
-          "micro-batch; committing would break the exactly-once artifact")
-      onMutate()
-      stage(spark, deriveBatch(spark, fresh), cur, hi)
+      val id = col(idCol)
+      val b = batch.withColumn(idCol, id.cast("long"))
+      val tasks = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      // null-id rows (a malformed producer id, or a failed cast) pass
+      // the replay filter so the guard counts them, and stop before the
+      // derivation, which need not cope with them
+      def observed(guard: Observation): DataFrame =
+        b.filter(id.isNull || id >= cur)
+          .withColumn(IdTask, coalesce(pmod(id, lit(tasks.toLong)), lit(0L))
+            .cast("int"))
+          .repartitionById(tasks, col(IdTask))
+          .withColumn(IdRowNo, row_number().over(
+            Window.partitionBy(col(IdTask), id).orderBy(id)))
+          .observe(guard,
+            count(when(id.isNull, 1)).as("nulls"),
+            min(id).as("lo"), max(id).as("hi"),
+            count(when(col(IdRowNo) === 1, id)).as("ids"),
+            count(id).as("rows"))
+          .filter(id.isNotNull).drop(IdRowNo, IdTask)
+      def guardPass(): Map[String, Any] = {
+        val guard = Observation()
+        observed(guard).write.format("noop").mode("overwrite").save()
+        guard.get
+      }
+      prepareSlice match {
+        case None =>
+          val guard = Observation()
+          val scratch = scratchPath(tok(cur))
+          writeSliceFiles(deriveBatch(spark, observed(guard)), scratch)
+          // AQE reports no observed metrics from inside a finished query
+          // stage, so a derivation that shuffles above the guard (audio
+          // and video group by media_id) leaves them empty and the guard
+          // takes a pass of its own. A commit renames the scratch dir
+          // away; a failed guard or a pure replay leaves it to discard.
+          try freshBound(Some(guard.get).filter(_.nonEmpty)
+              .getOrElse(guardPass()), cur)
+            .foreach(publish(spark, scratch, cur, _))
+          finally fs(spark, base).delete(new Path(scratch), true)
+        case Some(_) =>
+          freshBound(guardPass(), cur).foreach { h =>
+            stage(spark, deriveBatch(spark, b.filter(id >= cur)), cur, h) }
+      }
     }
+
+  private val IdRowNo = "__slice_id_row"
+  private val IdTask = "__slice_id_task"
+
+  /** The replay contract checked against [[appendBatch]]'s observed
+    * guard metrics `m`: the fresh range's exclusive upper bound, or None
+    * when the whole batch was a replay (or empty). */
+  private def freshBound(m: Map[String, Any], cur: Long): Option[Long] = {
+    val nulls = m("nulls").asInstanceOf[Long]
+    require(nulls == 0L,
+      s"$what ingest batch carries $nulls rows with a null " +
+        s"$idCol (malformed producer id or failed cast) — committing " +
+        "would silently drop them while claiming range coverage")
+    if (m("lo") == null) return None
+    val (lo, hi) = (m("lo").asInstanceOf[Long], m("hi").asInstanceOf[Long] + 1L)
+    val (n, rows) = (m("ids").asInstanceOf[Long], m("rows").asInstanceOf[Long])
+    require(lo == cur,
+      s"$what ingest broke the dense-monotone id contract: fresh ids " +
+        s"start at $lo but coverage ends at $cur — committing would " +
+        s"claim ids [$cur, $lo) as covered without processing them")
+    require(n == hi - cur,
+      s"$what ingest broke the dense-monotone id contract: range " +
+        s"[$cur, $hi) spans ${hi - cur} ids but the batch carries $n " +
+        "distinct — the holes would be dropped as replays forever")
+    require(!oneRowPerId || rows == n,
+      s"$what ingest batch carries $rows rows for $n fresh " +
+        s"ids — an at-least-once producer duplicated rows WITHIN one " +
+        "micro-batch; committing would break the exactly-once artifact")
+    Some(hi)
+  }
 
   /** Ensure the artifact covers ids < `bound` (default: full corpus).
     * Idempotent; partial coverage is ADVANCED by appending; coverage

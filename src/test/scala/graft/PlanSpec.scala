@@ -766,4 +766,49 @@ class PlanSpec extends SparkSpec {
         plan.contains("ReusedQueryStage"),
       s"q_basket_pairs baskets exchange no longer runtime-reused:\n$plan")
   }
+
+  test("streaming vector append: one SQL execution, at most one shuffle, no Expand") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{ExpandExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.queries.SimilarityQueries
+    object Plans extends AdaptiveSparkPlanHelper
+    val batch = Tables(spark, sf, "embeddings")
+      .selectExpr("vec_id", "cast(embedding AS array<double>) AS v")
+      .as[(Long, Seq[Double])].collect().sortBy(_._1).take(10).toSeq
+      .toDF("vec_id", "v")
+    SimilarityQueries.dropIvfAssignments(spark, sf)
+    // the listener bus is asynchronous: every execution before the
+    // sentinel query has been delivered once the sentinel's has
+    val Sentinel = "append-pin-sentinel"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.logical.toString.contains(Sentinel)) sentinelSeen.countDown()
+        else seen.add(qe)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = seen.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SimilarityQueries.appendAssignedBatch(spark, sf, batch)
+      spark.range(1).select(lit(Sentinel)).collect()
+      assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val runs = seen.asScala.toSeq
+    assert(runs.size == 1, s"one append ran ${runs.size} SQL executions:\n" +
+      runs.map(_.executedPlan).mkString("\n"))
+    val plan = runs.head.executedPlan
+    val shuffles = Plans.collect(plan) { case x: ShuffleExchangeExec => x }
+    assert(shuffles.size <= 1, s"the append shuffles ${shuffles.size} times:\n$plan")
+    assert(Plans.collect(plan) { case x: ExpandExec => x }.isEmpty,
+      s"a distinct-count Expand is back in the append:\n$plan")
+    assert(SimilarityQueries.ivfAssignBound(spark, sf) == Some(10L))
+    // leave the full-coverage inverted file the other tests read
+    SimilarityQueries.trainIvfAssignments(spark, sf)
+  }
 }

@@ -652,4 +652,52 @@ class SliceLadderSpec extends SparkSpec {
       .filter(col("count") > 1).count()
     assert(got == 0L, "no id may be committed twice")
   }
+
+  private def scratchDirs(base: String): Seq[String] =
+    Option(new java.io.File(s"$base/slices").list()).toSeq.flatten
+      .filter(_.startsWith(".merge-"))
+
+  test("a rejected ingest batch commits nothing and leaves no scratch dir") {
+    import spark.implicits._
+    val base = tmpBase("rejected")
+    val lad = mkLadder(base)
+    lad.appendBatch(spark, (0L to 4L).toDF("id"))
+    val before = lad.ladder(spark)
+    Seq(
+      "null id" -> Seq(Some(5L), None, Some(6L)).toDF("id"),
+      "gap" -> Seq(5L, 7L).toDF("id"),
+      "start above the bound" -> (8L to 10L).toDF("id"),
+      "in-batch duplicate" -> Seq(5L, 5L, 6L).toDF("id")
+    ).foreach { case (what, batch) =>
+      intercept[IllegalArgumentException] { lad.appendBatch(spark, batch) }
+      assert(lad.ladder(spark) == before, s"$what: the ladder changed")
+      assert(scratchDirs(base).isEmpty,
+        s"$what: the rejected slice's scratch dir was left behind")
+    }
+    lad.appendBatch(spark, (5L to 6L).toDF("id"))
+    assert(lad.bound(spark) == Some(7L))
+  }
+
+  test("a crash during appendBatch leaves the ladder unchanged; gc removes the scratch dir") {
+    import spark.implicits._
+    var arm = false
+    val base = tmpBase("batchcrash")
+    val lad = mkLadder(base, failStage = () => arm)
+    lad.appendBatch(spark, (0L to 4L).toDF("id"))
+    val before = lad.ladder(spark)
+    arm = true
+    intercept[RuntimeException] {
+      lad.appendBatch(spark, (5L to 9L).toDF("id"))
+    }
+    arm = false
+    assert(lad.ladder(spark) == before,
+      "a crashed append must not change committed state")
+    assert(lad.read(spark).count() == 5L)
+    assert(scratchDirs(base).nonEmpty,
+      "the crashed append's rows must sit in a scratch dir")
+    lad.gc(spark, 0L)
+    assert(scratchDirs(base).isEmpty, "gc must remove the crash's scratch")
+    lad.appendBatch(spark, (5L to 9L).toDF("id"))
+    assert(lad.bound(spark) == Some(10L) && lad.read(spark).count() == 10L)
+  }
 }

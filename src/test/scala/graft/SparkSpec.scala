@@ -6,26 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM via Test/fork). */
 object TestSession {
+  /** The production recipe ([[Sessions.local]]) at 4 cores: every conf
+    * the engine ships with — RocksDB state, the checkpoint file manager,
+    * the oracle-parity semantics — is what the suite exercises. Only the
+    * app name and the quieter log level are the suite's own. */
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // same state-store stack as production (Sessions.local): every
-      // StreamingSpec batch≡stream proof runs against RocksDB + changelog
-      // checkpointing, so the provider the 100 TB design depends on is
-      // what the suite actually exercises
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb." +
-        "changelogCheckpointing.enabled", "true")
-      .getOrCreate()
+    val s = Sessions.local("4", appName = "graft-test")
     s.sparkContext.setLogLevel("ERROR")
-    Tables.ensureConf(s)
     s
   }
 }

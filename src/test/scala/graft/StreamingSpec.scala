@@ -695,6 +695,35 @@ class StreamingSpec extends SparkSpec {
     assert(snapshot() == expected)
   }
 
+  test("vector ingest reads each micro-batch once: numInputRows equals the vectors fed") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.queries.SimilarityQueries
+    val dir = "/root/testdata/sf0.001"
+    SimilarityQueries.trainIvfCentroids(spark, dir)
+    SimilarityQueries.dropIvfAssignments(spark, dir)
+    val fed = Tables(spark, dir, "embeddings")
+      .selectExpr("vec_id", "cast(embedding AS array<double>) AS v")
+      .as[(Long, Seq[Double])].collect().sortBy(_._1).take(10)
+    val mem = MemoryStream[(Long, Seq[Double])]
+    mem.addData(fed.toSeq)
+    val q = StreamingPipeline.ingestVectorsSink(mem.toDF.toDF("vec_id", "v"),
+        dir)
+      .option("checkpointLocation",
+        Files.createTempDirectory("graft_ivf_once").toString)
+      .start()
+    q.awaitTermination()
+    // a foreachBatch body that evaluates its batch twice (a guard pass,
+    // then the slice write) reads every source row twice
+    assert(q.lastProgress.numInputRows == fed.length.toLong,
+      s"the append read ${q.lastProgress.numInputRows} rows for " +
+        s"${fed.length} vectors fed")
+    assert(SimilarityQueries.ivfAssignBound(spark, dir)
+      == Some(fed.last._1 + 1))
+    // leave the full-coverage inverted file the other tests read
+    SimilarityQueries.trainIvfAssignments(spark, dir)
+  }
+
   test("source-atomic guard: a split source fails fast; a torn guard record degrades to a skipped window, never wedged ingest") {
     import spark.implicits._
     import graft.queries.DedupQueries
@@ -1407,6 +1436,8 @@ class StreamingSpec extends SparkSpec {
     // heap-backed default this test exists to retire
     assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass")
       .contains("RocksDBStateStoreProvider"))
+    assert(spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+      .endsWith(".FileSystemBasedCheckpointFileManager"))
     val work = Files.createTempDirectory("graft_rocksdb").toString
     val mem = MemoryStream[KeyedValue]
     def runOnce(): Unit = {
