@@ -11,10 +11,9 @@ import org.apache.spark.sql.SparkSession
 object Sessions {
   /** `cpus` drives both parallelism and shuffle partitions — local mode
     * has no reason to shuffle wider than its core count. */
-  def local(cpus: String, appName: String = "graft"): SparkSession = {
+  def local(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")

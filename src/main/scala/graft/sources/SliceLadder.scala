@@ -102,9 +102,9 @@ import org.apache.spark.sql.functions._
   * DUPLICATE rows for a fresh id fails fast — silently committing
   * coverage over unprocessed ids would drop them forever as "replays",
   * and silently committing an at-least-once producer's in-batch
-  * duplicates would break the exactly-once artifact property. The
-  * guard costs no pass of its own: its figures are `observe()` metrics
-  * on the slice write itself (see [[appendBatch]]).
+  * duplicates would break the exactly-once artifact property. A batch
+  * with fresh ids costs the guard no pass of its own: its figures are
+  * `observe()` metrics on the slice write itself (see [[appendBatch]]).
   */
 final class SliceLadder(
     val base: String,
@@ -723,28 +723,32 @@ final class SliceLadder(
     * carry no in-batch duplicates (guarded — see the class doc).
     * Bootstraps an empty artifact at lo = 0.
     *
-    * ONE Spark query per call when the derivation adds no exchange of
-    * its own (the IVF list assignment, image hashing): the guard's
+    * ONE Spark query per batch that carries fresh ids: the guard's
     * figures (null ids, the fresh range's min/max, distinct fresh ids,
     * fresh rows) are `observe()` metrics on the slice write itself, and
     * the per-id row numbering they need is a window over ids clustered
-    * by the write's one exchange. That exchange deals ids to tasks by
-    * `id mod n` (n = the session's shuffle partitions), which AQE
-    * leaves as it is: a dense batch of r ids spreads evenly over
-    * min(r, n) tasks, so same-size batches write same-size slices —
-    * what [[compactTiered]]'s size tiers assume. (A hash exchange
+    * by the write's one exchange. That exchange cuts the fresh ids into
+    * runs of [[AppendRun]] consecutive ids and deals the runs over at
+    * most [[AppendTasks]] writer tasks, a layout AQE leaves as it is
+    * and that does not follow the session's shuffle width: a
+    * micro-batch of up to [[AppendRun]] ids (streaming ingest's usual
+    * size) is written by one task, and a larger one in parallel, in
+    * files of whole runs, so same-size batches write same-size slices
+    * — what [[compactTiered]]'s size tiers assume. (A hash exchange
     * scatters a small batch over an uneven, batch-dependent number of
-    * files; a coalesced one collapses every small batch into one
-    * file.) The upper bound is known only once the rows are written,
+    * files.) The upper bound is known only once the rows are written,
     * so they land in a scratch dir that the shared rename + marker
     * commit ([[commitScratch]], as in [[mergeRun]]) puts in place
     * after the guard passes; a failed guard deletes the scratch dir and
     * commits nothing. The guard takes a pass of its own into the
     * `noop` sink — the same observed plan, so the contract is still
-    * checked in one place — where the write cannot report it: a
-    * derivation that shuffles above the guard (audio, video), and a
-    * ladder with a [[prepareSlice]] hook (the shingle census, keyed to
-    * `hi`, needs the bound before its rows exist). */
+    * checked in one place — in two cases. A ladder with a
+    * [[prepareSlice]] hook (the shingle census, keyed to `hi`) needs
+    * the bound before its rows exist. And the write's figures are
+    * trusted only when they show a fresh range: a write that reports
+    * no fresh ids, or no figures at all, is checked again by that pass
+    * before the batch is dropped as a replay, so no way a plan reports
+    * its metrics can discard fresh rows; only replays pay the pass. */
   def appendBatch(spark: SparkSession, batch: DataFrame): Unit =
     lock.synchronized {
       sweep(spark)
@@ -755,15 +759,15 @@ final class SliceLadder(
           "artifact must not be sealed (rebuild with train(bound))")
       val id = col(idCol)
       val b = batch.withColumn(idCol, id.cast("long"))
-      val tasks = spark.conf.get("spark.sql.shuffle.partitions").toInt
       // null-id rows (a malformed producer id, or a failed cast) pass
       // the replay filter so the guard counts them, and stop before the
       // derivation, which need not cope with them
       def observed(guard: Observation): DataFrame =
         b.filter(id.isNull || id >= cur)
-          .withColumn(IdTask, coalesce(pmod(id, lit(tasks.toLong)), lit(0L))
-            .cast("int"))
-          .repartitionById(tasks, col(IdTask))
+          .withColumn(IdTask, coalesce(
+            pmod(((id - cur) / AppendRun).cast("long"), lit(AppendTasks)),
+            lit(0)).cast("int"))
+          .repartitionById(AppendTasks, col(IdTask))
           .withColumn(IdRowNo, row_number().over(
             Window.partitionBy(col(IdTask), id).orderBy(id)))
           .observe(guard,
@@ -782,12 +786,15 @@ final class SliceLadder(
           val guard = Observation()
           val scratch = scratchPath(tok(cur))
           writeSliceFiles(deriveBatch(spark, observed(guard)), scratch)
-          // AQE reports no observed metrics from inside a finished query
-          // stage, so a derivation that shuffles above the guard (audio
-          // and video group by media_id) leaves them empty and the guard
-          // takes a pass of its own. A commit renames the scratch dir
-          // away; a failed guard or a pure replay leaves it to discard.
-          try freshBound(Some(guard.get).filter(_.nonEmpty)
+          // A replay's write reports an all-null range, or (where the
+          // derivation shuffles above the guard, as audio and video do)
+          // nothing: AQE swaps the plan above the emptied exchange for
+          // an empty relation, observed node included. Either way the
+          // guard's own pass confirms the replay before the batch is
+          // dropped. A commit renames the scratch dir away; a failed
+          // guard or a pure replay leaves it to discard.
+          try freshBound(Some(guard.get)
+              .filter(m => m.nonEmpty && m("lo") != null)
               .getOrElse(guardPass()), cur)
             .foreach(publish(spark, scratch, cur, _))
           finally fs(spark, base).delete(new Path(scratch), true)
@@ -799,6 +806,10 @@ final class SliceLadder(
 
   private val IdRowNo = "__slice_id_row"
   private val IdTask = "__slice_id_task"
+  /** [[appendBatch]]'s write layout: consecutive ids per run, and the
+    * most tasks one append is written by. */
+  private val AppendRun = 256
+  private val AppendTasks = 4
 
   /** The replay contract checked against [[appendBatch]]'s observed
     * guard metrics `m`: the fresh range's exclusive upper bound, or None

@@ -767,21 +767,14 @@ class PlanSpec extends SparkSpec {
       s"q_basket_pairs baskets exchange no longer runtime-reused:\n$plan")
   }
 
-  test("streaming vector append: one SQL execution, at most one shuffle, no Expand") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.{ExpandExec, QueryExecution}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+  /** The SQL executions `body` runs, in order of delivery. The listener
+    * bus is asynchronous: every execution before a sentinel query has
+    * been delivered once the sentinel's has. */
+  private def executionsOf(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
-    import graft.queries.SimilarityQueries
-    object Plans extends AdaptiveSparkPlanHelper
-    val batch = Tables(spark, sf, "embeddings")
-      .selectExpr("vec_id", "cast(embedding AS array<double>) AS v")
-      .as[(Long, Seq[Double])].collect().sortBy(_._1).take(10).toSeq
-      .toDF("vec_id", "v")
-    SimilarityQueries.dropIvfAssignments(spark, sf)
-    // the listener bus is asynchronous: every execution before the
-    // sentinel query has been delivered once the sentinel's has
+    import scala.jdk.CollectionConverters._
     val Sentinel = "append-pin-sentinel"
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
     val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
@@ -794,21 +787,60 @@ class PlanSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      SimilarityQueries.appendAssignedBatch(spark, sf, batch)
+      body
       spark.range(1).select(lit(Sentinel)).collect()
       assert(sentinelSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
     } finally spark.listenerManager.unregister(listener)
-    import scala.jdk.CollectionConverters._
-    val runs = seen.asScala.toSeq
-    assert(runs.size == 1, s"one append ran ${runs.size} SQL executions:\n" +
-      runs.map(_.executedPlan).mkString("\n"))
+    seen.asScala.toSeq
+  }
+
+  /** One ladder append = one SQL execution with at most one shuffle (the
+    * guard's id exchange) and no distinct-count Expand. */
+  private def assertOneQueryAppend(what: String,
+      runs: Seq[org.apache.spark.sql.execution.QueryExecution]): Unit = {
+    import org.apache.spark.sql.execution.ExpandExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Plans extends AdaptiveSparkPlanHelper
+    assert(runs.size == 1, s"one $what append ran ${runs.size} SQL " +
+      "executions:\n" + runs.map(_.executedPlan).mkString("\n"))
     val plan = runs.head.executedPlan
     val shuffles = Plans.collect(plan) { case x: ShuffleExchangeExec => x }
-    assert(shuffles.size <= 1, s"the append shuffles ${shuffles.size} times:\n$plan")
+    assert(shuffles.size <= 1,
+      s"the $what append shuffles ${shuffles.size} times:\n$plan")
     assert(Plans.collect(plan) { case x: ExpandExec => x }.isEmpty,
-      s"a distinct-count Expand is back in the append:\n$plan")
+      s"a distinct-count Expand is back in the $what append:\n$plan")
+  }
+
+  test("streaming vector append: one SQL execution, at most one shuffle, no Expand") {
+    import spark.implicits._
+    import graft.queries.SimilarityQueries
+    val batch = Tables(spark, sf, "embeddings")
+      .selectExpr("vec_id", "cast(embedding AS array<double>) AS v")
+      .as[(Long, Seq[Double])].collect().sortBy(_._1).take(10).toSeq
+      .toDF("vec_id", "v")
+    SimilarityQueries.dropIvfAssignments(spark, sf)
+    assertOneQueryAppend("vector", executionsOf {
+      SimilarityQueries.appendAssignedBatch(spark, sf, batch)
+    })
     assert(SimilarityQueries.ivfAssignBound(spark, sf) == Some(10L))
     // leave the full-coverage inverted file the other tests read
     SimilarityQueries.trainIvfAssignments(spark, sf)
+  }
+
+  test("streaming image append: one SQL execution, at most one shuffle, no Expand") {
+    import spark.implicits._
+    import graft.queries.MultimodalQueries
+    val batch = (0L until 10L).map { id =>
+      (id, graft.operators.Multimodal.synthPng(id, 16 + (id % 6).toInt * 8,
+        16 + (id % 4).toInt * 8))
+    }.toDF("media_id", "bytes")
+    MultimodalQueries.dropMediaSigIndex(spark, sf)
+    assertOneQueryAppend("image", executionsOf {
+      MultimodalQueries.appendMediaSigBatch(spark, sf, batch)
+    })
+    assert(MultimodalQueries.mediaSigBound(spark, sf) == Some(10L))
+    // leave the full-coverage index the other tests read
+    MultimodalQueries.trainMediaSigIndex(spark, sf)
   }
 }

@@ -700,4 +700,34 @@ class SliceLadderSpec extends SparkSpec {
     lad.appendBatch(spark, (5L to 9L).toDF("id"))
     assert(lad.bound(spark) == Some(10L) && lad.read(spark).count() == 10L)
   }
+
+  test("a partly replayed batch through a derivation that shuffles above the guard keeps its fresh rows") {
+    import spark.implicits._
+    // the audio and video shape: the derivation groups by the id, an
+    // exchange above the guard's. A replay's write then reports no
+    // guard figures at all, and the guard's own pass must settle it
+    val base = tmpBase("shuffled")
+    val lad = new SliceLadder(base, "shuffled artifact",
+      idCol = "id",
+      readSchema = "id BIGINT, v BIGINT",
+      deriveRange = (spark, lo, hi) =>
+        spark.range(lo, hi).select(col("id"), (col("id") * 2).as("v")),
+      deriveBatch = (_, batch) =>
+        batch.groupBy("id").agg(max(col("id") * 2).as("v")))
+    def rows() = lad.read(spark).as[(Long, Long)].collect().sorted.toSeq
+    lad.appendBatch(spark, (0L to 4L).toDF("id"))
+    lad.appendBatch(spark, (2L to 8L).toDF("id"))
+    assert(lad.ladder(spark) == Seq((0L, 5L), (5L, 9L)),
+      "the fresh ids of a partly replayed batch must commit")
+    assert(rows() == (0L to 8L).map(i => (i, 2 * i)))
+    lad.appendBatch(spark, (0L to 8L).toDF("id"))
+    assert(lad.ladder(spark) == Seq((0L, 5L), (5L, 9L)),
+      "a pure replay must commit nothing")
+    intercept[IllegalArgumentException] {
+      lad.appendBatch(spark, Seq(Some(9L), None).toDF("id"))
+    }
+    assert(lad.bound(spark) == Some(9L) && scratchDirs(base).isEmpty)
+    lad.appendBatch(spark, (3L to 12L).toDF("id"))
+    assert(rows() == (0L to 12L).map(i => (i, 2 * i)))
+  }
 }

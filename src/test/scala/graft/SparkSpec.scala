@@ -9,9 +9,9 @@ object TestSession {
   /** The production recipe ([[Sessions.local]]) at 4 cores: every conf
     * the engine ships with — RocksDB state, the checkpoint file manager,
     * the oracle-parity semantics — is what the suite exercises. Only the
-    * app name and the quieter log level are the suite's own. */
+    * quieter log level is the suite's own. */
   lazy val spark: SparkSession = {
-    val s = Sessions.local("4", appName = "graft-test")
+    val s = Sessions.local("4")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
