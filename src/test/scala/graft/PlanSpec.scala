@@ -416,6 +416,48 @@ class PlanSpec extends SparkSpec {
       s"q_video_neardup lost the hot-bucket anti-join:\n$logical")
   }
 
+  test("media band self-joins are shuffled hash joins in the initial plan: no static broadcast, sort-merge or cartesian") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.Inner
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec,
+      CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
+    // Both sides of a (b, v) band join are the corpus's band table, so a
+    // statically broadcast side is a size-estimate accident that turns
+    // into a one-task cliff mid-scale. The initial (pre-AQE) plan is the
+    // one that shows a static choice; AQE may still broadcast at runtime
+    // from actual sizes, which is safe. The clusters-incremental queries
+    // run their pair stage while they are built (the merge checkpoints
+    // it), so the executions started during construction count too.
+    val bandJoins = Seq(
+      "q_media_neardup" -> 1, "q_audio_neardup" -> 1, "q_video_neardup" -> 1,
+      "q_media_incremental" -> 1, "q_audio_incremental" -> 1,
+      "q_video_incremental" -> 1,
+      "q_media_clusters_incremental" -> 2,
+      "q_audio_clusters_incremental" -> 2,
+      "q_video_clusters_incremental" -> 2)
+    def names(keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      keys.collect { case a: AttributeReference => a.name }
+    bandJoins.foreach { case (q, expected) =>
+      var df: org.apache.spark.sql.DataFrame = null
+      val built = executionsOf { df = Registry.byName(q).fn(spark, sf) }
+      val plans = (built :+ df.queryExecution).map(_.sparkPlan)
+      val shown = plans.mkString("\n")
+      val band = plans.flatMap(_.collect {
+        case j: BaseJoinExec if j.joinType == Inner &&
+          names(j.leftKeys) == Seq("b", "v") &&
+          names(j.rightKeys) == Seq("b", "v") => j
+      })
+      assert(band.size == expected &&
+        band.forall(_.isInstanceOf[ShuffledHashJoinExec]),
+        s"$q: expected $expected shuffled-hash (b, v) band joins, got " +
+          s"${band.map(_.nodeName)}:\n$shown")
+      assert(plans.forall(_.collect { case j: SortMergeJoinExec => j }.isEmpty),
+        s"$q sort-merges in its initial plan:\n$shown")
+      assert(plans.forall(_.collect { case j: CartesianProductExec => j }.isEmpty),
+        s"$q crosses rows in its initial plan:\n$shown")
+    }
+  }
+
   test("q_gopher_rules is one narrow pass: no joins, single exchange for the output sort") {
     val df = graft.queries.Registry.byName("q_gopher_rules").fn(spark, sf)
     df.collect()
