@@ -88,11 +88,12 @@ object OperatorManual {
     val (_, qs, path, defaultTag) = mod
     val lines = Files.readAllLines(Paths.get(repoRoot, path))
       .toArray(Array.empty[String])
-    val FnRe = """QueryDef\("([a-z0-9_]+)",\s*([A-Za-z][A-Za-z0-9_]*)""".r
-    // declaration line + implementing-function ident per query name
+    val FnRe = """QueryDef\("([a-z0-9_]+)",\s*([A-Za-z][A-Za-z0-9_.]*)""".r
+    // declaration line + implementing-function ident per query name (a
+    // method on a value, `Image.nearDup`, documents at its `def nearDup`)
     val decls: Map[String, (Int, String)] = lines.zipWithIndex.flatMap {
       case (l, i) => FnRe.findFirstMatchIn(l).map(m =>
-        m.group(1) -> (i, m.group(2)))
+        m.group(1) -> (i, m.group(2).split('.').last))
     }.toMap
     qs.map { q =>
       val (declLine, fnIdent) = decls.getOrElse(q.name, (-1, ""))

@@ -143,12 +143,8 @@ object DedupQueries {
     * those. Hence read output ≡ [[shingleHashesOf]] over the covered
     * corpus, proven by DedupSpec "appended shingle index ≡ from-scratch
     * build" over a multi-step ladder. */
-  private[graft] def shingleIndexBase(dir: String): String = {
-    val abs = new java.io.File(dir).getAbsolutePath
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    s"/root/repo/target/shingles/v2-df$StopShingleDf/${new java.io.File(dir).getName}-$tag"
-  }
+  private[graft] def shingleIndexBase(dir: String): String =
+    graft.sources.Artifacts.path("shingles", s"v2-df$StopShingleDf", dir)
   /** src_num is a 32-bit boundary space (the lake's source naming), so
     * the ladder's full-coverage sentinel is Int.MaxValue — tokens and
     * artifact paths are unchanged from the pre-[[graft.sources
@@ -1028,13 +1024,10 @@ object DedupQueries {
     * src_num < 10 lake-side prior [[clustersIncremental]] extends),
     * "text-lake-b&lt;n&gt;" (advanced priors [[compactClusterLabels]]
     * writes as the lake boundary moves), "media" (image aHash clusters,
-    * trained by [[MultimodalQueries.trainMediaClusterLabels]]). */
-  def clusterModelPath(dir: String, kind: String): String = {
-    val abs = new java.io.File(dir).getAbsolutePath
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    s"/root/repo/target/clusters/v1/${new java.io.File(dir).getName}-$tag/labels-$kind.parquet"
-  }
+    * trained by [[MultimodalQueries.MediaModality.trainClusterLabels]]). */
+  def clusterModelPath(dir: String, kind: String): String =
+    graft.sources.Artifacts.path("clusters", "v1", dir) +
+      s"/labels-$kind.parquet"
 
   /** True iff a COMPLETE label artifact exists — the `_SUCCESS` marker,
     * not the directory, is the witness (a killed mid-overwrite leaves
@@ -1080,7 +1073,8 @@ object DedupQueries {
       s"cluster-label artifact '$kind' missing for $dir (" +
         s"${clusterModelPath(dir, kind)}) — run " +
         "DedupQueries.trainClusterLabels(spark, dir) (text kinds) or " +
-        "MultimodalQueries.trainMediaClusterLabels(spark, dir) first; " +
+        "MultimodalQueries.<modality>.trainClusterLabels(spark, dir) " +
+        "first; " +
         "Bench warmup and Verify setup do this automatically")
     spark.read.schema("doc_id BIGINT, cluster_id BIGINT")
       .parquet(clusterModelPath(dir, kind))

@@ -152,165 +152,31 @@ object MultimodalQueries {
                 AS BIGINT) AS phash_lo
     FROM bits GROUP BY doc_id ORDER BY doc_id"""
 
-  /** One decoded-signature table per (session, dir) — the same
-    * derived-artifact discipline as the text side's shingle/cluster
-    * caches: the image DECODE (the expensive stage) runs once per lake
+  // ==========================================================================
+  // The media-dedup pipeline — near-dup → clusters → canonical, with its
+  // incremental (batch-vs-lake) and compaction legs — written ONCE over a
+  // [[MediaModality]]; [[Image]], [[Audio]] and [[Video]] supply only what
+  // differs. Every modality persists its signatures as a maintained lake
+  // artifact, a [[graft.sources.SliceLadder]] of (media_id, phash) rows
+  // under `media-sigs/v1-<scheme>`: at 100 TB the payload DECODE is the
+  // most expensive stage (petabytes of blobs in, 8 bytes out per item) and
+  // must run exactly once per item, AT INGEST — never re-run because a
+  // dedup query happened to be the first reader. A signature depends on
+  // nothing but the payload's own bytes, so slice-at-ingest ≡ from-scratch
+  // row-for-row (MediaSpec proves the ladder equality), and the scheme tag
+  // bumps on a signature change so persisted indexes self-invalidate
+  // instead of being reused stale. The ladder contracts (replay safety,
+  // dense-monotone guard, atomic marker commit, single-writer locking) are
+  // documented once, in SliceLadder.
+  // ==========================================================================
+
+  /** One decoded-signature table per (session, dir) for the modalities
+    * that checkpoint theirs — the same derived-artifact discipline as the
+    * text side's shingle/cluster caches: the DECODE runs once per lake
     * snapshot and the tiny (media_id, phash) table is localCheckpoint'ed
     * for every consumer (near-dup pairs, cluster formation). */
-  private val mediaSigCacheMap =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  // ==========================================================================
-  // Persisted media-signature indexes — the image and audio modalities'
-  // maintained lake artifacts, completing the per-modality set: text
-  // shingles (DedupQueries.shingleIndexBase), vector IVF assignments
-  // (SimilarityQueries.ivfAssignBase), image perceptual hashes, audio
-  // fingerprints. At 100 TB the payload DECODE is the most expensive
-  // stage in the media pipeline (petabytes of blobs in, 8 bytes out per
-  // item) and must run exactly once per item, AT INGEST — never re-run
-  // because a dedup query happened to be the first reader. Like the IVF
-  // file and unlike the shingle index there is no census subtlety: a
-  // signature depends on nothing but the payload's own bytes, so
-  // slice-at-ingest ≡ from-scratch row-for-row (MediaSpec proves the
-  // ladder equality). Layout and commit protocol are
-  // [[graft.sources.SliceLadder]]'s: `slices/s<lo>-<hi>/` holding
-  // (media_id, phash) for media_id ∈ [lo, hi), committed by an
-  // append-only `ladder/` marker file written LAST — a crashed append
-  // leaves every earlier slice committed and the partial one invisible
-  // to readers. The scheme tag in the version path ("a1" = integer aHash,
-  // [[Multimodal.imageFeature]]; "fp48" = the 48-bit audio fingerprint,
-  // [[audioFingerprints]]) bumps on a scheme change so persisted
-  // indexes self-invalidate instead of being reused stale.
-  // ==========================================================================
-
-  private def sigBase(dir: String, scheme: String): String = {
-    val abs = new java.io.File(dir).getAbsolutePath
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    s"/root/repo/target/media-sigs/v1-$scheme/${new java.io.File(dir).getName}-$tag"
-  }
-  private[graft] def mediaSigBase(dir: String): String = sigBase(dir, "a1")
-  private[graft] def audioSigBase(dir: String): String = sigBase(dir, "fp48")
-  // The slice/ladder/commit mechanics shared with the shingle index and
-  // the IVF inverted file live in [[graft.sources.SliceLadder]] — one
-  // implementation, per-modality instances below supply only the hash
-  // stage (and cache eviction). Contracts (replay safety, dense-monotone
-  // guard, atomic marker commit, single-writer locking) are documented
-  // there once.
-
-  /** The test lake's blob source for the media_id ∈ [lo, hi) range:
-    * synthetic PNGs born executor-side from the documents table (the
-    * stand-in for a crawler fetch stage — in production the bytes
-    * arrive with the batch; see [[appendMediaSigBatch]] for that
-    * shape). The doc_id filter is pushed to the parquet scan, so an
-    * append reads only the batch's rows. */
-  private def blobsRange(spark: SparkSession, dir: String, lo: Long,
-      hi: Long): DataFrame = {
-    val dims = Tables(spark, dir, "documents")
-      .filter(col("doc_id") >= lo && col("doc_id") < hi)
-      .select(col("doc_id"),
-        (lit(16) + (col("doc_id") % 6) * 8).cast("int").as("w"),
-        (lit(16) + (col("doc_id") % 4) * 8).cast("int").as("h"))
-    Multimodal.encodeSynthPngPartitioned(dims, "doc_id", "w", "h")
-  }
-
-  private[graft] def mediaSigIndex(dir: String): graft.sources.SliceLadder =
-    new graft.sources.SliceLadder(mediaSigBase(dir), "image signature",
-      idCol = "media_id",
-      readSchema = "media_id BIGINT, phash BIGINT",
-      deriveRange = (spark, lo, hi) =>
-        Multimodal.perceptualHashImagePartitioned(
-          blobsRange(spark, dir, lo, hi)).toDF(),
-      deriveBatch = (_, batch) =>
-        Multimodal.perceptualHashImagePartitioned(
-          batch.select(col("media_id"), col("bytes"))).toDF(),
-      onMutate = () => clearMediaSigCache())
-
-  // Image-index public surface (delegating; see SliceLadder for contracts)
-  private[graft] def mediaSigLadder(spark: SparkSession,
-      dir: String): Seq[(Long, Long)] = mediaSigIndex(dir).ladder(spark)
-  def mediaSigBound(spark: SparkSession, dir: String): Option[Long] =
-    mediaSigIndex(dir).bound(spark)
-  def mediaSigTrained(spark: SparkSession, dir: String): Boolean =
-    mediaSigIndex(dir).trained(spark)
-  def dropMediaSigIndex(spark: SparkSession, dir: String): Unit =
-    mediaSigIndex(dir).drop(spark)
-  def appendMediaSigs(spark: SparkSession, dir: String,
-      batchBound: Long): Unit = mediaSigIndex(dir).append(spark, batchBound)
-  def appendMediaSigBatch(spark: SparkSession, dir: String,
-      batch: DataFrame): Unit = mediaSigIndex(dir).appendBatch(spark, batch)
-  def trainMediaSigIndex(spark: SparkSession, dir: String,
-      bound: Long = Long.MaxValue): Unit =
-    mediaSigIndex(dir).train(spark, bound)
-  private[graft] def sigsFromIndex(spark: SparkSession,
-      dir: String): DataFrame = mediaSigIndex(dir).read(spark)
-
-  private[graft] def audioSigIndex(dir: String): graft.sources.SliceLadder =
-    new graft.sources.SliceLadder(audioSigBase(dir), "audio fingerprint",
-      idCol = "media_id",
-      readSchema = "media_id BIGINT, phash BIGINT",
-      deriveRange = (spark, lo, hi) =>
-        audioFingerprints(Multimodal.pcmFrameFeatures(
-          audioBlobsRange(spark, dir, lo, hi))),
-      deriveBatch = (_, batch) =>
-        audioFingerprints(Multimodal.pcmFrameFeatures(
-          batch.select(col("media_id"), col("bytes")))))
-
-  // Audio-index public surface (delegating; see SliceLadder for contracts)
-  private[graft] def audioSigLadder(spark: SparkSession,
-      dir: String): Seq[(Long, Long)] = audioSigIndex(dir).ladder(spark)
-  def audioSigBound(spark: SparkSession, dir: String): Option[Long] =
-    audioSigIndex(dir).bound(spark)
-  def audioSigTrained(spark: SparkSession, dir: String): Boolean =
-    audioSigIndex(dir).trained(spark)
-  def dropAudioSigIndex(spark: SparkSession, dir: String): Unit =
-    audioSigIndex(dir).drop(spark)
-  def appendAudioSigs(spark: SparkSession, dir: String,
-      batchBound: Long): Unit = audioSigIndex(dir).append(spark, batchBound)
-  def appendAudioSigBatch(spark: SparkSession, dir: String,
-      batch: DataFrame): Unit = audioSigIndex(dir).appendBatch(spark, batch)
-  def trainAudioSigIndex(spark: SparkSession, dir: String,
-      bound: Long = Long.MaxValue): Unit =
-    audioSigIndex(dir).train(spark, bound)
-  private[graft] def audioSigsFromIndex(spark: SparkSession,
-      dir: String): DataFrame = audioSigIndex(dir).read(spark)
-
-  /** Offline media-clustering setup (idempotent): persist the image
-    * cluster labels under [[DedupQueries.clusterModelPath]] kind "media"
-    * — the same trained-artifact pattern as the text labels, so the two
-    * cluster-view queries are pure reads that fail fast. Trained over
-    * the shared decoded-signature artifact (the decode is not re-paid).
-    * Also persists the lake-side (src_num < 10) prior "media-lake" that
-    * [[mediaClustersIncrementalLabels]] extends — like the text twin,
-    * the prior restricts the SAME corpus-censused pair set to lake
-    * endpoints, so the incremental merge over it provably equals
-    * full-corpus retraining. */
-  def trainMediaClusterLabels(spark: SparkSession, dir: String): Unit = {
-    def pairs = Multimodal.mediaNearDups(mediaSigsDs(spark, dir),
-        maxHamming = 3)
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-    DedupQueries.trainLabelArtifact(spark, dir, "media")(pairs)
-    DedupQueries.trainLabelArtifact(spark, dir, mediaPriorKind(10)) {
-      val srcn = mediaSrcs(spark, dir).select("media_id", "src_num")
-      pairs
-        .join(srcn.select(col("media_id").as("doc_a"),
-          col("src_num").as("sa")), "doc_a")
-        .join(srcn.select(col("media_id").as("doc_b"),
-          col("src_num").as("sb")), "doc_b")
-        .filter(col("sa") < 10 && col("sb") < 10)
-        .select("doc_a", "doc_b")
-    }
-  }
-
-  /** The prior-artifact kind for a given media lake boundary — the
-    * image twin of [[DedupQueries.lakePriorKind]]. */
-  private[graft] def mediaPriorKind(lakeBound: Int): String =
-    if (lakeBound == 10) "media-lake" else s"media-lake-b$lakeBound"
-
-  private def mediaClusterLabels(spark: SparkSession,
-      dir: String): DataFrame =
-    DedupQueries.persistedLabels(spark, dir, "media")
-      .select(col("doc_id").as("media_id"), col("cluster_id"))
+  private val mediaSigCacheMap = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String), DataFrame]
 
   /** Evict the decoded-signature artifact (paired with
     * [[DedupQueries.clearShingleCache]] — Bench calls both after its
@@ -321,88 +187,341 @@ object MultimodalQueries {
       try df.unpersist() catch { case _: Throwable => () })
     mediaSigCacheMap.clear()
   }
-  private def mediaSigsCached(spark: SparkSession, dir: String): DataFrame = {
-    mediaSigCacheMap.keys.foreach { case k @ (s, _) =>
-      if (s.sparkContext.isStopped) mediaSigCacheMap.remove(k)
+
+  /** What one media modality's dedup pipeline needs that the others do
+    * not; every stage is a method here, written once.
+    *  - `kind`: the cluster-label artifact kind; the lake priors the
+    *    incremental merge extends are `<kind>-lake[-b<bound>]`.
+    *  - `maxHamming`: the near-dup bound, the largest distance the
+    *    modality's 4-band pigeonhole still finds exactly.
+    *  - `scheme`, `what`: the signature index's version tag and its name
+    *    in ladder messages.
+    *  - `blobsRange`: the lake's (media_id, bytes) blobs for ids in
+    *    [lo, hi); `signaturesOf`: (media_id, bytes) → (media_id, phash).
+    *  - `checkpointed`: the corpus signature table is materialized once
+    *    per (session, dir) and the index evicts it on every mutation.
+    *  - `volume`: an item's payload size (pixels, samples, frames) from
+    *    its id; `countCol`/`totalCol`/`keptCol` name the canonical and
+    *    incremental outputs. */
+  private[graft] final class MediaModality(val kind: String,
+      val maxHamming: Int, scheme: String, what: String,
+      blobsRange: (SparkSession, String, Long, Long) => DataFrame,
+      signaturesOf: DataFrame => DataFrame, checkpointed: Boolean,
+      volume: Column => Column,
+      countCol: String, totalCol: String, keptCol: String) {
+
+    /** The persisted signature index of lake `dir`: ranges are derived
+      * from the lake's blobs, ingest batches from their own bytes. */
+    def index(dir: String): graft.sources.SliceLadder =
+      new graft.sources.SliceLadder(
+        graft.sources.Artifacts.path("media-sigs", s"v1-$scheme", dir),
+        what,
+        idCol = "media_id",
+        readSchema = "media_id BIGINT, phash BIGINT",
+        deriveRange = (spark, lo, hi) =>
+          signaturesOf(blobsRange(spark, dir, lo, hi)),
+        deriveBatch = (_, batch) =>
+          signaturesOf(batch.select(col("media_id"), col("bytes"))),
+        onMutate =
+          if (checkpointed) (() => clearMediaSigCache()) else (() => ()))
+
+    /** The corpus's (media_id, phash) rows: read back from the index
+      * when it fully covers the corpus (the decode then ran once, at
+      * ingest), decoded inline otherwise — bit-identical either way. A
+      * checkpointed modality materializes the table EAGERLY here, so
+      * exactly one caller pays the build instead of smearing it across
+      * consumers. */
+    private def sigs(spark: SparkSession, dir: String): DataFrame = {
+      def build = {
+        val ix = index(dir)
+        if (ix.trained(spark)) ix.read(spark)
+        else signaturesOf(blobsRange(spark, dir, 0L, Long.MaxValue))
+      }
+      if (!checkpointed) build
+      else {
+        mediaSigCacheMap.keys.foreach { case k @ (s, _) =>
+          if (s.sparkContext.isStopped) mediaSigCacheMap.remove(k)
+        }
+        mediaSigCacheMap.getOrElseUpdate((spark, dir),
+          build.localCheckpoint())
+      }
     }
-    mediaSigCacheMap.getOrElseUpdate((spark, dir), {
-      // Backed by the persisted index when one fully covers the corpus
-      // (the decode then ran once, at ingest — reading the 16-byte rows
-      // back is the cheap path); computed inline otherwise. Either way
-      // the localCheckpoint materializes EAGERLY here, so exactly one
-      // caller pays the build instead of smearing it across consumers.
-      (if (mediaSigTrained(spark, dir)) sigsFromIndex(spark, dir)
-       else Multimodal.perceptualHashImagePartitioned(
-         blobsRange(spark, dir, 0L, Long.MaxValue)).toDF())
-        .localCheckpoint()
-    })
+
+    private def sigsDs(spark: SparkSession, dir: String) = {
+      import spark.implicits._
+      sigs(spark, dir).as[Multimodal.MediaSig]
+    }
+
+    /** Near-dup pairs within `maxHamming` over the modality's decoded
+      * signatures: candidates come from the pigeonhole (band, value)
+      * join with the hot-bucket cap ([[Multimodal.mediaNearDups]]) —
+      * bucketed, never all-pairs. The oracle re-derives every signature
+      * analytically from the synthetic payload formula AND mirrors the
+      * capped candidate generation, so a green hash proves both the
+      * decode path and the banding semantics. */
+    def nearDup(spark: SparkSession, dir: String): DataFrame =
+      Multimodal.mediaNearDups(sigsDs(spark, dir), maxHamming)
+        .orderBy("id_a", "id_b")
+
+    /** Offline clustering setup (idempotent): persist the near-dup
+      * cluster labels under [[DedupQueries.clusterModelPath]] as `kind`
+      * — the same trained-artifact pattern as the text labels, so the
+      * cluster views are pure reads that fail fast — plus the lake-side
+      * (src_num < 10) prior the incremental merge extends. The prior
+      * restricts the SAME corpus-censused pair set to lake endpoints, so
+      * the merge over it provably equals full-corpus retraining.
+      * Trained over the signature artifact: the decode is not re-paid. */
+    def trainClusterLabels(spark: SparkSession, dir: String): Unit = {
+      def pairs = Multimodal.mediaNearDups(sigsDs(spark, dir), maxHamming)
+        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
+      DedupQueries.trainLabelArtifact(spark, dir, kind)(pairs)
+      DedupQueries.trainLabelArtifact(spark, dir, priorKind(10)) {
+        val srcn = mediaSrcs(spark, dir).select("media_id", "src_num")
+        pairs
+          .join(srcn.select(col("media_id").as("doc_a"),
+            col("src_num").as("sa")), "doc_a")
+          .join(srcn.select(col("media_id").as("doc_b"),
+            col("src_num").as("sb")), "doc_b")
+          .filter(col("sa") < 10 && col("sb") < 10)
+          .select("doc_a", "doc_b")
+      }
+    }
+
+    /** The prior-artifact kind for a lake boundary: src_num < `lakeBound`
+      * is the lake (the media form of [[DedupQueries.lakePriorKind]]). */
+    def priorKind(lakeBound: Int): String =
+      if (lakeBound == 10) s"$kind-lake" else s"$kind-lake-b$lakeBound"
+
+    def clusterLabels(spark: SparkSession, dir: String): DataFrame =
+      DedupQueries.persistedLabels(spark, dir, kind)
+        .select(col("doc_id").as("media_id"), col("cluster_id"))
+
+    /** Dedup cluster formation: the persisted connected components of the
+      * banded near-dup pair graph, from the SAME min-label propagation as
+      * the text side ([[DedupQueries.clusterLabels]]) — every clustered
+      * item carries the smallest media_id reachable from it. The oracle
+      * re-derives the closure independently (unrolled label CTEs), so a
+      * green hash certifies the offline training. */
+    def clusters(spark: SparkSession, dir: String): DataFrame =
+      clusterLabels(spark, dir).orderBy("media_id")
+
+    /** The dedup end-product: keep the min-media_id representative of
+      * each near-dup cluster, with survivor accounting per source (item
+      * count + total payload volume retained). */
+    def canonical(spark: SparkSession, dir: String): DataFrame = {
+      val drops = clusterLabels(spark, dir)
+        .filter(col("media_id") =!= col("cluster_id"))
+        .select(col("media_id").as("doc_id"))
+      Tables(spark, dir, "documents")
+        .join(drops, Seq("doc_id"), "left_anti")
+        .groupBy("source")
+        .agg(count(lit(1)).as(countCol),
+          sum(volume(col("doc_id"))).as(totalCol))
+        .orderBy("source")
+    }
+
+    /** Incremental dedup — the batch-vs-lake shape a GROWING corpus
+      * runs: lake items (src_num < 10) carry signatures in the persisted
+      * index — the lake is NEVER re-decoded — and only the arriving
+      * batch's bands probe the band buckets. A batch item is dropped when
+      * it is within `maxHamming` of any lake item, or of a smaller-id
+      * batch item (the min-id keeper convention of the cluster queries).
+      * Candidate volume is bands-of-batch × bucket occupancy —
+      * proportional to the BATCH, not the lake — where the undirected
+      * full-corpus join regenerates lake×lake candidates every run. Hot
+      * buckets are censused over the post-ingest corpus and cut from both
+      * sides ([[Multimodal.BandBucketCap]]). Kept/dropped accounting per
+      * source, not survivors only: at large SF the synthetic hash space
+      * saturates and EVERY batch item has a near-dup, and a
+      * survivors-only frame would certify on zero rows. */
+    def incremental(spark: SparkSession, dir: String): DataFrame = {
+      val srcs = mediaSrcs(spark, dir)
+      val okb = okbOf(sigs(spark, dir)
+        .join(srcs.select("media_id", "src_num"), "media_id"))
+      val drops = okb.filter(col("src_num") >= 10).as("x").hint("SHUFFLE_HASH")
+        .join(okb.as("y").hint("SHUFFLE_HASH"),
+          col("x.b") === col("y.b") && col("x.v") === col("y.v") &&
+            col("x.media_id") =!= col("y.media_id") &&
+            (col("y.src_num") < 10 ||
+              col("y.media_id") < col("x.media_id")))
+        .filter(expr(s"bit_count(x.phash ^ y.phash) <= $maxHamming"))
+        .select(col("x.media_id").as("media_id")).distinct()
+      srcs.filter(col("src_num") >= 10)
+        .join(drops.withColumn("is_drop", lit(1L)), Seq("media_id"), "left")
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_batch"),
+          coalesce(sum("is_drop"), lit(0L)).as("n_dropped"),
+          sum(when(col("is_drop").isNull, volume(col("media_id")))
+            .otherwise(lit(0L))).as(keptCol))
+        .orderBy("source")
+    }
+
+    /** Undirected near-dup pairs TOUCHING the batch — the merge graph
+      * for incremental clustering: batch-batch pairs from a self-join of
+      * the batch's informative bands, batch-lake pairs from the batch
+      * probing the lake's band buckets. Lake×lake candidates are never
+      * generated (the prior already contracted that structure), so
+      * candidate volume is bounded by the BATCH's band occupancy. The hot
+      * census runs over the corpus-so-far (src_num < batchBound): the
+      * ingest-time semantics, which coincides with the corpus-wide census
+      * whenever no bucket crosses the cap between boundaries. */
+    private def pairsAmong(spark: SparkSession, dir: String,
+        lakeBound: Int, batchBound: Int): DataFrame = {
+      val srcn = mediaSrcs(spark, dir).select("media_id", "src_num")
+      val okb = okbOf(sigs(spark, dir).join(srcn, "media_id")
+        .filter(col("src_num") < batchBound))
+      val okbB = okb.filter(col("src_num") >= lakeBound)
+      val okbL = okb.filter(col("src_num") < lakeBound)
+      val close = expr(s"bit_count(a.phash ^ c.phash) <= $maxHamming")
+      val bb = okbB.as("a").hint("SHUFFLE_HASH")
+        .join(okbB.as("c").hint("SHUFFLE_HASH"),
+          col("a.b") === col("c.b") && col("a.v") === col("c.v") &&
+            col("a.media_id") < col("c.media_id"))
+        .filter(close)
+        .select(col("a.media_id").as("doc_a"), col("c.media_id").as("doc_b"))
+      val bl = okbB.as("a").hint("SHUFFLE_HASH")
+        .join(okbL.as("c").hint("SHUFFLE_HASH"),
+          col("a.b") === col("c.b") && col("a.v") === col("c.v"))
+        .filter(close)
+        .select(least(col("a.media_id"), col("c.media_id")).as("doc_a"),
+          greatest(col("a.media_id"), col("c.media_id")).as("doc_b"))
+      bb.unionByName(bl).distinct()
+    }
+
+    /** The incremental cluster merge shared by [[clustersIncremental]]
+      * (the oracle-checked query) and [[compactClusterLabels]] (which
+      * persists it): the `lakeBound` prior's labels extended by the
+      * batch-touching pair graph through the SAME contraction +
+      * bounded-union-find machinery as the text side
+      * ([[DedupQueries.incrementalLabels]]). Returns (doc_id, cluster_id,
+      * prior_id) for every node of the merge. */
+    private def clustersIncrementalLabels(spark: SparkSession, dir: String,
+        lakeBound: Int = 10, batchBound: Int = Int.MaxValue): DataFrame =
+      DedupQueries.incrementalLabels(
+        DedupQueries.persistedLabels(spark, dir, priorKind(lakeBound))
+          .select("doc_id", "cluster_id"),
+        pairsAmong(spark, dir, lakeBound, batchBound))
+
+    /** The compaction step closing the modality's continual-ingest loop
+      * (blobs arrive → [[graft.streaming.StreamingPipeline.ingestMediaSink]]
+      * maintains the signature index → THIS merges the new items'
+      * near-dup structure into the persisted cluster prior and advances
+      * it): merges the pair graph of src_num ∈ [lakeBound, batchBound)
+      * into the `lakeBound` prior and persists the result as the prior
+      * for `batchBound`; an unbounded `batchBound` lands in the
+      * full-corpus `kind` artifact, which equals from-scratch retraining
+      * exactly (MediaSpec proves the single-shot and the staged-ladder
+      * equality). Unlike the text form, this step does NOT append the
+      * signature index: cluster boundaries live in src_num space while
+      * the ladder advances in media_id space as blobs land, so by the
+      * time a src batch is compacted its signatures are already on disk. */
+    def compactClusterLabels(spark: SparkSession, dir: String,
+        lakeBound: Int = 10, batchBound: Int = Int.MaxValue): Unit = {
+      require(batchBound > lakeBound,
+        s"compactClusterLabels($kind): batchBound $batchBound must exceed " +
+          s"lakeBound $lakeBound — a reversed call would read the " +
+          s"$lakeBound prior and persist it mislabeled")
+      val merged = clustersIncrementalLabels(spark, dir, lakeBound,
+          batchBound)
+        .select("doc_id", "cluster_id")
+      val out = if (batchBound == Int.MaxValue) kind else priorKind(batchBound)
+      merged.coalesce(1).write.mode("overwrite")
+        .parquet(DedupQueries.clusterModelPath(dir, out))
+      // release the merge's batch-node checkpoint (same discipline as the
+      // text compaction — the repeated loop must not accumulate blocks)
+      DedupQueries.releaseGeneration(merged)
+    }
+
+    /** Incremental clustering as an oracle-checked query: the
+      * src_num ≥ 10 items arrive as the batch, the persisted lake prior
+      * stands in for the compacted lake, and every item of the merged
+      * graph reports its final cluster and how it got it (batch arrival /
+      * lake cluster merged by a batch bridge / stable). The DuckDB oracle
+      * recomputes the FULL closure independently and derives the prior's
+      * closure from the lake-restricted pair set — a green hash proves
+      * merge ≡ full retraining, the theorem the compaction loop rests
+      * on. */
+    def clustersIncremental(spark: SparkSession, dir: String): DataFrame = {
+      val srcn = mediaSrcs(spark, dir).select(
+        col("media_id").as("doc_id"), col("src_num"))
+      clustersIncrementalLabels(spark, dir).join(srcn, "doc_id")
+        .select(col("doc_id").as("media_id"), col("cluster_id"),
+          when(col("src_num") >= 10, lit("batch"))
+            .when(col("cluster_id") =!= col("prior_id"), lit("merged"))
+            .otherwise(lit("stable")).as("status"))
+        .orderBy("media_id")
+    }
   }
 
-  private def mediaSigsDs(spark: SparkSession, dir: String) = {
-    import spark.implicits._
-    mediaSigsCached(spark, dir).as[Multimodal.MediaSig]
+  /** Images: the 64-bit aHash of each decoded PNG ("a1",
+    * [[Multimodal.imageFeature]]). All four 16-bit bands are
+    * informative, so the pigeonhole is exact up to Hamming 3. The image
+    * decode is the costliest, so its signature table is checkpointed. */
+  private[graft] val Image = new MediaModality("media", maxHamming = 3,
+    scheme = "a1", what = "image signature", blobsRange = blobsRange,
+    signaturesOf = b => Multimodal.perceptualHashImagePartitioned(b).toDF(),
+    checkpointed = true,
+    volume = id => (lit(16) + id % 6 * 8) * (lit(16) + id % 4 * 8),
+    countCol = "n_images", totalCol = "total_px", keptCol = "px_kept")
+
+  /** Audio: the 48-bit [[audioFingerprints]] ("fp48"). Its top 16-bit
+    * band is structurally zero, so once the corpus exceeds the bucket
+    * cap that band is over-cap and cut, leaving 3 real bands: any pair
+    * within Hamming 2 still shares an untouched band, while a bound of 3
+    * would silently miss one-bit-per-band pairs that engine and oracle
+    * both mirror — invisible to every gate. Synthetic-lake note: true
+    * matches need waveform class, dither phase AND length class to agree
+    * (doc_id ≡ doc_id' mod 768), so pairs appear from sf0.1 up; smaller
+    * SFs legitimately emit zero rows and the planted-recall proof lives
+    * in MediaSpec. */
+  private[graft] val Audio = new MediaModality("audio", maxHamming = 2,
+    scheme = "fp48", what = "audio fingerprint", blobsRange = audioBlobsRange,
+    signaturesOf = b => audioFingerprints(Multimodal.pcmFrameFeatures(b)),
+    checkpointed = false,
+    volume = id => lit(200) + id % 7 * 48,
+    countCol = "n_recordings", totalCol = "total_samples",
+    keptCol = "samples_kept")
+
+  /** Video: the 63-bit scene-level [[videoFingerprints]] ("vsc63"). All
+    * four bands are informative, so a pair within Hamming 2 shares ≥ 2
+    * untouched bands and is found whenever EITHER shared bucket is under
+    * [[Multimodal.BandBucketCap]]. Synthetic-lake note: exact-duplicate
+    * signatures need doc_id ≡ doc_id' (mod lcm(251, 11) = 2761), so all
+    * three SFs emit rows (500 docs → quantization-neighbor pairs; 5000 →
+    * whole duplicate classes). */
+  private[graft] val Video = new MediaModality("video", maxHamming = 2,
+    scheme = "vsc63", what = "video signature", blobsRange = videoBlobsRange,
+    signaturesOf = b => videoFingerprints(videoSceneTableOf(b)),
+    checkpointed = false,
+    volume = id => lit(20) + id % 11,
+    countCol = "n_videos", totalCol = "total_frames", keptCol = "frames_kept")
+
+  /** The test lake's blob source for the media_id ∈ [lo, hi) range:
+    * synthetic PNGs born executor-side from the documents table (the
+    * stand-in for a crawler fetch stage — in production the bytes
+    * arrive with the batch; see [[MediaModality.index]]'s `deriveBatch`
+    * for that shape). The doc_id filter is pushed to the parquet scan,
+    * so an append reads only the batch's rows. */
+  private def blobsRange(spark: SparkSession, dir: String, lo: Long,
+      hi: Long): DataFrame = {
+    val dims = Tables(spark, dir, "documents")
+      .filter(col("doc_id") >= lo && col("doc_id") < hi)
+      .select(col("doc_id"),
+        (lit(16) + (col("doc_id") % 6) * 8).cast("int").as("w"),
+        (lit(16) + (col("doc_id") % 4) * 8).cast("int").as("h"))
+    Multimodal.encodeSynthPngPartitioned(dims, "doc_id", "w", "h")
   }
 
-  /** Image near-dup pairs over REAL decoded aHashes: synth PNGs are
-    * decoded executor-side, each collapses to one 64-bit signature, and
-    * pairs within Hamming ≤ 3 come from the pigeonhole band join with the
-    * hot-bucket cap ([[Multimodal.mediaNearDups]]) — the simhash shape
-    * applied to images, bucketed, never all-pairs. The oracle re-derives
-    * every signature analytically from the pixel formula AND mirrors the
-    * capped candidate generation, so a green hash proves both the decode
-    * path and the banding semantics. */
-  private def mediaNearDup(spark: SparkSession, dir: String): DataFrame =
-    Multimodal.mediaNearDups(mediaSigsDs(spark, dir), maxHamming = 3)
-      .orderBy("id_a", "id_b")
-
-  /** Image dedup cluster formation: connected components over the banded
-    * near-dup pair graph — the image twin of the text side's
-    * `q_dedup_clusters`, reusing the SAME min-label propagation
-    * ([[DedupQueries.clusterLabels]]): every clustered image gets the
-    * smallest media_id reachable from it as its canonical id, ready for
-    * keep-one-representative dedup. Runs off the shared decoded-signature
-    * artifact, so the decode is not re-paid. */
-  private def mediaClusters(spark: SparkSession, dir: String): DataFrame =
-    mediaClusterLabels(spark, dir).orderBy("media_id")
-
-  /** The image-dedup end-product: keep the min-media_id representative
-    * of each near-dup cluster, with survivor accounting per source
-    * (image count + total pixels retained) — the image twin of
-    * `q_dedup_canonical`, off the same shared clustering. */
-  private def mediaCanonical(spark: SparkSession, dir: String): DataFrame = {
-    val drops = mediaClusterLabels(spark, dir)
-      .filter(col("media_id") =!= col("cluster_id"))
-      .select(col("media_id").as("doc_id"))
-    Tables(spark, dir, "documents")
-      .join(drops, Seq("doc_id"), "left_anti")
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_images"),
-        sum((lit(16) + col("doc_id") % 6 * 8) *
-          (lit(16) + col("doc_id") % 4 * 8)).as("total_px"))
-      .orderBy("source")
-  }
-
-  /** Incremental image dedup — the batch-vs-lake shape a GROWING image
-    * corpus actually runs, completing the per-modality incremental
-    * trio (`q_dedup_incremental` for text, `q_semdedup_incremental`
-    * for embeddings): lake images (src_num < 10) already carry
-    * signatures in the persisted index — the lake is NEVER re-decoded
-    * — and only the arriving batch's bands probe the band buckets. A
-    * batch image is dropped when it is within Hamming ≤ 3 of any lake
-    * image, or of a smaller-id batch image (the min-id keeper
-    * convention shared with the cluster queries); survivors are
-    * reported per source. The directed candidate join is the 100 TB
-    * shape: candidate volume is bands-of-batch × bucket occupancy —
-    * proportional to the BATCH, not the lake — where the undirected
-    * full-corpus join ([[Multimodal.mediaCandidates]]) regenerates
-    * lake×lake candidates every run. Hot (band, value) buckets are
-    * censused over the POST-ingest corpus and cut from both sides,
-    * same recall argument as [[Multimodal.BandBucketCap]]. */
   /** Documents keyed as media rows: (media_id, source, src_num). */
   private def mediaSrcs(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir, "documents")
       .select(col("doc_id").as("media_id"), col("source"),
         expr("cast(substring(source, 4, 8) AS INT)").as("src_num"))
+
+  /** A signature's four 16-bit (b, v) bands, as `array(...)` items. */
+  private val BandStructs = (0 until 4).map(b =>
+    s"named_struct('b', $b, 'v', shiftright(phash, ${b * 16}) & 65535)")
+    .mkString(", ")
 
   /** Banded signature rows with the hot-bucket cut applied, carrying
     * src_num: one row per (media_id, band, value) for every
@@ -412,47 +531,15 @@ object MultimodalQueries {
     * what they pass in. Same banding and cap as
     * [[Multimodal.mediaCandidates]]. */
   private def okbOf(sigs: DataFrame): DataFrame = {
-    val bandStructs = (0 until 4).map(b =>
-      s"named_struct('b', $b, 'v', shiftright(phash, ${b * 16}) & 65535)")
-      .mkString(", ")
     val bands = sigs
       .selectExpr("media_id", "phash", "src_num",
-        s"explode(array($bandStructs)) AS band")
+        s"explode(array($BandStructs)) AS band")
       .selectExpr("media_id", "phash", "src_num", "band.b AS b",
         "band.v AS v")
     val hot = bands.groupBy("b", "v").agg(count(lit(1)).as("bucket_n"))
       .filter(col("bucket_n") > Multimodal.BandBucketCap)
       .select("b", "v")
     bands.join(broadcast(hot), Seq("b", "v"), "left_anti")
-  }
-
-  /** Incremental image dedup: new-source media banded-joined against
-    * the persisted signature lake — batch x lake, never lake x lake. */
-  private def mediaIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val srcs = mediaSrcs(spark, dir)
-    val okb = okbOf(mediaSigsCached(spark, dir)
-      .join(srcs.select("media_id", "src_num"), "media_id"))
-    val drops = okb.filter(col("src_num") >= 10).as("x").hint("SHUFFLE_HASH")
-      .join(okb.as("y").hint("SHUFFLE_HASH"),
-        col("x.b") === col("y.b") && col("x.v") === col("y.v") &&
-          col("x.media_id") =!= col("y.media_id") &&
-          (col("y.src_num") < 10 ||
-            col("y.media_id") < col("x.media_id")))
-      .filter(expr("bit_count(x.phash ^ y.phash) <= 3"))
-      .select(col("x.media_id").as("media_id")).distinct()
-    // kept/dropped accounting per source (not survivors-only: at large
-    // SF the synthetic hash space saturates and EVERY batch image has a
-    // near-dup — a survivors-only frame would certify on zero rows)
-    srcs.filter(col("src_num") >= 10)
-      .join(drops.withColumn("is_drop", lit(1L)), Seq("media_id"), "left")
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_batch"),
-        coalesce(sum("is_drop"), lit(0L)).as("n_dropped"),
-        sum(when(col("is_drop").isNull,
-          (lit(16) + col("media_id") % 6 * 8) *
-            (lit(16) + col("media_id") % 4 * 8)).otherwise(lit(0L)))
-          .as("px_kept"))
-      .orderBy("source")
   }
 
   // lazy: mediaOkbCtes is declared further down the file (with the other
@@ -491,125 +578,12 @@ object MultimodalQueries {
     * side's hot-shingle census artifact. Tiny by construction
     * (≤ 4N/cap rows), read without decoding a pixel. */
   def mediaHotBuckets(spark: SparkSession, dir: String): DataFrame = {
-    val bandStructs = (0 until 4).map(b =>
-      s"named_struct('b', $b, 'v', shiftright(phash, ${b * 16}) & 65535)")
-      .mkString(", ")
-    sigsFromIndex(spark, dir)
-      .selectExpr(s"explode(array($bandStructs)) AS band")
+    Image.index(dir).read(spark)
+      .selectExpr(s"explode(array($BandStructs)) AS band")
       .selectExpr("band.b AS b", "band.v AS v")
       .groupBy("b", "v").agg(count(lit(1)).as("bucket_n"))
       .filter(col("bucket_n") > Multimodal.BandBucketCap)
       .select("b", "v")
-  }
-
-  /** Undirected near-dup pairs TOUCHING the batch — the merge graph for
-    * incremental media clustering: batch-batch pairs from a self-join
-    * of the batch's informative bands, batch-lake pairs from the batch
-    * probing the lake's band buckets. Lake×lake candidates are never
-    * generated (the prior already contracted that structure) — at
-    * 100 TB candidate volume is bounded by the BATCH's band occupancy.
-    * The hot census runs over the corpus-so-far (src_num < batchBound):
-    * the ingest-time semantics — the future's bucket sizes are
-    * unknowable at the boundary — which coincides with the corpus-wide
-    * census whenever no bucket crosses the cap between boundaries
-    * (cap-crossing buckets are crowd-indistinguishable images by
-    * definition; none exist in the testdata). */
-  private def mediaPairsAmong(spark: SparkSession, dir: String,
-      lakeBound: Int, batchBound: Int): DataFrame = {
-    val srcn = mediaSrcs(spark, dir).select("media_id", "src_num")
-    val okb = okbOf(mediaSigsCached(spark, dir).join(srcn, "media_id")
-      .filter(col("src_num") < batchBound))
-    val okbB = okb.filter(col("src_num") >= lakeBound)
-    val okbL = okb.filter(col("src_num") < lakeBound)
-    val bb = okbB.as("a").hint("SHUFFLE_HASH")
-      .join(okbB.as("c").hint("SHUFFLE_HASH"),
-        col("a.b") === col("c.b") && col("a.v") === col("c.v") &&
-          col("a.media_id") < col("c.media_id"))
-      .filter(expr("bit_count(a.phash ^ c.phash) <= 3"))
-      .select(col("a.media_id").as("doc_a"), col("c.media_id").as("doc_b"))
-    val bl = okbB.as("a").hint("SHUFFLE_HASH")
-      .join(okbL.as("c").hint("SHUFFLE_HASH"),
-        col("a.b") === col("c.b") && col("a.v") === col("c.v"))
-      .filter(expr("bit_count(a.phash ^ c.phash) <= 3"))
-      .select(least(col("a.media_id"), col("c.media_id")).as("doc_a"),
-        greatest(col("a.media_id"), col("c.media_id")).as("doc_b"))
-    bb.unionByName(bl).distinct()
-  }
-
-  /** The incremental media-cluster merge shared by
-    * [[mediaClustersIncremental]] (the oracle-checked query) and
-    * [[compactMediaClusterLabels]] (which persists the result): the
-    * persisted lake prior's labels extended by the batch-touching pair
-    * graph via the SAME contraction + bounded-union-find machinery as
-    * the text side ([[DedupQueries.incrementalLabels]]). Returns
-    * (doc_id, cluster_id, prior_id) for every node of the merge. */
-  private def mediaClustersIncrementalLabels(spark: SparkSession,
-      dir: String, lakeBound: Int = 10,
-      batchBound: Int = Int.MaxValue): DataFrame =
-    DedupQueries.incrementalLabels(
-      DedupQueries.persistedLabels(spark, dir, mediaPriorKind(lakeBound))
-        .select("doc_id", "cluster_id"),
-      mediaPairsAmong(spark, dir, lakeBound, batchBound))
-
-  /** The media compaction step closing the image modality's
-    * continual-ingest loop (ingest blobs →
-    * [[graft.streaming.StreamingPipeline.ingestMediaSink]] maintains
-    * the signature index → THIS merges the new images' near-dup
-    * structure into the persisted cluster prior and advances it):
-    * computes the batch-touching pair graph for src_num ∈
-    * [lakeBound, batchBound), merges it into the `lakeBound` prior and
-    * persists the result as the prior for `batchBound` — unbounded
-    * `batchBound` lands in the full-corpus "media" artifact, which
-    * equals from-scratch retraining exactly (MediaSpec proves both the
-    * single-shot and the staged-ladder equality).
-    *
-    * Unlike the text twin, this step does NOT append the signature
-    * index: cluster boundaries live in src_num space while the
-    * signature ladder advances in media_id space, maintained by its
-    * own ingest path ([[appendMediaSigs]] /
-    * [[graft.streaming.StreamingPipeline.ingestMediaSink]]) as blobs
-    * land — by the time a src batch is compacted its signatures are
-    * already on disk, and [[mediaSigsCached]] reads them regardless of
-    * which boundary space advanced last. */
-  def compactMediaClusterLabels(spark: SparkSession, dir: String,
-      lakeBound: Int = 10, batchBound: Int = Int.MaxValue): Unit = {
-    require(batchBound > lakeBound,
-      s"compactMediaClusterLabels: batchBound $batchBound must exceed " +
-        s"lakeBound $lakeBound — a reversed call would read the " +
-        s"$lakeBound prior and persist it mislabeled")
-    val merged = mediaClustersIncrementalLabels(spark, dir, lakeBound,
-        batchBound)
-      .select("doc_id", "cluster_id")
-    val kind =
-      if (batchBound == Int.MaxValue) "media" else mediaPriorKind(batchBound)
-    merged.coalesce(1).write.mode("overwrite")
-      .parquet(DedupQueries.clusterModelPath(dir, kind))
-    // release the merge's batch-node checkpoint (same discipline as the
-    // text compaction — the repeated loop must not accumulate blocks)
-    DedupQueries.releaseGeneration(merged)
-  }
-
-  /** Incremental media clustering as an oracle-checked query: the
-    * src_num ≥ 10 images arrive as the batch, the persisted
-    * "media-lake" prior stands in for the compacted lake, and every
-    * image of the merged graph reports its final cluster and how it got
-    * it (batch arrival / lake cluster merged by a batch bridge /
-    * stable). The DuckDB oracle recomputes the FULL closure
-    * independently and derives the prior's closure from the
-    * lake-restricted pair set — a green hash proves merge ≡ full
-    * retraining, the correctness theorem the compaction loop rests
-    * on. */
-  private def mediaClustersIncremental(spark: SparkSession,
-      dir: String): DataFrame = {
-    val out = mediaClustersIncrementalLabels(spark, dir)
-    val srcn = mediaSrcs(spark, dir).select(
-      col("media_id").as("doc_id"), col("src_num"))
-    out.join(srcn, "doc_id")
-      .select(col("doc_id").as("media_id"), col("cluster_id"),
-        when(col("src_num") >= 10, lit("batch"))
-          .when(col("cluster_id") =!= col("prior_id"), lit("merged"))
-          .otherwise(lit("stable")).as("status"))
-      .orderBy("media_id")
   }
 
   private lazy val mediaClustersIncrementalSql = s"""
@@ -716,39 +690,6 @@ object MultimodalQueries {
            shiftleft(zc % 256, cast(frame * 16 AS INT)) AS part""")
       .groupBy("media_id").agg(sum("part").as("phash"))
 
-  /** Audio near-dup pairs — the third leg of the media-dedup matrix
-    * (text shingles / image aHash / audio fingerprint): the 48-bit
-    * [[audioFingerprints]] signature rides the SAME banded pigeonhole
-    * join as the image side ([[Multimodal.mediaNearDups]]) — candidates
-    * from (band, value) buckets with the hot-bucket cap, never
-    * all-pairs, so the linear-growth and cap bounds ScaleSpec proves for
-    * the image path carry over verbatim. The top 16-bit band is
-    * structurally zero (48 bits in a 64-bit sig), so once the corpus
-    * exceeds the bucket cap it is over-cap and the cut removes it — the
-    * effective pigeonhole is 3 bands, which is why the threshold here is
-    * Hamming ≤ 2 (NOT the image side's 3): with 3 real bands, any pair
-    * within Hamming 2 provably shares an untouched band, so candidate
-    * coverage stays exact above the cap WHILE that shared band's own
-    * (band, value) bucket is under [[Multimodal.BandBucketCap]] — a
-    * >cap cluster of near-identical fingerprints saturates the shared
-    * band's bucket and the pair is dropped by engine AND oracle, the
-    * same mirrored gate-invisible miss documented for the image path's
-    * cap; a threshold of 3 would silently
-    * miss one-bit-per-band pairs that both engine and oracle mirror —
-    * invisible to every gate. (Below the cap the zero band survives and
-    * candidate generation degenerates to exact all-pairs — also
-    * mirrored.) Synthetic-lake note: true matches need waveform class, dither
-    * phase AND length class to agree (doc_id ≡ doc_id' mod 768), so
-    * pairs appear from sf0.1 up; smaller SFs legitimately emit zero rows
-    * and the planted-recall proof lives in MediaSpec. */
-  private def audioNearDup(spark: SparkSession, dir: String): DataFrame =
-    // served from the persisted fingerprint index when one fully covers
-    // the corpus (decode ran once, at ingest); inline otherwise —
-    // bit-identical either way (one selection, [[audioSigsDs]], shared
-    // with the clusters and incremental views so they can never drift)
-    Multimodal.mediaNearDups(audioSigsDs(spark, dir), maxHamming = 2)
-      .orderBy("id_a", "id_b")
-
   private val audioOkbCtes = s"""$audioFrameCtes,
     afp AS (
       SELECT doc_id,
@@ -787,117 +728,6 @@ object MultimodalQueries {
     FROM apairs
     ORDER BY id_a, id_b"""
 
-  /** The audio fingerprints as a Dataset — from the persisted index
-    * when it covers the corpus, inline otherwise; bit-identical. */
-  private def audioSigsDs(spark: SparkSession, dir: String) = {
-    import spark.implicits._
-    (if (audioSigTrained(spark, dir)) audioSigsFromIndex(spark, dir)
-     else audioFingerprints(
-       Multimodal.pcmFrameFeatures(audioBlobs(spark, dir))))
-      .as[Multimodal.MediaSig]
-  }
-
-  /** Offline audio-clustering setup (idempotent) — kind "audio" in the
-    * shared label-artifact store; with this and the video twin, every
-    * modality (text / image / audio / video) carries the same
-    * near-dup → clusters → canonical dedup chain. */
-  def trainAudioClusterLabels(spark: SparkSession, dir: String): Unit = {
-    def pairs = Multimodal.mediaNearDups(audioSigsDs(spark, dir),
-        maxHamming = 2)
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-    DedupQueries.trainLabelArtifact(spark, dir, "audio")(pairs)
-    // lake-side prior (src_num < 10) that the incremental merge extends
-    // — restricting the SAME corpus-censused pair set to lake endpoints,
-    // so the merge over it provably equals full-corpus retraining
-    DedupQueries.trainLabelArtifact(spark, dir, audioPriorKind(10)) {
-      val srcn = mediaSrcs(spark, dir).select("media_id", "src_num")
-      pairs
-        .join(srcn.select(col("media_id").as("doc_a"),
-          col("src_num").as("sa")), "doc_a")
-        .join(srcn.select(col("media_id").as("doc_b"),
-          col("src_num").as("sb")), "doc_b")
-        .filter(col("sa") < 10 && col("sb") < 10)
-        .select("doc_a", "doc_b")
-    }
-  }
-
-  private[graft] def audioPriorKind(lakeBound: Int): String =
-    if (lakeBound == 10) "audio-lake" else s"audio-lake-b$lakeBound"
-
-  /** Batch-touching audio near-dup pairs (batch×batch + batch×lake,
-    * never lake×lake — the prior already contracted that structure);
-    * the audio instance of the image side's incremental pair stage,
-    * same Hamming ≤ 2 bound as every other audio view. */
-  private def audioPairsAmong(spark: SparkSession, dir: String,
-      lakeBound: Int, batchBound: Int): DataFrame = {
-    val srcn = mediaSrcs(spark, dir).select("media_id", "src_num")
-    val okb = okbOf(audioSigsDs(spark, dir).toDF().join(srcn, "media_id")
-      .filter(col("src_num") < batchBound))
-    val okbB = okb.filter(col("src_num") >= lakeBound)
-    val okbL = okb.filter(col("src_num") < lakeBound)
-    val bb = okbB.as("a").hint("SHUFFLE_HASH")
-      .join(okbB.as("c").hint("SHUFFLE_HASH"),
-        col("a.b") === col("c.b") && col("a.v") === col("c.v") &&
-          col("a.media_id") < col("c.media_id"))
-      .filter(expr("bit_count(a.phash ^ c.phash) <= 2"))
-      .select(col("a.media_id").as("doc_a"), col("c.media_id").as("doc_b"))
-    val bl = okbB.as("a").hint("SHUFFLE_HASH")
-      .join(okbL.as("c").hint("SHUFFLE_HASH"),
-        col("a.b") === col("c.b") && col("a.v") === col("c.v"))
-      .filter(expr("bit_count(a.phash ^ c.phash) <= 2"))
-      .select(least(col("a.media_id"), col("c.media_id")).as("doc_a"),
-        greatest(col("a.media_id"), col("c.media_id")).as("doc_b"))
-    bb.unionByName(bl).distinct()
-  }
-
-  private def audioClustersIncrementalLabels(spark: SparkSession,
-      dir: String, lakeBound: Int = 10,
-      batchBound: Int = Int.MaxValue): DataFrame =
-    DedupQueries.incrementalLabels(
-      DedupQueries.persistedLabels(spark, dir, audioPriorKind(lakeBound))
-        .select("doc_id", "cluster_id"),
-      audioPairsAmong(spark, dir, lakeBound, batchBound))
-
-  /** The audio compaction step closing the modality's continual-ingest
-    * loop (ingest blobs → [[graft.streaming.StreamingPipeline
-    * .ingestAudioSink]] maintains the fingerprint index → THIS merges
-    * the new recordings' near-dup structure into the persisted cluster
-    * prior and advances it) — the audio twin of
-    * [[compactMediaClusterLabels]], same boundary-space note. */
-  def compactAudioClusterLabels(spark: SparkSession, dir: String,
-      lakeBound: Int = 10, batchBound: Int = Int.MaxValue): Unit = {
-    require(batchBound > lakeBound,
-      s"compactAudioClusterLabels: batchBound $batchBound must exceed " +
-        s"lakeBound $lakeBound")
-    val merged = audioClustersIncrementalLabels(spark, dir, lakeBound,
-        batchBound)
-      .select("doc_id", "cluster_id")
-    val kind =
-      if (batchBound == Int.MaxValue) "audio" else audioPriorKind(batchBound)
-    merged.coalesce(1).write.mode("overwrite")
-      .parquet(DedupQueries.clusterModelPath(dir, kind))
-    DedupQueries.releaseGeneration(merged)
-  }
-
-  /** Incremental audio clustering as an oracle-checked query — the
-    * audio twin of `q_media_clusters_incremental`: the src_num ≥ 10
-    * recordings arrive as the batch, the persisted "audio-lake" prior
-    * stands in for the compacted lake, and the DuckDB oracle recomputes
-    * the FULL closure independently — a green hash proves merge ≡ full
-    * retraining for this modality too. */
-  private def audioClustersIncremental(spark: SparkSession,
-      dir: String): DataFrame = {
-    val out = audioClustersIncrementalLabels(spark, dir)
-    val srcn = mediaSrcs(spark, dir).select(
-      col("media_id").as("doc_id"), col("src_num"))
-    out.join(srcn, "doc_id")
-      .select(col("doc_id").as("media_id"), col("cluster_id"),
-        when(col("src_num") >= 10, lit("batch"))
-          .when(col("cluster_id") =!= col("prior_id"), lit("merged"))
-          .otherwise(lit("stable")).as("status"))
-      .orderBy("media_id")
-  }
-
   private lazy val audioClustersIncrementalSql = s"""
     WITH $audioLabelCtes,
     asrcn AS (
@@ -919,32 +749,6 @@ object MultimodalQueries {
     JOIN asrcn s ON s.doc_id = m.media_id
     LEFT JOIN aklabels k ON k.doc_id = m.media_id
     ORDER BY m.media_id"""
-
-  private def audioClusterLabels(spark: SparkSession,
-      dir: String): DataFrame =
-    DedupQueries.persistedLabels(spark, dir, "audio")
-      .select(col("doc_id").as("media_id"), col("cluster_id"))
-
-  /** Connected components over the audio near-dup pair graph — the
-    * audio twin of `q_media_clusters`; the oracle re-derives the
-    * closure independently via the unrolled label CTEs. */
-  private def audioClusters(spark: SparkSession, dir: String): DataFrame =
-    audioClusterLabels(spark, dir).orderBy("media_id")
-
-  /** The audio-dedup end-product: keep the min-media_id representative
-    * per cluster, survivor accounting per source (recording count +
-    * samples retained). */
-  private def audioCanonical(spark: SparkSession, dir: String): DataFrame = {
-    val drops = audioClusterLabels(spark, dir)
-      .filter(col("media_id") =!= col("cluster_id"))
-      .select(col("media_id").as("doc_id"))
-    Tables(spark, dir, "documents")
-      .join(drops, Seq("doc_id"), "left_anti")
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_recordings"),
-        sum(lit(200) + col("doc_id") % 7 * 48).as("total_samples"))
-      .orderBy("source")
-  }
 
   /** Unrolled label-propagation chain ending in `alabels` — the audio
     * instance of [[DedupQueries.unrolledLabelCtes]]. */
@@ -968,41 +772,6 @@ object MultimodalQueries {
     WHERE doc_id NOT IN (SELECT media_id FROM adrops)
     GROUP BY source
     ORDER BY source"""
-
-  /** Energy threshold separating the sawtooth's active frames (~350k)
-    * from the dithered near-silent ones (≤ 1024): VAD with an order-of-
-    * magnitude margin on both sides. */
-  /** Incremental audio dedup — the batch-vs-lake shape for the audio
-    * modality, completing the per-modality incremental set (text,
-    * embeddings, image, audio): lake fingerprints come from the
-    * persisted index when it covers the corpus — the lake audio is
-    * never re-decoded — and only the batch's bands probe the band
-    * buckets, so candidate volume scales with the batch. Threshold
-    * Hamming ≤ 2, the audio family's exactness bound (3 effective
-    * bands — see [[audioNearDup]]'s doc). Kept/dropped accounting per
-    * source, plus surviving sample volume. */
-  private def audioIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val srcs = mediaSrcs(spark, dir)
-    val okb = okbOf(audioSigsDs(spark, dir).toDF()
-      .join(srcs.select("media_id", "src_num"), "media_id"))
-    val drops = okb.filter(col("src_num") >= 10).as("x").hint("SHUFFLE_HASH")
-      .join(okb.as("y").hint("SHUFFLE_HASH"),
-        col("x.b") === col("y.b") && col("x.v") === col("y.v") &&
-          col("x.media_id") =!= col("y.media_id") &&
-          (col("y.src_num") < 10 ||
-            col("y.media_id") < col("x.media_id")))
-      .filter(expr("bit_count(x.phash ^ y.phash) <= 2"))
-      .select(col("x.media_id").as("media_id")).distinct()
-    srcs.filter(col("src_num") >= 10)
-      .join(drops.withColumn("is_drop", lit(1L)), Seq("media_id"), "left")
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_batch"),
-        coalesce(sum("is_drop"), lit(0L)).as("n_dropped"),
-        sum(when(col("is_drop").isNull,
-          lit(200) + col("media_id") % 7 * 48).otherwise(lit(0L)))
-          .as("samples_kept"))
-      .orderBy("source")
-  }
 
   private lazy val audioIncrementalSql = s"""
     WITH $audioOkbCtes,
@@ -1029,6 +798,9 @@ object MultimodalQueries {
     GROUP BY source
     ORDER BY source"""
 
+  /** Energy threshold separating the sawtooth's active frames (~350k)
+    * from the dithered near-silent ones (≤ 1024): VAD with an order-of-
+    * magnitude margin on both sides. */
   private val AudioActiveThreshold = 10000L
 
   /** Voice-activity segmentation: contiguous runs of active frames
@@ -1086,18 +858,6 @@ object MultimodalQueries {
     * an order of magnitude of margin either side of 32. */
   private val SceneCutThreshold = 32
 
-  /** Video scene detection: synthetic per-frame luma tracks are encoded
-    * executor-side as framed blobs, the engine re-extracts each frame
-    * byte through the pure-Catalyst [[Multimodal.frameSample]] path, and
-    * CHANGE-POINT segmentation turns the frame stream into a scene
-    * table — lag-delta cut flags, then a running sum of cuts as the
-    * scene id (the temporal twin of gaps-and-islands; audio's
-    * [[audioSilence]] gates on a level, this cuts on a DERIVATIVE, the
-    * two canonical segmentation operators of a media pipeline). Windows
-    * are per media id, so no global sort exists at any corpus size; the
-    * shuffled rows are 3-column integers, never blobs. The oracle
-    * re-derives every luma analytically and mirrors the two-window
-    * composition. */
   /** Range-scoped synthetic video blobs — the video lake's ingest stage
     * and the scene index's append source. SINGLE SOURCE of the per-doc
     * frame-count formula (20 + doc_id % 11): the index's hash stage and
@@ -1141,8 +901,18 @@ object MultimodalQueries {
         sum(col("luma").cast("long")).as("luma_sum"))
   }
 
-  /** Video scene segmentation: per-video scene table (frame ranges +
-    * luma mass) from executor-side frame scanning of the blob. */
+  /** Video scene detection: synthetic per-frame luma tracks are encoded
+    * executor-side as framed blobs, the engine re-extracts each frame
+    * byte through the pure-Catalyst [[Multimodal.frameSample]] path, and
+    * CHANGE-POINT segmentation turns the frame stream into a scene
+    * table — lag-delta cut flags, then a running sum of cuts as the
+    * scene id (the temporal twin of gaps-and-islands; audio's
+    * [[audioSilence]] gates on a level, this cuts on a DERIVATIVE, the
+    * two canonical segmentation operators of a media pipeline). Windows
+    * are per media id, so no global sort exists at any corpus size; the
+    * shuffled rows are 3-column integers, never blobs. The oracle
+    * re-derives every luma analytically and mirrors the two-window
+    * composition. */
   private def videoScenes(spark: SparkSession, dir: String): DataFrame =
     videoSceneTableOf(videoBlobsRange(spark, dir, 0L, Long.MaxValue))
       .selectExpr("media_id AS doc_id", "scene_id", "start_f", "end_f",
@@ -1177,16 +947,6 @@ object MultimodalQueries {
     FROM s GROUP BY doc_id, scene_id
     ORDER BY doc_id, scene_id"""
 
-  // ==========================================================================
-  // Video signature index + near-dup + incremental — the fourth modality
-  // joins the triad (text shingles / image aHash / audio fingerprints /
-  // VIDEO scene signatures all now have: persisted SliceLadder artifact,
-  // batch-vs-lake incremental dedup, streaming ingest sink). The frame
-  // decode + scene segmentation is the expensive stage (petabytes of
-  // frames in, 8 bytes out per video) and runs exactly once per video,
-  // at ingest.
-  // ==========================================================================
-
   /** Scene-level video signature: a 63-bit fingerprint packed from the
     * CHANGE-POINT scene table ([[videoSceneTableOf]]) — the video twin
     * of [[audioFingerprints]]'s frame-feature packing. Bands 0-2 carry
@@ -1220,170 +980,6 @@ object MultimodalQueries {
         """p012 + shiftleft((n_tot % 128) * 256 + (l_tot div 4) % 256, 48)
            AS phash""")
 
-  private[graft] def videoSigBase(dir: String): String = sigBase(dir, "vsc63")
-
-  private[graft] def videoSigIndex(dir: String): graft.sources.SliceLadder =
-    new graft.sources.SliceLadder(videoSigBase(dir), "video signature",
-      idCol = "media_id",
-      readSchema = "media_id BIGINT, phash BIGINT",
-      deriveRange = (spark, lo, hi) =>
-        videoFingerprints(videoSceneTableOf(
-          videoBlobsRange(spark, dir, lo, hi))),
-      deriveBatch = (_, batch) =>
-        videoFingerprints(videoSceneTableOf(
-          batch.select(col("media_id"), col("bytes")))))
-
-  // Video-index public surface (delegating; see SliceLadder for contracts)
-  private[graft] def videoSigLadder(spark: SparkSession,
-      dir: String): Seq[(Long, Long)] = videoSigIndex(dir).ladder(spark)
-  def videoSigBound(spark: SparkSession, dir: String): Option[Long] =
-    videoSigIndex(dir).bound(spark)
-  def videoSigTrained(spark: SparkSession, dir: String): Boolean =
-    videoSigIndex(dir).trained(spark)
-  def dropVideoSigIndex(spark: SparkSession, dir: String): Unit =
-    videoSigIndex(dir).drop(spark)
-  def appendVideoSigs(spark: SparkSession, dir: String,
-      batchBound: Long): Unit = videoSigIndex(dir).append(spark, batchBound)
-  def appendVideoSigBatch(spark: SparkSession, dir: String,
-      batch: DataFrame): Unit = videoSigIndex(dir).appendBatch(spark, batch)
-  def trainVideoSigIndex(spark: SparkSession, dir: String,
-      bound: Long = Long.MaxValue): Unit =
-    videoSigIndex(dir).train(spark, bound)
-  def compactVideoSigTiered(spark: SparkSession, dir: String,
-      minRun: Int = 4): Int = videoSigIndex(dir).compactTiered(spark, minRun)
-  private[graft] def videoSigsFromIndex(spark: SparkSession,
-      dir: String): DataFrame = videoSigIndex(dir).read(spark)
-
-  /** Video near-dup pairs — the fourth leg of the media-dedup matrix:
-    * scene-level [[videoFingerprints]] ride the SAME banded pigeonhole
-    * join as the image and audio sides ([[Multimodal.mediaNearDups]]).
-    * Threshold Hamming ≤ 2 with 4 REAL bands (see the signature doc):
-    * any qualifying pair shares ≥ 2 untouched bands, so candidate
-    * coverage is exact while EITHER shared band's bucket is under
-    * [[Multimodal.BandBucketCap]] — above it the drop is mirrored by
-    * the oracle, the same documented gate-invisible miss as the other
-    * modalities. Served from the persisted signature index when one
-    * fully covers the corpus (frames decoded once, at ingest); computed
-    * inline otherwise — bit-identical either way (pure integer function
-    * of the payload). Synthetic-lake note: exact-duplicate signatures
-    * need doc_id ≡ doc_id' (mod lcm(251, 11) = 2761), so all three SFs
-    * emit rows (500 docs → quantization-neighbor pairs; 5000 → whole
-    * duplicate classes). */
-  private def videoNearDup(spark: SparkSession, dir: String): DataFrame =
-    Multimodal.mediaNearDups(videoSigsDs(spark, dir), maxHamming = 2)
-      .orderBy("id_a", "id_b")
-
-  /** The video signatures as a Dataset — from the persisted index when
-    * it covers the corpus (frames decoded once, at ingest), inline
-    * otherwise; bit-identical either way. */
-  private def videoSigsDs(spark: SparkSession, dir: String) = {
-    import spark.implicits._
-    (if (videoSigTrained(spark, dir)) videoSigsFromIndex(spark, dir)
-     else videoFingerprints(videoSceneTableOf(
-       videoBlobsRange(spark, dir, 0L, Long.MaxValue))))
-      .as[Multimodal.MediaSig]
-  }
-
-  /** Offline video-clustering setup (idempotent): persist the video
-    * cluster labels under [[DedupQueries.clusterModelPath]] kind
-    * "video" — the same trained-artifact pattern as the text and image
-    * labels, so the cluster-view queries are pure reads that fail
-    * fast. Trained over the signature artifact (frame decode not
-    * re-paid). */
-  def trainVideoClusterLabels(spark: SparkSession, dir: String): Unit = {
-    def pairs = Multimodal.mediaNearDups(videoSigsDs(spark, dir),
-        maxHamming = 2)
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-    DedupQueries.trainLabelArtifact(spark, dir, "video")(pairs)
-    // lake-side prior (src_num < 10) the incremental merge extends
-    DedupQueries.trainLabelArtifact(spark, dir, videoPriorKind(10)) {
-      val srcn = mediaSrcs(spark, dir).select("media_id", "src_num")
-      pairs
-        .join(srcn.select(col("media_id").as("doc_a"),
-          col("src_num").as("sa")), "doc_a")
-        .join(srcn.select(col("media_id").as("doc_b"),
-          col("src_num").as("sb")), "doc_b")
-        .filter(col("sa") < 10 && col("sb") < 10)
-        .select("doc_a", "doc_b")
-    }
-  }
-
-  private[graft] def videoPriorKind(lakeBound: Int): String =
-    if (lakeBound == 10) "video-lake" else s"video-lake-b$lakeBound"
-
-  /** Batch-touching video near-dup pairs (batch×batch + batch×lake,
-    * never lake×lake) — the video instance of the incremental pair
-    * stage, Hamming ≤ 2 like every other video view. */
-  private def videoPairsAmong(spark: SparkSession, dir: String,
-      lakeBound: Int, batchBound: Int): DataFrame = {
-    val srcn = mediaSrcs(spark, dir).select("media_id", "src_num")
-    val okb = okbOf(videoSigsDs(spark, dir).toDF().join(srcn, "media_id")
-      .filter(col("src_num") < batchBound))
-    val okbB = okb.filter(col("src_num") >= lakeBound)
-    val okbL = okb.filter(col("src_num") < lakeBound)
-    val bb = okbB.as("a").hint("SHUFFLE_HASH")
-      .join(okbB.as("c").hint("SHUFFLE_HASH"),
-        col("a.b") === col("c.b") && col("a.v") === col("c.v") &&
-          col("a.media_id") < col("c.media_id"))
-      .filter(expr("bit_count(a.phash ^ c.phash) <= 2"))
-      .select(col("a.media_id").as("doc_a"), col("c.media_id").as("doc_b"))
-    val bl = okbB.as("a").hint("SHUFFLE_HASH")
-      .join(okbL.as("c").hint("SHUFFLE_HASH"),
-        col("a.b") === col("c.b") && col("a.v") === col("c.v"))
-      .filter(expr("bit_count(a.phash ^ c.phash) <= 2"))
-      .select(least(col("a.media_id"), col("c.media_id")).as("doc_a"),
-        greatest(col("a.media_id"), col("c.media_id")).as("doc_b"))
-    bb.unionByName(bl).distinct()
-  }
-
-  private def videoClustersIncrementalLabels(spark: SparkSession,
-      dir: String, lakeBound: Int = 10,
-      batchBound: Int = Int.MaxValue): DataFrame =
-    DedupQueries.incrementalLabels(
-      DedupQueries.persistedLabels(spark, dir, videoPriorKind(lakeBound))
-        .select("doc_id", "cluster_id"),
-      videoPairsAmong(spark, dir, lakeBound, batchBound))
-
-  /** The video compaction step closing the modality's continual-ingest
-    * loop (ingest blobs → [[graft.streaming.StreamingPipeline
-    * .ingestVideoSink]] maintains the signature index → THIS merges the
-    * new videos' near-dup structure into the persisted cluster prior
-    * and advances it) — the video twin of
-    * [[compactMediaClusterLabels]], same boundary-space note. */
-  def compactVideoClusterLabels(spark: SparkSession, dir: String,
-      lakeBound: Int = 10, batchBound: Int = Int.MaxValue): Unit = {
-    require(batchBound > lakeBound,
-      s"compactVideoClusterLabels: batchBound $batchBound must exceed " +
-        s"lakeBound $lakeBound")
-    val merged = videoClustersIncrementalLabels(spark, dir, lakeBound,
-        batchBound)
-      .select("doc_id", "cluster_id")
-    val kind =
-      if (batchBound == Int.MaxValue) "video" else videoPriorKind(batchBound)
-    merged.coalesce(1).write.mode("overwrite")
-      .parquet(DedupQueries.clusterModelPath(dir, kind))
-    DedupQueries.releaseGeneration(merged)
-  }
-
-  /** Incremental video clustering as an oracle-checked query — the
-    * video twin of `q_media_clusters_incremental`: src_num ≥ 10 videos
-    * arrive as the batch, the persisted "video-lake" prior stands in
-    * for the compacted lake, and the DuckDB oracle recomputes the FULL
-    * closure independently — a green hash proves merge ≡ full
-    * retraining. */
-  private def videoClustersIncremental(spark: SparkSession,
-      dir: String): DataFrame = {
-    val out = videoClustersIncrementalLabels(spark, dir)
-    val srcn = mediaSrcs(spark, dir).select(
-      col("media_id").as("doc_id"), col("src_num"))
-    out.join(srcn, "doc_id")
-      .select(col("doc_id").as("media_id"), col("cluster_id"),
-        when(col("src_num") >= 10, lit("batch"))
-          .when(col("cluster_id") =!= col("prior_id"), lit("merged"))
-          .otherwise(lit("stable")).as("status"))
-      .orderBy("media_id")
-  }
-
   private lazy val videoClustersIncrementalSql = s"""
     WITH $videoLabelCtes,
     vsrcn AS (
@@ -1405,36 +1001,6 @@ object MultimodalQueries {
     JOIN vsrcn s ON s.doc_id = m.media_id
     LEFT JOIN vklabels k ON k.doc_id = m.media_id
     ORDER BY m.media_id"""
-
-  private def videoClusterLabels(spark: SparkSession,
-      dir: String): DataFrame =
-    DedupQueries.persistedLabels(spark, dir, "video")
-      .select(col("doc_id").as("media_id"), col("cluster_id"))
-
-  /** Connected components over the video near-dup pair graph — the
-    * video twin of `q_media_clusters`, off the shared min-label
-    * propagation and persisted as the same trained artifact; the
-    * oracle re-derives the closure independently (unrolled label CTEs
-    * over the analytically re-derived fingerprints), so a green hash
-    * certifies the offline training against DuckDB's own closure. */
-  private def videoClusters(spark: SparkSession, dir: String): DataFrame =
-    videoClusterLabels(spark, dir).orderBy("media_id")
-
-  /** The video-dedup end-product: keep the min-media_id representative
-    * of each near-dup cluster, with survivor accounting per source
-    * (video count + total frames retained) — the video twin of
-    * `q_media_canonical`, off the same shared clustering. */
-  private def videoCanonical(spark: SparkSession, dir: String): DataFrame = {
-    val drops = videoClusterLabels(spark, dir)
-      .filter(col("media_id") =!= col("cluster_id"))
-      .select(col("media_id").as("doc_id"))
-    Tables(spark, dir, "documents")
-      .join(drops, Seq("doc_id"), "left_anti")
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_videos"),
-        sum(lit(20) + col("doc_id") % 11).as("total_frames"))
-      .orderBy("source")
-  }
 
   /** Shared oracle CTE chain re-deriving the scene-level fingerprint
     * analytically from the synthetic luma formula (scene table exactly
@@ -1535,37 +1101,6 @@ object MultimodalQueries {
     WHERE doc_id NOT IN (SELECT media_id FROM vdrops)
     GROUP BY source
     ORDER BY source"""
-
-  /** Incremental video dedup — the batch-vs-lake shape for the video
-    * modality, completing the per-modality incremental set: lake
-    * signatures come from the persisted index when it covers the corpus
-    * (lake frames are never re-decoded) and only the batch's bands
-    * probe the band buckets, so candidate volume scales with the batch.
-    * Threshold Hamming ≤ 2 (exactness argument in [[videoNearDup]]).
-    * Kept/dropped accounting per source, plus surviving frame volume. */
-  private def videoIncremental(spark: SparkSession,
-      dir: String): DataFrame = {
-    val srcs = mediaSrcs(spark, dir)
-    val okb = okbOf(videoSigsDs(spark, dir).toDF()
-      .join(srcs.select("media_id", "src_num"), "media_id"))
-    val drops = okb.filter(col("src_num") >= 10).as("x").hint("SHUFFLE_HASH")
-      .join(okb.as("y").hint("SHUFFLE_HASH"),
-        col("x.b") === col("y.b") && col("x.v") === col("y.v") &&
-          col("x.media_id") =!= col("y.media_id") &&
-          (col("y.src_num") < 10 ||
-            col("y.media_id") < col("x.media_id")))
-      .filter(expr("bit_count(x.phash ^ y.phash) <= 2"))
-      .select(col("x.media_id").as("media_id")).distinct()
-    srcs.filter(col("src_num") >= 10)
-      .join(drops.withColumn("is_drop", lit(1L)), Seq("media_id"), "left")
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_batch"),
-        coalesce(sum("is_drop"), lit(0L)).as("n_dropped"),
-        sum(when(col("is_drop").isNull,
-          lit(20) + col("media_id") % 11).otherwise(lit(0L)))
-          .as("frames_kept"))
-      .orderBy("source")
-  }
 
   private lazy val videoIncrementalSql = s"""
     WITH $videoOkbCtes,
@@ -1709,7 +1244,7 @@ object MultimodalQueries {
       dir: String): DataFrame = {
     val tl = DedupQueries.persistedLabels(spark, dir, "text")
       .select(col("doc_id"), col("cluster_id").as("tc0"))
-    val il = mediaClusterLabels(spark, dir)
+    val il = Image.clusterLabels(spark, dir)
       .select(col("media_id").as("doc_id"), col("cluster_id").as("ic0"))
     Tables(spark, dir, "documents").select("doc_id", "source")
       .join(tl, Seq("doc_id"), "left")
@@ -1910,12 +1445,12 @@ object MultimodalQueries {
     ORDER BY source"""
 
   val all: Seq[QueryDef] = Seq(
-    QueryDef("q_media_neardup", mediaNearDup, Some(mediaNearDupSql)),
-    QueryDef("q_media_clusters", mediaClusters, Some(mediaClustersSql)),
-    QueryDef("q_media_canonical", mediaCanonical, Some(mediaCanonicalSql)),
-    QueryDef("q_media_incremental", mediaIncremental,
+    QueryDef("q_media_neardup", Image.nearDup, Some(mediaNearDupSql)),
+    QueryDef("q_media_clusters", Image.clusters, Some(mediaClustersSql)),
+    QueryDef("q_media_canonical", Image.canonical, Some(mediaCanonicalSql)),
+    QueryDef("q_media_incremental", Image.incremental,
       Some(mediaIncrementalSql)),
-    QueryDef("q_media_clusters_incremental", mediaClustersIncremental,
+    QueryDef("q_media_clusters_incremental", Image.clustersIncremental,
       Some(mediaClustersIncrementalSql)),
     QueryDef("q_multimodal_meta", multimodalMeta, Some("""
       SELECT doc_id, TRUE AS is_valid,
@@ -1927,22 +1462,22 @@ object MultimodalQueries {
     QueryDef("q_media_phash", mediaPhash, Some(mediaPhashSql)),
     QueryDef("q_media_resize", mediaResize, Some(mediaResizeSql)),
     QueryDef("q_audio_frames", audioFrames, Some(audioFramesSql)),
-    QueryDef("q_audio_neardup", audioNearDup, Some(audioNearDupSql)),
-    QueryDef("q_audio_incremental", audioIncremental,
+    QueryDef("q_audio_neardup", Audio.nearDup, Some(audioNearDupSql)),
+    QueryDef("q_audio_incremental", Audio.incremental,
       Some(audioIncrementalSql)),
-    QueryDef("q_audio_clusters", audioClusters, Some(audioClustersSql)),
-    QueryDef("q_audio_canonical", audioCanonical,
+    QueryDef("q_audio_clusters", Audio.clusters, Some(audioClustersSql)),
+    QueryDef("q_audio_canonical", Audio.canonical,
       Some(audioCanonicalSql)),
     QueryDef("q_audio_segments", audioSilence, Some(audioSilenceSql)),
     QueryDef("q_video_scenes", videoScenes, Some(videoScenesSql)),
-    QueryDef("q_video_neardup", videoNearDup, Some(videoNearDupSql)),
-    QueryDef("q_video_incremental", videoIncremental,
+    QueryDef("q_video_neardup", Video.nearDup, Some(videoNearDupSql)),
+    QueryDef("q_video_incremental", Video.incremental,
       Some(videoIncrementalSql)),
-    QueryDef("q_video_clusters", videoClusters, Some(videoClustersSql)),
-    QueryDef("q_video_canonical", videoCanonical, Some(videoCanonicalSql)),
-    QueryDef("q_audio_clusters_incremental", audioClustersIncremental,
+    QueryDef("q_video_clusters", Video.clusters, Some(videoClustersSql)),
+    QueryDef("q_video_canonical", Video.canonical, Some(videoCanonicalSql)),
+    QueryDef("q_audio_clusters_incremental", Audio.clustersIncremental,
       Some(audioClustersIncrementalSql)),
-    QueryDef("q_video_clusters_incremental", videoClustersIncremental,
+    QueryDef("q_video_clusters_incremental", Video.clustersIncremental,
       Some(videoClustersIncrementalSql)),
     QueryDef("q_caption_conflicts", captionConflicts,
       Some(captionConflictsSql)),

@@ -477,12 +477,9 @@ object SimilarityQueries {
     * model ("v2" = spherical k-means, first-K init, 3 Lloyd iterations).
     * Keyed on a hash of the ABSOLUTE dir (basename kept for readability):
     * two lakes sharing a basename must not share a model. */
-  def ivfModelPath(dir: String): String = {
-    val abs = new java.io.File(dir).getAbsolutePath
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    s"/root/repo/target/ivf/v2-nl$NCENTROIDS/${new java.io.File(dir).getName}-$tag/centroids.parquet"
-  }
+  def ivfModelPath(dir: String): String =
+    graft.sources.Artifacts.path("ivf", s"v2-nl$NCENTROIDS", dir) +
+      "/centroids.parquet"
 
   /** True iff a COMPLETE trained model exists for `dir` — the `_SUCCESS`
     * marker, not the directory, is the witness (a killed mid-overwrite
@@ -637,12 +634,8 @@ object SimilarityQueries {
     * readers). The slice rows carry the raw vector so within-list
     * ranking stays exact; at 100 TB they would carry PQ codes
     * ([[trainPqCodebooks]]) with a budgeted exact re-rank on top. */
-  private[graft] def ivfAssignBase(dir: String): String = {
-    val abs = new java.io.File(dir).getAbsolutePath
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    s"/root/repo/target/ivf-assign/v1-m2-nl$NCENTROIDS/${new java.io.File(dir).getName}-$tag"
-  }
+  private[graft] def ivfAssignBase(dir: String): String =
+    graft.sources.Artifacts.path("ivf-assign", s"v1-m2-nl$NCENTROIDS", dir)
   /** The inverted file's slice-ladder mechanics (paths, atomic marker
     * commit, replay guard, writer locking) are
     * [[graft.sources.SliceLadder]]'s — this instance supplies only the
@@ -927,12 +920,8 @@ object SimilarityQueries {
   /** Trained-PQ-codebook location, same keying discipline as
     * [[ivfModelPath]] ("v1" = L2 k-means per subspace, first-K init,
     * 3 Lloyd iterations). */
-  def pqModelPath(dir: String): String = {
-    val abs = new java.io.File(dir).getAbsolutePath
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    s"/root/repo/target/pq/v1/${new java.io.File(dir).getName}-$tag/codebooks.parquet"
-  }
+  def pqModelPath(dir: String): String =
+    graft.sources.Artifacts.path("pq", "v1", dir) + "/codebooks.parquet"
 
   def pqModelTrained(spark: SparkSession, dir: String): Boolean =
     graft.sources.Connectors.pathExists(spark,

@@ -273,12 +273,8 @@ object TextQueries {
   /** Where the trained BPE merge table for a lake dir persists. Versioned
     * so a training-code change can't silently reuse a stale model; keyed
     * on a hash of the ABSOLUTE dir (basename kept for readability). */
-  def bpeModelPath(dir: String): String = {
-    val abs = new java.io.File(dir).getAbsolutePath
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    s"/root/repo/target/bpe/v1/${new java.io.File(dir).getName}-$tag/merges.parquet"
-  }
+  def bpeModelPath(dir: String): String =
+    graft.sources.Artifacts.path("bpe", "v1", dir) + "/merges.parquet"
 
   /** True iff a COMPLETE trained merge table exists for `dir` (the
     * `_SUCCESS` marker is the witness, not the directory). */
@@ -535,12 +531,8 @@ object TextQueries {
 
   /** Where the trained unigram piece table for a lake dir persists —
     * versioned and dir-hash-keyed exactly like [[bpeModelPath]]. */
-  def unigramModelPath(dir: String): String = {
-    val abs = new java.io.File(dir).getAbsolutePath
-    val tag = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    s"/root/repo/target/unigram/v1/${new java.io.File(dir).getName}-$tag/pieces.parquet"
-  }
+  def unigramModelPath(dir: String): String =
+    graft.sources.Artifacts.path("unigram", "v1", dir) + "/pieces.parquet"
 
   def unigramModelTrained(spark: SparkSession, dir: String): Boolean =
     graft.sources.Connectors.pathExists(spark,

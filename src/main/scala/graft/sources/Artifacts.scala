@@ -35,17 +35,31 @@ object Artifacts {
     Artifact("unigram_pieces", "documents", T.trainUnigramPieces),
     Artifact("text_cluster_labels", "documents", D.trainClusterLabels),
     Artifact("audio_sig_index", "documents",
-      M.trainAudioSigIndex(_, _), Some(M.audioSigIndex)),
+      (s, d) => M.Audio.index(d).train(s), Some(M.Audio.index)),
     Artifact("video_sig_index", "documents",
-      M.trainVideoSigIndex(_, _), Some(M.videoSigIndex)),
+      (s, d) => M.Video.index(d).train(s), Some(M.Video.index)),
     Artifact("image_sig_index", "documents",
-      M.trainMediaSigIndex(_, _), Some(M.mediaSigIndex)),
+      (s, d) => M.Image.index(d).train(s), Some(M.Image.index)),
     Artifact("image_cluster_labels", "documents",
-      M.trainMediaClusterLabels),
+      M.Image.trainClusterLabels),
     Artifact("video_cluster_labels", "documents",
-      M.trainVideoClusterLabels),
+      M.Video.trainClusterLabels),
     Artifact("audio_cluster_labels", "documents",
-      M.trainAudioClusterLabels))
+      M.Audio.trainClusterLabels))
+
+  /** Where `kind`'s artifact for lake `dir` lives, at scheme `version`
+    * (bumped when the training code changes, so a stale artifact is
+    * never reused): `/root/repo/target/<kind>/<version>/<name>-<tag>`.
+    * The tag is the first 8 hex digits of the MD5 of the ABSOLUTE dir,
+    * so two lakes that share a basename never share an artifact; the
+    * basename is kept for readability. Callers append their file name. */
+  def path(kind: String, version: String, dir: String): String = {
+    val f = new java.io.File(dir)
+    val tag = java.security.MessageDigest.getInstance("MD5")
+      .digest(f.getAbsolutePath.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(8)
+    s"/root/repo/target/$kind/$version/${f.getName}-$tag"
+  }
 
   /** Train every artifact whose source table exists in `dir` — a
     * documents-only corpus gets the documents-derived artifacts and no

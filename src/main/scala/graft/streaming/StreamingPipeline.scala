@@ -392,6 +392,20 @@ object StreamingPipeline {
     q.awaitTermination()
   }
 
+  /** The one micro-batch sink body every ingest pipeline shares: drain
+    * what is available (AvailableNow) and hand each micro-batch to
+    * `append`. `foreachBatch` is at-least-once, so `append` must be
+    * idempotent over a replayed batch — the Structured Streaming
+    * contract (exactly-once output from an idempotent sink over a
+    * replayable source) that every ladder append meets with its replay
+    * guard ([[graft.sources.SliceLadder.appendBatch]]). */
+  def batchSink(src: DataFrame)(append: DataFrame => Unit):
+      DataStreamWriter[org.apache.spark.sql.Row] =
+    src.writeStream
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, _: Long) => append(batch) }
+
   /** Continual-ingest sink for the VECTOR modality — the embedding-side
     * twin of [[assignClusters]]'s doc-ingest loop: each micro-batch of
     * arriving (vec_id, v) embeddings is assigned against the frozen
@@ -400,18 +414,12 @@ object StreamingPipeline {
     * ([[graft.queries.DedupQueries]] `q_semdedup_incremental`,
     * `q_ann_ivf`) read an index that is maintained BY the stream, never
     * rebuilt from the lake. Replay-safe: already-covered vec_ids are
-    * dropped inside the append (foreachBatch is at-least-once), so a
-    * restarted query re-commits nothing — see
-    * [[graft.queries.SimilarityQueries.appendAssignedBatch]]. */
+    * dropped inside the append, so a restarted query re-commits nothing
+    * — see [[graft.queries.SimilarityQueries.appendAssignedBatch]]. */
   def ingestVectorsSink(src: DataFrame, dir: String):
       DataStreamWriter[org.apache.spark.sql.Row] =
-    src.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.queries.SimilarityQueries.appendAssignedBatch(
-          batch.sparkSession, dir, batch)
-      }
+    batchSink(src)(batch => graft.queries.SimilarityQueries
+      .appendAssignedBatch(batch.sparkSession, dir, batch))
 
   /** STREAMING cluster assignment for the IMAGE modality — the image
     * twin of [[assignClusters]], completing the ingest → assign →
@@ -483,84 +491,33 @@ object StreamingPipeline {
         col("m.lake_id").as("matched_id"), col("m.hamming").as("hamming"))
   }
 
-  /** Continual-ingest sink for the IMAGE modality — the third leg of
-    * the per-modality ingest triad (documents → shingle index, vectors
-    * → IVF inverted file, images → signature index): each micro-batch
-    * of arriving (media_id, bytes) blobs is decoded and aHashed
-    * executor-side and committed as the next slice of the persisted
-    * signature index, so the pixel decode — the most expensive stage in
-    * the media pipeline — runs exactly once per image, at ingest, and
-    * every near-dup/cluster/canonical stage reads 8-byte signatures
-    * instead of refetching pixels. Replay-safe: already-covered
-    * media_ids are dropped inside the append (foreachBatch is
-    * at-least-once) — see
-    * [[graft.queries.MultimodalQueries.appendMediaSigBatch]]. */
-  def ingestMediaSink(src: DataFrame, dir: String):
+  /** Continual-ingest sink for a MEDIA modality (images, audio, video):
+    * each micro-batch of arriving (media_id, bytes) blobs is decoded and
+    * hashed executor-side and committed as the next slice of the
+    * modality's persisted signature index, so the payload decode — the
+    * most expensive stage in the media pipeline — runs exactly once per
+    * item, at ingest, and every near-dup/cluster/canonical stage reads
+    * 8-byte signatures instead of refetching payloads. Replay-safe:
+    * already-covered media_ids are dropped inside the append. */
+  def ingestMediaSink(src: DataFrame, dir: String,
+      modality: graft.queries.MultimodalQueries.MediaModality):
       DataStreamWriter[org.apache.spark.sql.Row] =
-    src.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.queries.MultimodalQueries.appendMediaSigBatch(
-          batch.sparkSession, dir, batch)
-      }
+    batchSink(src)(batch =>
+      modality.index(dir).appendBatch(batch.sparkSession, batch))
 
-  /** Continual-ingest sink for the AUDIO modality: each micro-batch of
-    * arriving (media_id, bytes) PCM blobs is framed, fingerprinted
-    * (pure-Catalyst decode — the whole hash stays in codegen) and
-    * committed as the next slice of the persisted fingerprint index.
-    * Same replay contract as the image and vector sinks — see
-    * [[graft.queries.MultimodalQueries.appendAudioSigBatch]]. */
-  def ingestAudioSink(src: DataFrame, dir: String):
-      DataStreamWriter[org.apache.spark.sql.Row] =
-    src.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.queries.MultimodalQueries.appendAudioSigBatch(
-          batch.sparkSession, dir, batch)
-      }
-
-  /** Continual-ingest sink for the VIDEO modality: each micro-batch of
-    * arriving (media_id, bytes) framed video blobs is scene-segmented
-    * (pure-Catalyst frame extraction + per-id change-point windows) and
-    * its scene-level signature committed as the next slice of the
-    * persisted video signature index — frames are decoded exactly once,
-    * at ingest, and every near-dup/incremental stage downstream reads
-    * 8-byte signatures. Same replay contract as the other sinks — see
-    * [[graft.queries.MultimodalQueries.appendVideoSigBatch]]. */
-  def ingestVideoSink(src: DataFrame, dir: String):
-      DataStreamWriter[org.apache.spark.sql.Row] =
-    src.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.queries.MultimodalQueries.appendVideoSigBatch(
-          batch.sparkSession, dir, batch)
-      }
-
-  /** Continual-ingest sink for the TEXT modality — the fourth leg of
-    * the per-modality ingest set (vectors → IVF inverted file, images →
-    * signature index, audio → fingerprint index, documents → SHINGLE
+  /** Continual-ingest sink for the TEXT modality (documents → SHINGLE
     * INDEX): each micro-batch of arriving (doc_id, source, text)
     * documents is shingled executor-side and committed as the next
     * slice of the persisted shingle index, census merge included, so
     * the corpus tokenize+hash pass — the expensive stage every dedup /
     * decontamination query reads — runs exactly once per document, at
-    * ingest. Until now the text index was appended only by the batch
-    * compaction loop; this sink closes the symmetry gap. Replay-safe
-    * under the same guarded dense-monotone contract as the other three
-    * sinks, plus the text-specific source-atomic batch contract — see
-    * [[graft.queries.DedupQueries.appendShingleBatch]]. */
+    * ingest. Replay-safe under the same guarded dense-monotone contract
+    * as the other sinks, plus the text-specific source-atomic batch
+    * contract — see [[graft.queries.DedupQueries.appendShingleBatch]]. */
   def ingestDocsSink(src: DataFrame, dir: String):
       DataStreamWriter[org.apache.spark.sql.Row] =
-    src.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.queries.DedupQueries.appendShingleBatch(
-          batch.sparkSession, dir, batch)
-      }
+    batchSink(src)(batch => graft.queries.DedupQueries
+      .appendShingleBatch(batch.sparkSession, dir, batch))
 
   /** Insert-if-absent sink: per micro-batch, left-anti the batch against
     * the existing keys then append — A15's ON CONFLICT DO NOTHING for an
@@ -568,10 +525,6 @@ object StreamingPipeline {
     * across batches are also suppressed. */
   def upsertSink(src: DataFrame, keys: Seq[String], targetPath: String):
       DataStreamWriter[org.apache.spark.sql.Row] =
-    src.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.Connectors.upsertParquet(batch, keys, targetPath)
-      }
+    batchSink(src)(graft.sources.Connectors.upsertParquet(_, keys,
+      targetPath))
 }

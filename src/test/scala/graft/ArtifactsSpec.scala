@@ -64,6 +64,35 @@ class ArtifactsSpec extends SparkSpec {
     MultimodalQueries.clearMediaSigCache()
   }
 
+  test("artifact paths are byte-identical to the ones already on disk") {
+    // artifacts trained by earlier builds stay valid only while every
+    // path function keeps its exact string: root, kind, version, the
+    // lake's basename and the 8-hex MD5 tag of its absolute path
+    val d = "/root/testdata/sf0.001"
+    val paths = Seq(
+      DedupQueries.shingleIndexBase(d) ->
+        "/root/repo/target/shingles/v2-df1000/sf0.001-a1e8d12c",
+      DedupQueries.clusterModelPath(d, "media") ->
+        "/root/repo/target/clusters/v1/sf0.001-a1e8d12c/labels-media.parquet",
+      SimilarityQueries.ivfModelPath(d) ->
+        "/root/repo/target/ivf/v2-nl16/sf0.001-a1e8d12c/centroids.parquet",
+      SimilarityQueries.ivfAssignBase(d) ->
+        "/root/repo/target/ivf-assign/v1-m2-nl16/sf0.001-a1e8d12c",
+      SimilarityQueries.pqModelPath(d) ->
+        "/root/repo/target/pq/v1/sf0.001-a1e8d12c/codebooks.parquet",
+      TextQueries.bpeModelPath(d) ->
+        "/root/repo/target/bpe/v1/sf0.001-a1e8d12c/merges.parquet",
+      TextQueries.unigramModelPath(d) ->
+        "/root/repo/target/unigram/v1/sf0.001-a1e8d12c/pieces.parquet",
+      MultimodalQueries.Image.index(d).base ->
+        "/root/repo/target/media-sigs/v1-a1/sf0.001-a1e8d12c",
+      MultimodalQueries.Audio.index(d).base ->
+        "/root/repo/target/media-sigs/v1-fp48/sf0.001-a1e8d12c",
+      MultimodalQueries.Video.index(d).base ->
+        "/root/repo/target/media-sigs/v1-vsc63/sf0.001-a1e8d12c")
+    paths.foreach { case (got, want) => assert(got == want) }
+  }
+
   test("every non-ladder row has a witness in this spec") {
     assert(Artifacts.all.filter(_.ladder.isEmpty).map(_.name).toSet ==
       witness("x").keySet)

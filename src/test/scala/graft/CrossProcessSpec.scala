@@ -19,7 +19,7 @@ import graft.sources.Maintenance
   * production `Maintenance.runAll` — the shingle kind also races the
   * census/watermark side-artifact gc, the path where the round-17
   * in-flight-write bug had a second copy. */
-class CrossProcessSpec extends SparkSpec {
+class CrossProcessSpec extends SparkSpec with TempLakes {
 
   /** Fork `graft.XpChild args…` as a real second JVM: same java, same
     * classpath, and the module opens Spark needs on JDK 17+ (copied
@@ -147,13 +147,7 @@ class CrossProcessSpec extends SparkSpec {
     // a private lake dir (copies of the sf0.001 tables) so the raced
     // artifacts — keyed by the dir's absolute path — never collide with
     // other suites' sf0.001 artifacts in this shared JVM
-    val dir = java.nio.file.Files.createTempDirectory("graft_xp_lake")
-      .toString
-    Seq("documents", "embeddings").foreach { t =>
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"/root/testdata/sf0.001/$t.parquet"),
-        java.nio.file.Paths.get(s"$dir/$t.parquet"))
-    }
+    val dir = tempLakeOf("graft_xp_lake", "documents", "embeddings")
     val IntFull = Int.MaxValue.toLong
     // (kind, train-at-first-bound, child bounds, sentinel, bound, read,
     //  drop, rebuild-at-sentinel); one raced run per artifact kind — the
@@ -184,29 +178,29 @@ class CrossProcessSpec extends SparkSpec {
         () => SimilarityQueries.dropIvfAssignments(spark, dir),
         () => SimilarityQueries.trainIvfAssignments(spark, dir)),
       Kind("image",
-        () => MultimodalQueries.trainMediaSigIndex(spark, dir, 150),
+        () => MultimodalQueries.Image.index(dir).train(spark, 150),
         Seq(300L, 400L, Long.MaxValue), Long.MaxValue,
-        () => MultimodalQueries.mediaSigBound(spark, dir),
-        () => MultimodalQueries.sigsFromIndex(spark, dir)
+        () => MultimodalQueries.Image.index(dir).bound(spark),
+        () => MultimodalQueries.Image.index(dir).read(spark)
           .collect().map(_.toString).sorted.toSeq,
-        () => MultimodalQueries.dropMediaSigIndex(spark, dir),
-        () => MultimodalQueries.trainMediaSigIndex(spark, dir)),
+        () => MultimodalQueries.Image.index(dir).drop(spark),
+        () => MultimodalQueries.Image.index(dir).train(spark)),
       Kind("audio",
-        () => MultimodalQueries.trainAudioSigIndex(spark, dir, 150),
+        () => MultimodalQueries.Audio.index(dir).train(spark, 150),
         Seq(300L, 400L, Long.MaxValue), Long.MaxValue,
-        () => MultimodalQueries.audioSigBound(spark, dir),
-        () => MultimodalQueries.audioSigsFromIndex(spark, dir)
+        () => MultimodalQueries.Audio.index(dir).bound(spark),
+        () => MultimodalQueries.Audio.index(dir).read(spark)
           .collect().map(_.toString).sorted.toSeq,
-        () => MultimodalQueries.dropAudioSigIndex(spark, dir),
-        () => MultimodalQueries.trainAudioSigIndex(spark, dir)),
+        () => MultimodalQueries.Audio.index(dir).drop(spark),
+        () => MultimodalQueries.Audio.index(dir).train(spark)),
       Kind("video",
-        () => MultimodalQueries.trainVideoSigIndex(spark, dir, 150),
+        () => MultimodalQueries.Video.index(dir).train(spark, 150),
         Seq(300L, 400L, Long.MaxValue), Long.MaxValue,
-        () => MultimodalQueries.videoSigBound(spark, dir),
-        () => MultimodalQueries.videoSigsFromIndex(spark, dir)
+        () => MultimodalQueries.Video.index(dir).bound(spark),
+        () => MultimodalQueries.Video.index(dir).read(spark)
           .collect().map(_.toString).sorted.toSeq,
-        () => MultimodalQueries.dropVideoSigIndex(spark, dir),
-        () => MultimodalQueries.trainVideoSigIndex(spark, dir)))
+        () => MultimodalQueries.Video.index(dir).drop(spark),
+        () => MultimodalQueries.Video.index(dir).train(spark)))
     kinds.foreach { k =>
       k.train()
       val child = forkChild(

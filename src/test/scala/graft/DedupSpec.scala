@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 /** Semantics checks for the near-dup family on constructed corpora where
   * ground truth is known exactly. */
-class DedupSpec extends SparkSpec {
+class DedupSpec extends SparkSpec with TempLakes {
 
   private def docs(rows: Seq[(Long, String)]) = {
     import spark.implicits._
@@ -295,7 +295,7 @@ class DedupSpec extends SparkSpec {
     // rows — but over it once the batch lands. The reader's anti-join
     // against the CURRENT census must drop the lake slice's
     // already-written rows too (the monotone-hot argument).
-    val dir = "/root/repo/target/tmp/capcross-lake"
+    val dir = ownLake("/root/repo/target/tmp/capcross-lake")
     val n = 600
     (0 until 2 * n).map { i =>
       (i.toLong, if (i < n) "src0" else "src10",
@@ -342,7 +342,7 @@ class DedupSpec extends SparkSpec {
     // compaction the merged slice still carries them, so the read must
     // stay exactly equal (the monotone-hot correction is read-time,
     // never baked into slice bytes).
-    val dir = "/root/repo/target/tmp/capcross-compactslices"
+    val dir = ownLake("/root/repo/target/tmp/capcross-compactslices")
     val n = 600
     (0 until 2 * n).map { i =>
       (i.toLong, if (i < n) "src0" else "src10",
@@ -382,7 +382,7 @@ class DedupSpec extends SparkSpec {
     // persisted prior cannot be un-merged, so the continual-ingest
     // compaction must FAIL VISIBLY instead of persisting a prior that
     // silently diverges from from-scratch retraining.
-    val dir = "/root/repo/target/tmp/capcross-compact"
+    val dir = ownLake("/root/repo/target/tmp/capcross-compact")
     val n = 600
     (0 until 2 * n).map { i =>
       (i.toLong, if (i < n) "src0" else "src10",
@@ -477,14 +477,14 @@ class DedupSpec extends SparkSpec {
     // the MEDIA compaction loop shares incrementalLabels' per-merge
     // checkpoints — hold it to the same no-growth bar
     import graft.queries.MultimodalQueries
-    MultimodalQueries.trainMediaSigIndex(spark, sf)
-    MultimodalQueries.trainMediaClusterLabels(spark, sf)
-    MultimodalQueries.compactMediaClusterLabels(spark, sf) // warm round
+    MultimodalQueries.Image.index(sf).train(spark)
+    MultimodalQueries.Image.trainClusterLabels(spark, sf)
+    MultimodalQueries.Image.compactClusterLabels(spark, sf) // warm round
     System.gc()
     Thread.sleep(200)
     val mediaBase = spark.sparkContext.getPersistentRDDs.keySet
     for (round <- 1 to 3) {
-      MultimodalQueries.compactMediaClusterLabels(spark, sf)
+      MultimodalQueries.Image.compactClusterLabels(spark, sf)
       val leaked = spark.sparkContext.getPersistentRDDs.keySet -- mediaBase
       assert(leaked.isEmpty,
         s"media round $round leaked ${leaked.size} storage blocks (RDD " +
@@ -704,8 +704,7 @@ class DedupSpec extends SparkSpec {
     // every twin is recovered as its source's best target at cosine 1.0.
     import spark.implicits._
     import graft.queries.{Registry, SimilarityQueries}
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_bitext_planted").toString
+    val dir = tempLake("graft_bitext_planted")
     def oneHot(d: Int): Seq[Float] =
       Seq.tabulate(64)(j => if (j == d) 1.0f else 0.0f)
     val rows =

@@ -14,19 +14,19 @@ class MaintenanceSpec extends SparkSpec {
     // (other modalities may or may not exist from earlier suites in the
     // shared JVM — runAll must handle both without this test caring)
     DedupQueries.dropShingleIndex(spark, dir)
-    MultimodalQueries.dropMediaSigIndex(spark, dir)
+    MultimodalQueries.Image.index(dir).drop(spark)
     DedupQueries.trainShingleIndex(spark, dir, 3)
     DedupQueries.appendShingleIndex(spark, dir, 5)
     DedupQueries.appendShingleIndex(spark, dir, 7)
     DedupQueries.appendShingleIndex(spark, dir, Int.MaxValue)
-    MultimodalQueries.trainMediaSigIndex(spark, dir, 300)
-    MultimodalQueries.appendMediaSigs(spark, dir, 600)
-    MultimodalQueries.appendMediaSigs(spark, dir, 800)
-    MultimodalQueries.appendMediaSigs(spark, dir, Long.MaxValue)
+    MultimodalQueries.Image.index(dir).train(spark, 300)
+    MultimodalQueries.Image.index(dir).append(spark, 600)
+    MultimodalQueries.Image.index(dir).append(spark, 800)
+    MultimodalQueries.Image.index(dir).append(spark, Long.MaxValue)
     assert(DedupQueries.shingleIndexLadder(spark, dir).size == 4)
     val shingleBefore = DedupQueries.shingleHashesFromIndex(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val mediaBefore = MultimodalQueries.sigsFromIndex(spark, dir)
+    val mediaBefore = MultimodalQueries.Image.index(dir).read(spark)
       .collect().map(_.toString).sorted.toSeq
     // ONE maintenance call over the whole lake dir
     val merges = Maintenance.runAll(spark, dir, graceMs = 0L, minRun = 2)
@@ -38,7 +38,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(DedupQueries.shingleHashesFromIndex(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       == shingleBefore)
-    assert(MultimodalQueries.sigsFromIndex(spark, dir)
+    assert(MultimodalQueries.Image.index(dir).read(spark)
       .collect().map(_.toString).sorted.toSeq == mediaBefore)
     // each leg compacts THEN gcs, and gc(grace 0) on the now-quiesced
     // artifact collects what that same call's compaction trashed — no
@@ -53,7 +53,7 @@ class MaintenanceSpec extends SparkSpec {
     // still safe end-to-end
     assert(Maintenance.runAll(spark, dir, graceMs = 0L, minRun = 2) == 0)
     DedupQueries.dropShingleIndex(spark, dir)
-    MultimodalQueries.dropMediaSigIndex(spark, dir)
+    MultimodalQueries.Image.index(dir).drop(spark)
   }
 
   test("crash fuzz: a random merge-path crash in any leg corrupts no artifact, blocks no other leg, stalls no ingest, and a clean re-run completes the maintenance") {
@@ -71,9 +71,9 @@ class MaintenanceSpec extends SparkSpec {
     def rebuildAll(): Unit = {
       DedupQueries.dropShingleIndex(spark, dir)
       SimilarityQueries.dropIvfAssignments(spark, dir)
-      MultimodalQueries.dropMediaSigIndex(spark, dir)
-      MultimodalQueries.dropAudioSigIndex(spark, dir)
-      MultimodalQueries.dropVideoSigIndex(spark, dir)
+      MultimodalQueries.Image.index(dir).drop(spark)
+      MultimodalQueries.Audio.index(dir).drop(spark)
+      MultimodalQueries.Video.index(dir).drop(spark)
       DedupQueries.trainShingleIndex(spark, dir, 3)
       DedupQueries.appendShingleIndex(spark, dir, 5)
       DedupQueries.appendShingleIndex(spark, dir, 7)
@@ -81,15 +81,15 @@ class MaintenanceSpec extends SparkSpec {
       SimilarityQueries.trainIvfAssignments(spark, dir, 150)
       SimilarityQueries.appendIvfAssignments(spark, dir, 300)
       SimilarityQueries.appendIvfAssignments(spark, dir, 400)
-      MultimodalQueries.trainMediaSigIndex(spark, dir, 150)
-      MultimodalQueries.appendMediaSigs(spark, dir, 300)
-      MultimodalQueries.appendMediaSigs(spark, dir, 400)
-      MultimodalQueries.trainAudioSigIndex(spark, dir, 150)
-      MultimodalQueries.appendAudioSigs(spark, dir, 300)
-      MultimodalQueries.appendAudioSigs(spark, dir, 400)
-      MultimodalQueries.trainVideoSigIndex(spark, dir, 150)
-      MultimodalQueries.appendVideoSigs(spark, dir, 300)
-      MultimodalQueries.appendVideoSigs(spark, dir, 400)
+      MultimodalQueries.Image.index(dir).train(spark, 150)
+      MultimodalQueries.Image.index(dir).append(spark, 300)
+      MultimodalQueries.Image.index(dir).append(spark, 400)
+      MultimodalQueries.Audio.index(dir).train(spark, 150)
+      MultimodalQueries.Audio.index(dir).append(spark, 300)
+      MultimodalQueries.Audio.index(dir).append(spark, 400)
+      MultimodalQueries.Video.index(dir).train(spark, 150)
+      MultimodalQueries.Video.index(dir).append(spark, 300)
+      MultimodalQueries.Video.index(dir).append(spark, 400)
     }
     def readAll(): Map[String, Seq[String]] = Map(
       "shingle index" -> DedupQueries.shingleHashesFromIndex(spark, dir)
@@ -97,12 +97,11 @@ class MaintenanceSpec extends SparkSpec {
       "IVF inverted file" -> SimilarityQueries
         .assignmentsFromIndex(spark, dir)
         .collect().map(_.toString).sorted.toSeq,
-      "image signature" -> MultimodalQueries.sigsFromIndex(spark, dir)
+      "image signature" -> MultimodalQueries.Image.index(dir).read(spark)
         .collect().map(_.toString).sorted.toSeq,
-      "audio fingerprint" -> MultimodalQueries
-        .audioSigsFromIndex(spark, dir)
+      "audio fingerprint" -> MultimodalQueries.Audio.index(dir).read(spark)
         .collect().map(_.toString).sorted.toSeq,
-      "video signature" -> MultimodalQueries.videoSigsFromIndex(spark, dir)
+      "video signature" -> MultimodalQueries.Video.index(dir).read(spark)
         .collect().map(_.toString).sorted.toSeq)
     try {
       // every leg gets crashed exactly once (a free-running victim pick
@@ -147,9 +146,9 @@ class MaintenanceSpec extends SparkSpec {
         // artifact advances to full coverage
         DedupQueries.appendShingleIndex(spark, dir, Int.MaxValue)
         SimilarityQueries.appendIvfAssignments(spark, dir, Long.MaxValue)
-        MultimodalQueries.appendMediaSigs(spark, dir, Long.MaxValue)
-        MultimodalQueries.appendAudioSigs(spark, dir, Long.MaxValue)
-        MultimodalQueries.appendVideoSigs(spark, dir, Long.MaxValue)
+        MultimodalQueries.Image.index(dir).append(spark, Long.MaxValue)
+        MultimodalQueries.Audio.index(dir).append(spark, Long.MaxValue)
+        MultimodalQueries.Video.index(dir).append(spark, Long.MaxValue)
         val full = readAll()
         assert(full.forall { case (k, v) => v.size >= ref(k).size },
           s"seed $seed: ingest after the crash lost rows")
@@ -167,9 +166,9 @@ class MaintenanceSpec extends SparkSpec {
       SliceLadder.failpoint = (_, _) => ()
       DedupQueries.dropShingleIndex(spark, dir)
       SimilarityQueries.dropIvfAssignments(spark, dir)
-      MultimodalQueries.dropMediaSigIndex(spark, dir)
-      MultimodalQueries.dropAudioSigIndex(spark, dir)
-      MultimodalQueries.dropVideoSigIndex(spark, dir)
+      MultimodalQueries.Image.index(dir).drop(spark)
+      MultimodalQueries.Audio.index(dir).drop(spark)
+      MultimodalQueries.Video.index(dir).drop(spark)
     }
   }
 }

@@ -327,13 +327,13 @@ class MediaSpec extends SparkSpec {
   test("compactMediaClusterLabels: incremental merge + overwrite equals from-scratch retraining") {
     import graft.queries.{DedupQueries, MultimodalQueries}
     val sf = "/root/testdata/sf0.001"
-    MultimodalQueries.trainMediaClusterLabels(spark, sf)
+    MultimodalQueries.Image.trainClusterLabels(spark, sf)
     val full = spark.read.parquet(DedupQueries.clusterModelPath(sf, "media"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // compact: merge the batch (src10+) into the "media-lake" prior and
     // OVERWRITE the full artifact — the image continual-ingest loop's
     // last leg
-    MultimodalQueries.compactMediaClusterLabels(spark, sf)
+    MultimodalQueries.Image.compactClusterLabels(spark, sf)
     val compacted = spark.read
       .parquet(DedupQueries.clusterModelPath(sf, "media"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -342,12 +342,11 @@ class MediaSpec extends SparkSpec {
         s"${(compacted -- full).take(5)} only-full=${(full -- compacted).take(5)}")
     // staged ladder: b10 → b15 → full must also equal from-scratch (the
     // b15 prior really is the refreshed lake for the second stage)
-    MultimodalQueries.compactMediaClusterLabels(spark, sf,
-      lakeBound = 10, batchBound = 15)
+    MultimodalQueries.Image.compactClusterLabels(spark, sf, lakeBound = 10, batchBound = 15)
     assert(DedupQueries.clusterModelTrained(spark, sf,
-      MultimodalQueries.mediaPriorKind(15)),
+      MultimodalQueries.Image.priorKind(15)),
       "stage-1 media compaction must persist the advanced b15 prior")
-    MultimodalQueries.compactMediaClusterLabels(spark, sf, lakeBound = 15)
+    MultimodalQueries.Image.compactClusterLabels(spark, sf, lakeBound = 15)
     val staged = spark.read
       .parquet(DedupQueries.clusterModelPath(sf, "media"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -356,8 +355,7 @@ class MediaSpec extends SparkSpec {
         s"${(staged -- full).take(5)} only-full=${(full -- staged).take(5)}")
     // a reversed boundary call must refuse, not mislabel a prior
     intercept[IllegalArgumentException] {
-      MultimodalQueries.compactMediaClusterLabels(spark, sf,
-        lakeBound = 15, batchBound = 12)
+      MultimodalQueries.Image.compactClusterLabels(spark, sf, lakeBound = 15, batchBound = 12)
     }
   }
 
@@ -366,8 +364,8 @@ class MediaSpec extends SparkSpec {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     val sf = "/root/testdata/sf0.001"
-    MultimodalQueries.trainMediaSigIndex(spark, sf)
-    MultimodalQueries.trainMediaClusterLabels(spark, sf)
+    MultimodalQueries.Image.index(sf).train(spark)
+    MultimodalQueries.Image.trainClusterLabels(spark, sf)
     val srcn = Tables(spark, sf, "documents")
       .select(col("doc_id").as("media_id"),
         expr("cast(substring(source, 4, 8) AS INT)").as("src_num"))
@@ -376,7 +374,7 @@ class MediaSpec extends SparkSpec {
     // filter exact), banding censused over the prefix, propagate.
     def scratch(bound: Int): Set[(Long, Long)] = {
       import spark.implicits._
-      val sigs = MultimodalQueries.sigsFromIndex(spark, sf)
+      val sigs = MultimodalQueries.Image.index(sf).read(spark)
         .join(srcn.filter(col("src_num") < bound), "media_id")
         .select("media_id", "phash").as[Multimodal.MediaSig]
       DedupQueries.clusterLabels(
@@ -394,18 +392,17 @@ class MediaSpec extends SparkSpec {
     for (ladder <- ladders) {
       var lake = 10
       for (b <- ladder) {
-        MultimodalQueries.compactMediaClusterLabels(spark, sf,
-          lakeBound = lake, batchBound = b)
+        MultimodalQueries.Image.compactClusterLabels(spark, sf, lakeBound = lake, batchBound = b)
         val prior = spark.read
           .parquet(DedupQueries.clusterModelPath(sf,
-            MultimodalQueries.mediaPriorKind(b)))
+            MultimodalQueries.Image.priorKind(b)))
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         assert(prior == scratch(b),
           s"ladder $ladder: compacted media prior at b$b diverged from " +
             "from-scratch clustering of the prefix corpus")
         lake = b
       }
-      MultimodalQueries.compactMediaClusterLabels(spark, sf, lakeBound = lake)
+      MultimodalQueries.Image.compactClusterLabels(spark, sf, lakeBound = lake)
       val staged = spark.read
         .parquet(DedupQueries.clusterModelPath(sf, "media"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -417,36 +414,36 @@ class MediaSpec extends SparkSpec {
   test("appended media-signature index equals from-scratch build across a multi-step ladder") {
     import graft.queries.MultimodalQueries
     val sf = "/root/testdata/sf0.001"
-    def snapshot() = MultimodalQueries.sigsFromIndex(spark, sf)
+    def snapshot() = MultimodalQueries.Image.index(sf).read(spark)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // the one-shot build is the reference
-    MultimodalQueries.dropMediaSigIndex(spark, sf)
-    MultimodalQueries.trainMediaSigIndex(spark, sf)
+    MultimodalQueries.Image.index(sf).drop(spark)
+    MultimodalQueries.Image.index(sf).train(spark)
     val expected = snapshot()
     assert(expected.nonEmpty)
     // rebuild as a 4-step ingest ladder
-    MultimodalQueries.dropMediaSigIndex(spark, sf)
-    MultimodalQueries.trainMediaSigIndex(spark, sf, bound = 10)
-    assert(MultimodalQueries.mediaSigBound(spark, sf) == Some(10L))
-    assert(!MultimodalQueries.mediaSigTrained(spark, sf),
+    MultimodalQueries.Image.index(sf).drop(spark)
+    MultimodalQueries.Image.index(sf).train(spark, bound = 10)
+    assert(MultimodalQueries.Image.index(sf).bound(spark) == Some(10L))
+    assert(!MultimodalQueries.Image.index(sf).trained(spark),
       "a mid-ladder index must NOT register as full coverage")
-    MultimodalQueries.appendMediaSigs(spark, sf, 14)
-    MultimodalQueries.appendMediaSigs(spark, sf, 18)
-    MultimodalQueries.appendMediaSigs(spark, sf, Long.MaxValue)
-    assert(MultimodalQueries.mediaSigTrained(spark, sf))
-    assert(MultimodalQueries.mediaSigLadder(spark, sf) ==
+    MultimodalQueries.Image.index(sf).append(spark, 14)
+    MultimodalQueries.Image.index(sf).append(spark, 18)
+    MultimodalQueries.Image.index(sf).append(spark, Long.MaxValue)
+    assert(MultimodalQueries.Image.index(sf).trained(spark))
+    assert(MultimodalQueries.Image.index(sf).ladder(spark) ==
       Seq((0L, 10L), (10L, 14L), (14L, 18L), (18L, Long.MaxValue)))
     val got = snapshot()
     assert(got == expected,
       s"appended index diverged from from-scratch: only-index=" +
         s"${(got -- expected).take(5)} only-scratch=${(expected -- got).take(5)}")
     // idempotence: re-appending at coverage and the default train are no-ops
-    MultimodalQueries.appendMediaSigs(spark, sf, Long.MaxValue)
-    MultimodalQueries.trainMediaSigIndex(spark, sf)
-    assert(MultimodalQueries.mediaSigLadder(spark, sf).size == 4)
+    MultimodalQueries.Image.index(sf).append(spark, Long.MaxValue)
+    MultimodalQueries.Image.index(sf).train(spark)
+    assert(MultimodalQueries.Image.index(sf).ladder(spark).size == 4)
     // shrinking coverage is a rebuild, never an append
     intercept[IllegalArgumentException] {
-      MultimodalQueries.appendMediaSigs(spark, sf, 12)
+      MultimodalQueries.Image.index(sf).append(spark, 12)
     }
     MultimodalQueries.clearMediaSigCache()
   }
@@ -454,26 +451,26 @@ class MediaSpec extends SparkSpec {
   test("appended audio-fingerprint index equals from-scratch build across a multi-step ladder") {
     import graft.queries.MultimodalQueries
     val sf = "/root/testdata/sf0.001"
-    def snapshot() = MultimodalQueries.audioSigsFromIndex(spark, sf)
+    def snapshot() = MultimodalQueries.Audio.index(sf).read(spark)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    MultimodalQueries.dropAudioSigIndex(spark, sf)
-    MultimodalQueries.trainAudioSigIndex(spark, sf)
+    MultimodalQueries.Audio.index(sf).drop(spark)
+    MultimodalQueries.Audio.index(sf).train(spark)
     val expected = snapshot()
     assert(expected.nonEmpty)
-    MultimodalQueries.dropAudioSigIndex(spark, sf)
-    MultimodalQueries.trainAudioSigIndex(spark, sf, bound = 12)
-    assert(MultimodalQueries.audioSigBound(spark, sf) == Some(12L))
-    assert(!MultimodalQueries.audioSigTrained(spark, sf))
-    MultimodalQueries.appendAudioSigs(spark, sf, 20)
-    MultimodalQueries.appendAudioSigs(spark, sf, Long.MaxValue)
-    assert(MultimodalQueries.audioSigTrained(spark, sf))
+    MultimodalQueries.Audio.index(sf).drop(spark)
+    MultimodalQueries.Audio.index(sf).train(spark, bound = 12)
+    assert(MultimodalQueries.Audio.index(sf).bound(spark) == Some(12L))
+    assert(!MultimodalQueries.Audio.index(sf).trained(spark))
+    MultimodalQueries.Audio.index(sf).append(spark, 20)
+    MultimodalQueries.Audio.index(sf).append(spark, Long.MaxValue)
+    assert(MultimodalQueries.Audio.index(sf).trained(spark))
     assert(snapshot() == expected,
       "appended audio index diverged from from-scratch")
     // idempotent re-train; reversed bound refuses
-    MultimodalQueries.trainAudioSigIndex(spark, sf)
-    assert(MultimodalQueries.audioSigLadder(spark, sf).size == 3)
+    MultimodalQueries.Audio.index(sf).train(spark)
+    assert(MultimodalQueries.Audio.index(sf).ladder(spark).size == 3)
     intercept[IllegalArgumentException] {
-      MultimodalQueries.appendAudioSigs(spark, sf, 5)
+      MultimodalQueries.Audio.index(sf).append(spark, 5)
     }
   }
 
@@ -511,38 +508,38 @@ class MediaSpec extends SparkSpec {
       intercept[IllegalArgumentException] { compact(15, 12) }
     }
     check("audio",
-      () => MultimodalQueries.trainAudioClusterLabels(spark, sf),
-      (lo, hi) => MultimodalQueries.compactAudioClusterLabels(spark, sf, lo, hi),
-      MultimodalQueries.audioPriorKind)
+      () => MultimodalQueries.Audio.trainClusterLabels(spark, sf),
+      (lo, hi) => MultimodalQueries.Audio.compactClusterLabels(spark, sf, lo, hi),
+      MultimodalQueries.Audio.priorKind)
     check("video",
-      () => MultimodalQueries.trainVideoClusterLabels(spark, sf),
-      (lo, hi) => MultimodalQueries.compactVideoClusterLabels(spark, sf, lo, hi),
-      MultimodalQueries.videoPriorKind)
+      () => MultimodalQueries.Video.trainClusterLabels(spark, sf),
+      (lo, hi) => MultimodalQueries.Video.compactClusterLabels(spark, sf, lo, hi),
+      MultimodalQueries.Video.priorKind)
   }
 
   test("appended video-signature index equals from-scratch build across a multi-step ladder") {
     import graft.queries.MultimodalQueries
     val sf = "/root/testdata/sf0.001"
-    def snapshot() = MultimodalQueries.videoSigsFromIndex(spark, sf)
+    def snapshot() = MultimodalQueries.Video.index(sf).read(spark)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    MultimodalQueries.dropVideoSigIndex(spark, sf)
-    MultimodalQueries.trainVideoSigIndex(spark, sf)
+    MultimodalQueries.Video.index(sf).drop(spark)
+    MultimodalQueries.Video.index(sf).train(spark)
     val expected = snapshot()
     assert(expected.nonEmpty)
-    MultimodalQueries.dropVideoSigIndex(spark, sf)
-    MultimodalQueries.trainVideoSigIndex(spark, sf, bound = 12)
-    assert(MultimodalQueries.videoSigBound(spark, sf) == Some(12L))
-    assert(!MultimodalQueries.videoSigTrained(spark, sf))
-    MultimodalQueries.appendVideoSigs(spark, sf, 20)
-    MultimodalQueries.appendVideoSigs(spark, sf, Long.MaxValue)
-    assert(MultimodalQueries.videoSigTrained(spark, sf))
+    MultimodalQueries.Video.index(sf).drop(spark)
+    MultimodalQueries.Video.index(sf).train(spark, bound = 12)
+    assert(MultimodalQueries.Video.index(sf).bound(spark) == Some(12L))
+    assert(!MultimodalQueries.Video.index(sf).trained(spark))
+    MultimodalQueries.Video.index(sf).append(spark, 20)
+    MultimodalQueries.Video.index(sf).append(spark, Long.MaxValue)
+    assert(MultimodalQueries.Video.index(sf).trained(spark))
     assert(snapshot() == expected,
       "appended video index diverged from from-scratch")
     // idempotent re-train; reversed bound refuses
-    MultimodalQueries.trainVideoSigIndex(spark, sf)
-    assert(MultimodalQueries.videoSigLadder(spark, sf).size == 3)
+    MultimodalQueries.Video.index(sf).train(spark)
+    assert(MultimodalQueries.Video.index(sf).ladder(spark).size == 3)
     intercept[IllegalArgumentException] {
-      MultimodalQueries.appendVideoSigs(spark, sf, 5)
+      MultimodalQueries.Video.index(sf).append(spark, 5)
     }
   }
 

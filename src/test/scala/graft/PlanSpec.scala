@@ -30,9 +30,9 @@ class PlanSpec extends SparkSpec {
     graft.queries.SimilarityQueries.trainIvfCentroids(spark, sf)
     graft.queries.SimilarityQueries.trainPqCodes(spark, sf)
     graft.queries.DedupQueries.trainClusterLabels(spark, sf)
-    graft.queries.MultimodalQueries.trainMediaClusterLabels(spark, sf)
-    graft.queries.MultimodalQueries.trainAudioClusterLabels(spark, sf)
-    graft.queries.MultimodalQueries.trainVideoClusterLabels(spark, sf)
+    graft.queries.MultimodalQueries.Image.trainClusterLabels(spark, sf)
+    graft.queries.MultimodalQueries.Audio.trainClusterLabels(spark, sf)
+    graft.queries.MultimodalQueries.Video.trainClusterLabels(spark, sf)
   }
 
   test("keep-last family plans have no Window: max_by hash aggregation") {
@@ -325,7 +325,7 @@ class PlanSpec extends SparkSpec {
     import graft.queries.MultimodalQueries
     // the index must fully cover the corpus for the cached read to be
     // index-backed (idempotent when an earlier suite already trained it)
-    MultimodalQueries.trainMediaSigIndex(spark, sf)
+    MultimodalQueries.Image.index(sf).train(spark)
     MultimodalQueries.clearMediaSigCache()
     val df = Registry.byName("q_media_incremental").fn(spark, sf)
     df.collect()
@@ -350,7 +350,7 @@ class PlanSpec extends SparkSpec {
 
   test("q_audio_incremental reads lake fingerprints from the persisted index; no cartesian") {
     import graft.queries.MultimodalQueries
-    MultimodalQueries.trainAudioSigIndex(spark, sf)
+    MultimodalQueries.Audio.index(sf).train(spark)
     val df = Registry.byName("q_audio_incremental").fn(spark, sf)
     df.collect()
     // lake audio is never re-decoded: fingerprints come from the
@@ -385,7 +385,7 @@ class PlanSpec extends SparkSpec {
 
   test("q_video_incremental reads lake signatures from the persisted index; no cartesian") {
     import graft.queries.MultimodalQueries
-    MultimodalQueries.trainVideoSigIndex(spark, sf)
+    MultimodalQueries.Video.index(sf).train(spark)
     val df = Registry.byName("q_video_incremental").fn(spark, sf)
     df.collect()
     // lake video is never re-segmented: scene signatures come from the
@@ -877,12 +877,12 @@ class PlanSpec extends SparkSpec {
       (id, graft.operators.Multimodal.synthPng(id, 16 + (id % 6).toInt * 8,
         16 + (id % 4).toInt * 8))
     }.toDF("media_id", "bytes")
-    MultimodalQueries.dropMediaSigIndex(spark, sf)
+    MultimodalQueries.Image.index(sf).drop(spark)
     assertOneQueryAppend("image", executionsOf {
-      MultimodalQueries.appendMediaSigBatch(spark, sf, batch)
+      MultimodalQueries.Image.index(sf).appendBatch(spark, batch)
     })
-    assert(MultimodalQueries.mediaSigBound(spark, sf) == Some(10L))
+    assert(MultimodalQueries.Image.index(sf).bound(spark) == Some(10L))
     // leave the full-coverage index the other tests read
-    MultimodalQueries.trainMediaSigIndex(spark, sf)
+    MultimodalQueries.Image.index(sf).train(spark)
   }
 }

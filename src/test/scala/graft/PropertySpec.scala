@@ -201,7 +201,7 @@ class PropertySpec extends SparkSpec {
     // queries the persisted label artifacts (idempotent trains)
     graft.queries.TextQueries.trainBpeMerges(spark, sf)
     graft.queries.DedupQueries.trainClusterLabels(spark, sf)
-    graft.queries.MultimodalQueries.trainMediaClusterLabels(spark, sf)
+    graft.queries.MultimodalQueries.Image.trainClusterLabels(spark, sf)
     // q_bitext_margin reads the persisted IVF inverted file
     graft.queries.SimilarityQueries.trainIvfCentroids(spark, sf)
     graft.queries.SimilarityQueries.trainIvfAssignments(spark, sf)

@@ -19,7 +19,7 @@ class RegistrySpec extends SparkSpec {
     graft.queries.TextQueries.trainBpeMerges(spark, sf)
     graft.queries.TextQueries.trainUnigramPieces(spark, sf)
     graft.queries.DedupQueries.trainClusterLabels(spark, sf)
-    graft.queries.MultimodalQueries.trainMediaClusterLabels(spark, sf)
+    graft.queries.MultimodalQueries.Image.trainClusterLabels(spark, sf)
   }
 
   test("query names are unique and non-empty") {

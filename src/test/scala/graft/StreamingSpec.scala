@@ -11,7 +11,7 @@ import graft.streaming.StreamingPipeline
 /** End-to-end Structured Streaming semantics with MemoryStream sources and
   * AvailableNow bounded drains — the reference's Kafka loops without a
   * broker (SURVEY.md §2.H). */
-class StreamingSpec extends SparkSpec {
+class StreamingSpec extends SparkSpec with TempLakes {
 
   private def ts(s: Long) = new Timestamp(s * 1000)
 
@@ -727,7 +727,9 @@ class StreamingSpec extends SparkSpec {
   test("source-atomic guard: a split source fails fast; a torn guard record degrades to a skipped window, never wedged ingest") {
     import spark.implicits._
     import graft.queries.DedupQueries
-    val dir = "/root/testdata/sf0.001"
+    // a private copy of the sf0.001 documents: the test garbles a guard
+    // record, which must never touch the shared lake's shingle index
+    val dir = tempLakeOf("graft_torn_guard", "documents")
     DedupQueries.dropShingleIndex(spark, dir)
     val docs = Tables(spark, dir, "documents")
       .selectExpr("doc_id", "source", "text",
@@ -934,12 +936,12 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.queries.MultimodalQueries
     val dir = "/root/testdata/sf0.001"
-    def snapshot() = MultimodalQueries.sigsFromIndex(spark, dir)
+    def snapshot() = MultimodalQueries.Image.index(dir).read(spark)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    MultimodalQueries.dropMediaSigIndex(spark, dir)
-    MultimodalQueries.trainMediaSigIndex(spark, dir)
+    MultimodalQueries.Image.index(dir).drop(spark)
+    MultimodalQueries.Image.index(dir).train(spark)
     val expected = snapshot()
-    MultimodalQueries.dropMediaSigIndex(spark, dir)
+    MultimodalQueries.Image.index(dir).drop(spark)
     // the stream carries REAL blob bytes (the crawler-fetch shape) —
     // synthesize them driver-side from the same dims the lake uses
     val rows = Tables(spark, dir, "documents")
@@ -954,32 +956,32 @@ class StreamingSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft_media_ingest").toString
     val mem = MemoryStream[(Long, Array[Byte])]
     def drain(): Unit =
-      StreamingPipeline.ingestMediaSink(
-          mem.toDF.toDF("media_id", "bytes"), dir)
+      StreamingPipeline.ingestMediaSink(mem.toDF.toDF("media_id", "bytes"), dir,
+        MultimodalQueries.Image)
         .option("checkpointLocation", ckpt).start().awaitTermination()
     mem.addData(first.toSeq)
     drain()
-    assert(MultimodalQueries.mediaSigBound(spark, dir)
+    assert(MultimodalQueries.Image.index(dir).bound(spark)
       == Some(first.last._1 + 1))
     mem.addData(rest.toSeq)
     drain()
-    assert(MultimodalQueries.mediaSigLadder(spark, dir).size == 2,
+    assert(MultimodalQueries.Image.index(dir).ladder(spark).size == 2,
       "each drained micro-batch must commit exactly one slice")
     // replay safety: a FRESH query (no checkpoint) re-delivers every
     // blob; the append drops already-covered ids and commits nothing
     val mem2 = MemoryStream[(Long, Array[Byte])]
     mem2.addData(rows.toSeq)
-    StreamingPipeline.ingestMediaSink(
-        mem2.toDF.toDF("media_id", "bytes"), dir)
+    StreamingPipeline.ingestMediaSink(mem2.toDF.toDF("media_id", "bytes"), dir,
+        MultimodalQueries.Image)
       .start().awaitTermination()
-    assert(MultimodalQueries.mediaSigLadder(spark, dir).size == 2,
+    assert(MultimodalQueries.Image.index(dir).ladder(spark).size == 2,
       "replayed blobs must not re-commit")
     // the stream-built index is row-for-row the offline one-shot build
     assert(snapshot() == expected)
     // sealing for full-corpus consumers writes an EMPTY top slice over
     // the already-streamed corpus — reads must survive it
-    MultimodalQueries.trainMediaSigIndex(spark, dir)
-    assert(MultimodalQueries.mediaSigTrained(spark, dir))
+    MultimodalQueries.Image.index(dir).train(spark)
+    assert(MultimodalQueries.Image.index(dir).trained(spark))
     assert(snapshot() == expected)
   }
 
@@ -989,12 +991,12 @@ class StreamingSpec extends SparkSpec {
     import graft.queries.MultimodalQueries
     import graft.operators.Multimodal
     val dir = "/root/testdata/sf0.001"
-    def snapshot() = MultimodalQueries.audioSigsFromIndex(spark, dir)
+    def snapshot() = MultimodalQueries.Audio.index(dir).read(spark)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    MultimodalQueries.dropAudioSigIndex(spark, dir)
-    MultimodalQueries.trainAudioSigIndex(spark, dir)
+    MultimodalQueries.Audio.index(dir).drop(spark)
+    MultimodalQueries.Audio.index(dir).train(spark)
     val expected = snapshot()
-    MultimodalQueries.dropAudioSigIndex(spark, dir)
+    MultimodalQueries.Audio.index(dir).drop(spark)
     // the stream carries the same framed PCM blobs the lake generates
     val rows = Tables(spark, dir, "documents")
       .selectExpr("doc_id", "cast(200 + (doc_id % 7) * 48 AS INT) AS n")
@@ -1003,23 +1005,24 @@ class StreamingSpec extends SparkSpec {
     mem.addData(rows.toSeq)
     val blobs = Multimodal.encodeSynthPcmPartitioned(
       mem.toDF.toDF("doc_id", "n"), "doc_id", "n")
-    StreamingPipeline.ingestAudioSink(blobs, dir).start().awaitTermination()
-    assert(MultimodalQueries.audioSigTrained(spark, dir) ||
-      MultimodalQueries.audioSigBound(spark, dir) == Some(rows.last._1 + 1))
+    StreamingPipeline.ingestMediaSink(blobs, dir,
+        MultimodalQueries.Audio).start().awaitTermination()
+    assert(MultimodalQueries.Audio.index(dir).trained(spark) ||
+      MultimodalQueries.Audio.index(dir).bound(spark) == Some(rows.last._1 + 1))
     assert(snapshot() == expected,
       "stream-built audio index diverged from the offline build")
     // replaying the whole corpus against the committed index is a no-op
-    val before = MultimodalQueries.audioSigLadder(spark, dir)
+    val before = MultimodalQueries.Audio.index(dir).ladder(spark)
     val mem2 = MemoryStream[(Long, Int)]
     mem2.addData(rows.toSeq)
-    StreamingPipeline.ingestAudioSink(
-      Multimodal.encodeSynthPcmPartitioned(
-        mem2.toDF.toDF("doc_id", "n"), "doc_id", "n"), dir)
+    StreamingPipeline.ingestMediaSink(Multimodal.encodeSynthPcmPartitioned(
+        mem2.toDF.toDF("doc_id", "n"), "doc_id", "n"), dir,
+        MultimodalQueries.Audio)
       .start().awaitTermination()
-    assert(MultimodalQueries.audioSigLadder(spark, dir) == before,
+    assert(MultimodalQueries.Audio.index(dir).ladder(spark) == before,
       "replayed blobs must not re-commit")
     // seal for full-corpus consumers; reads survive the empty top slice
-    MultimodalQueries.trainAudioSigIndex(spark, dir)
+    MultimodalQueries.Audio.index(dir).train(spark)
     assert(snapshot() == expected)
   }
 
@@ -1029,12 +1032,12 @@ class StreamingSpec extends SparkSpec {
     import graft.queries.MultimodalQueries
     import graft.operators.Multimodal
     val dir = "/root/testdata/sf0.001"
-    def snapshot() = MultimodalQueries.videoSigsFromIndex(spark, dir)
+    def snapshot() = MultimodalQueries.Video.index(dir).read(spark)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    MultimodalQueries.dropVideoSigIndex(spark, dir)
-    MultimodalQueries.trainVideoSigIndex(spark, dir)
+    MultimodalQueries.Video.index(dir).drop(spark)
+    MultimodalQueries.Video.index(dir).train(spark)
     val expected = snapshot()
-    MultimodalQueries.dropVideoSigIndex(spark, dir)
+    MultimodalQueries.Video.index(dir).drop(spark)
     // the stream carries the same framed video blobs the lake generates
     val rows = Tables(spark, dir, "documents")
       .selectExpr("doc_id", "cast(20 + doc_id % 11 AS INT) AS n")
@@ -1043,23 +1046,24 @@ class StreamingSpec extends SparkSpec {
     mem.addData(rows.toSeq)
     val blobs = Multimodal.encodeSynthVideoPartitioned(
       mem.toDF.toDF("doc_id", "n"), "doc_id", "n")
-    StreamingPipeline.ingestVideoSink(blobs, dir).start().awaitTermination()
-    assert(MultimodalQueries.videoSigTrained(spark, dir) ||
-      MultimodalQueries.videoSigBound(spark, dir) == Some(rows.last._1 + 1))
+    StreamingPipeline.ingestMediaSink(blobs, dir,
+        MultimodalQueries.Video).start().awaitTermination()
+    assert(MultimodalQueries.Video.index(dir).trained(spark) ||
+      MultimodalQueries.Video.index(dir).bound(spark) == Some(rows.last._1 + 1))
     assert(snapshot() == expected,
       "stream-built video index diverged from the offline build")
     // replaying the whole corpus against the committed index is a no-op
-    val before = MultimodalQueries.videoSigLadder(spark, dir)
+    val before = MultimodalQueries.Video.index(dir).ladder(spark)
     val mem2 = MemoryStream[(Long, Int)]
     mem2.addData(rows.toSeq)
-    StreamingPipeline.ingestVideoSink(
-      Multimodal.encodeSynthVideoPartitioned(
-        mem2.toDF.toDF("doc_id", "n"), "doc_id", "n"), dir)
+    StreamingPipeline.ingestMediaSink(Multimodal.encodeSynthVideoPartitioned(
+        mem2.toDF.toDF("doc_id", "n"), "doc_id", "n"), dir,
+        MultimodalQueries.Video)
       .start().awaitTermination()
-    assert(MultimodalQueries.videoSigLadder(spark, dir) == before,
+    assert(MultimodalQueries.Video.index(dir).ladder(spark) == before,
       "replayed blobs must not re-commit")
     // seal for full-corpus consumers; reads survive the empty top slice
-    MultimodalQueries.trainVideoSigIndex(spark, dir)
+    MultimodalQueries.Video.index(dir).train(spark)
     assert(snapshot() == expected)
   }
 
@@ -1073,12 +1077,12 @@ class StreamingSpec extends SparkSpec {
     // one artifact and the read stays row-for-row the offline build
     // while the ladder depth stays logarithmic in the batch count
     val dir = "/root/testdata/sf0.001"
-    def snapshot() = MultimodalQueries.videoSigsFromIndex(spark, dir)
+    def snapshot() = MultimodalQueries.Video.index(dir).read(spark)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    MultimodalQueries.dropVideoSigIndex(spark, dir)
-    MultimodalQueries.trainVideoSigIndex(spark, dir)
+    MultimodalQueries.Video.index(dir).drop(spark)
+    MultimodalQueries.Video.index(dir).train(spark)
     val expected = snapshot()
-    MultimodalQueries.dropVideoSigIndex(spark, dir)
+    MultimodalQueries.Video.index(dir).drop(spark)
     val rows = Tables(spark, dir, "documents")
       .selectExpr("doc_id", "cast(20 + doc_id % 11 AS INT) AS n")
       .as[(Long, Int)].collect().sorted
@@ -1088,21 +1092,21 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[(Long, Int)]
     chunks.foreach { c =>
       mem.addData(c.toSeq)
-      StreamingPipeline.ingestVideoSink(
-          Multimodal.encodeSynthVideoPartitioned(
-            mem.toDF.toDF("doc_id", "n"), "doc_id", "n"), dir)
+      StreamingPipeline.ingestMediaSink(Multimodal.encodeSynthVideoPartitioned(
+            mem.toDF.toDF("doc_id", "n"), "doc_id", "n"), dir,
+        MultimodalQueries.Video)
         .option("checkpointLocation", ckpt).start().awaitTermination()
-      MultimodalQueries.compactVideoSigTiered(spark, dir, minRun = 2)
+      MultimodalQueries.Video.index(dir).compactTiered(spark, minRun = 2)
     }
-    assert(MultimodalQueries.videoSigBound(spark, dir)
+    assert(MultimodalQueries.Video.index(dir).bound(spark)
       == Some(rows.last._1 + 1))
-    val depth = MultimodalQueries.videoSigLadder(spark, dir).size
+    val depth = MultimodalQueries.Video.index(dir).ladder(spark).size
     assert(depth <= 5,
       s"tiered maintenance must keep the ladder shallow, got depth $depth")
     assert(snapshot() == expected,
       "ingest interleaved with tiered merges diverged from the offline build")
     // sealing still works over the maintained ladder
-    MultimodalQueries.trainVideoSigIndex(spark, dir)
+    MultimodalQueries.Video.index(dir).train(spark)
     assert(snapshot() == expected)
   }
 

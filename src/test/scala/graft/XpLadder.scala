@@ -55,9 +55,9 @@ object XpChild {
           b => DedupQueries.appendShingleIndex(spark, target, b.toInt)
         case "ivf" =>
           SimilarityQueries.appendIvfAssignments(spark, target, _)
-        case "image" => MultimodalQueries.appendMediaSigs(spark, target, _)
-        case "audio" => MultimodalQueries.appendAudioSigs(spark, target, _)
-        case "video" => MultimodalQueries.appendVideoSigs(spark, target, _)
+        case "image" => MultimodalQueries.Image.index(target).append(spark, _)
+        case "audio" => MultimodalQueries.Audio.index(target).append(spark, _)
+        case "video" => MultimodalQueries.Video.index(target).append(spark, _)
         case other => throw new IllegalArgumentException(other)
       }
       bounds.foreach { b =>
