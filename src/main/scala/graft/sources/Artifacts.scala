@@ -49,7 +49,9 @@ object Artifacts {
 
   /** Where `kind`'s artifact for lake `dir` lives, at scheme `version`
     * (bumped when the training code changes, so a stale artifact is
-    * never reused): `/root/repo/target/<kind>/<version>/<name>-<tag>`.
+    * never reused): `<root>/<kind>/<version>/<name>-<tag>`, where
+    * `<root>` is the `target` dir of the working directory (the
+    * repository root when run through sbt or perfbench).
     * The tag is the first 8 hex digits of the MD5 of the ABSOLUTE dir,
     * so two lakes that share a basename never share an artifact; the
     * basename is kept for readability. Callers append their file name. */
@@ -58,8 +60,10 @@ object Artifacts {
     val tag = java.security.MessageDigest.getInstance("MD5")
       .digest(f.getAbsolutePath.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(8)
-    s"/root/repo/target/$kind/$version/${f.getName}-$tag"
+    s"$root/$kind/$version/${f.getName}-$tag"
   }
+
+  private val root = new java.io.File("target").getAbsolutePath
 
   /** Train every artifact whose source table exists in `dir` — a
     * documents-only corpus gets the documents-derived artifacts and no

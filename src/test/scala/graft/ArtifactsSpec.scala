@@ -69,27 +69,28 @@ class ArtifactsSpec extends SparkSpec {
     // path function keeps its exact string: root, kind, version, the
     // lake's basename and the 8-hex MD5 tag of its absolute path
     val d = "/root/testdata/sf0.001"
+    val root = new java.io.File("target").getAbsolutePath
     val paths = Seq(
       DedupQueries.shingleIndexBase(d) ->
-        "/root/repo/target/shingles/v2-df1000/sf0.001-a1e8d12c",
+        s"$root/shingles/v2-df1000/sf0.001-a1e8d12c",
       DedupQueries.clusterModelPath(d, "media") ->
-        "/root/repo/target/clusters/v1/sf0.001-a1e8d12c/labels-media.parquet",
+        s"$root/clusters/v1/sf0.001-a1e8d12c/labels-media.parquet",
       SimilarityQueries.ivfModelPath(d) ->
-        "/root/repo/target/ivf/v2-nl16/sf0.001-a1e8d12c/centroids.parquet",
+        s"$root/ivf/v2-nl16/sf0.001-a1e8d12c/centroids.parquet",
       SimilarityQueries.ivfAssignBase(d) ->
-        "/root/repo/target/ivf-assign/v1-m2-nl16/sf0.001-a1e8d12c",
+        s"$root/ivf-assign/v1-m2-nl16/sf0.001-a1e8d12c",
       SimilarityQueries.pqModelPath(d) ->
-        "/root/repo/target/pq/v1/sf0.001-a1e8d12c/codebooks.parquet",
+        s"$root/pq/v1/sf0.001-a1e8d12c/codebooks.parquet",
       TextQueries.bpeModelPath(d) ->
-        "/root/repo/target/bpe/v1/sf0.001-a1e8d12c/merges.parquet",
+        s"$root/bpe/v1/sf0.001-a1e8d12c/merges.parquet",
       TextQueries.unigramModelPath(d) ->
-        "/root/repo/target/unigram/v1/sf0.001-a1e8d12c/pieces.parquet",
+        s"$root/unigram/v1/sf0.001-a1e8d12c/pieces.parquet",
       MultimodalQueries.Image.index(d).base ->
-        "/root/repo/target/media-sigs/v1-a1/sf0.001-a1e8d12c",
+        s"$root/media-sigs/v1-a1/sf0.001-a1e8d12c",
       MultimodalQueries.Audio.index(d).base ->
-        "/root/repo/target/media-sigs/v1-fp48/sf0.001-a1e8d12c",
+        s"$root/media-sigs/v1-fp48/sf0.001-a1e8d12c",
       MultimodalQueries.Video.index(d).base ->
-        "/root/repo/target/media-sigs/v1-vsc63/sf0.001-a1e8d12c")
+        s"$root/media-sigs/v1-vsc63/sf0.001-a1e8d12c")
     paths.foreach { case (got, want) => assert(got == want) }
   }
 

@@ -295,7 +295,7 @@ class DedupSpec extends SparkSpec with TempLakes {
     // rows — but over it once the batch lands. The reader's anti-join
     // against the CURRENT census must drop the lake slice's
     // already-written rows too (the monotone-hot argument).
-    val dir = ownLake("/root/repo/target/tmp/capcross-lake")
+    val dir = ownLake(new java.io.File("target/tmp/capcross-lake").getAbsolutePath)
     val n = 600
     (0 until 2 * n).map { i =>
       (i.toLong, if (i < n) "src0" else "src10",
@@ -342,7 +342,7 @@ class DedupSpec extends SparkSpec with TempLakes {
     // compaction the merged slice still carries them, so the read must
     // stay exactly equal (the monotone-hot correction is read-time,
     // never baked into slice bytes).
-    val dir = ownLake("/root/repo/target/tmp/capcross-compactslices")
+    val dir = ownLake(new java.io.File("target/tmp/capcross-compactslices").getAbsolutePath)
     val n = 600
     (0 until 2 * n).map { i =>
       (i.toLong, if (i < n) "src0" else "src10",
@@ -382,7 +382,7 @@ class DedupSpec extends SparkSpec with TempLakes {
     // persisted prior cannot be un-merged, so the continual-ingest
     // compaction must FAIL VISIBLY instead of persisting a prior that
     // silently diverges from from-scratch retraining.
-    val dir = ownLake("/root/repo/target/tmp/capcross-compact")
+    val dir = ownLake(new java.io.File("target/tmp/capcross-compact").getAbsolutePath)
     val n = 600
     (0 until 2 * n).map { i =>
       (i.toLong, if (i < n) "src0" else "src10",
