@@ -95,12 +95,17 @@ object OperatorManual {
       case (l, i) => FnRe.findFirstMatchIn(l).map(m =>
         m.group(1) -> (i, m.group(2).split('.').last))
     }.toMap
+    // a method a value inherits may be defined in another registry file
+    // (the cluster lifecycle's stages): look there after the own file
+    val sources = lines #:: LazyList.from(modules.map(_._3))
+      .filterNot(_ == path).map(p => Files.readAllLines(Paths.get(repoRoot, p))
+        .toArray(Array.empty[String]))
     qs.map { q =>
       val (declLine, fnIdent) = decls.getOrElse(q.name, (-1, ""))
-      val defLine = lines.indexWhere(l =>
-        l.contains(s"def $fnIdent(") || l.contains(s"def $fnIdent:"))
-      val doc =
-        if (defLine >= 0) docAbove(lines, defLine) else ""
+      val doc = sources.map(ls => ls -> ls.indexWhere(l =>
+          l.contains(s"def $fnIdent(") || l.contains(s"def $fnIdent:")))
+        .collectFirst { case (ls, i) if i >= 0 => docAbove(ls, i) }
+        .getOrElse("")
       // a leading short `TAG:` prefix in the scaladoc (the files'
       // convention for §2 row / capability labels) becomes the tag cell
       val TagRe = """^([^.:]{1,48}):\s+(.*)$""".r

@@ -107,7 +107,7 @@ object ScaleDemo {
     import graft.queries.{DedupQueries, SimilarityQueries}
     rmrf(d)
     DedupQueries.dropShingleIndex(spark, d)
-    Seq("text", "text-lake").foreach(k =>
+    Seq(DedupQueries.Text.kind, DedupQueries.Text.priorKind(10)).foreach(k =>
       rmrf(DedupQueries.clusterModelPath(d, k)))
     SimilarityQueries.dropIvfAssignments(spark, d)
     rmrf(new java.io.File(SimilarityQueries.ivfModelPath(d)).getParent)
@@ -141,7 +141,7 @@ object ScaleDemo {
     val results = Seq(oneDir, tenDir).map { d =>
       val (train, _) = timed {
         graft.queries.DedupQueries.trainShingleIndex(spark, d)
-        graft.queries.DedupQueries.trainClusterLabels(spark, d)
+        graft.queries.DedupQueries.Text.trainClusterLabels(spark, d)
       }
       val docs = spark.read.parquet(s"$d/documents.parquet").count()
       println(f"[scale] $d: $docs rows, offline train $train%.1f s")
@@ -203,7 +203,8 @@ object ScaleDemo {
     // recall alongside time (NPROBE is FIXED at both scales — see the
     // verdict print below), and the semdedup candidate count, so the
     // growth table separates output-bound from plan-bound growth
-    val recall1 = graft.queries.SimilarityQueries.annRecallIvf(spark, oneDir)
+    val recall1 = graft.queries.SimilarityQueries.annRecall(spark, oneDir,
+      Nil, Seq("ivf")).head
     val cands1 = semdedupCandidates(spark, oneDir)
     // 10x side: ×10 vectors AND ×10 lists — the occupancy-constant
     // scaling a 100 TB deployment uses (nlist ∝ N); the knob folds into
@@ -234,7 +235,8 @@ object ScaleDemo {
           println(f"[scale] $tenVecDir $q%-24s median=$med%.2f s rows=$rows")
           q -> (med, rows)
         }.toMap
-        val r10 = graft.queries.SimilarityQueries.annRecallIvf(spark, tenVecDir)
+        val r10 = graft.queries.SimilarityQueries.annRecall(spark,
+          tenVecDir, Nil, Seq("ivf")).head
         (m, r10, semdedupCandidates(spark, tenVecDir))
       } finally System.clearProperty("graft.ivf.nlist")
     println(f"%n[scale] vector growth at ${Factor}x vectors, nlist x$Factor (occupancy constant; linear = ${Factor}.0):")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE local-session recipe for every engine main (Verify, Bench,
-  * RecallEval, PlanDump, LshTune, SqlCrossCheck). The oracle compare
+  * AnnQuality, PlanDump, SqlCrossCheck). The oracle compare
   * depends on these semantics (ANSI off for pandas-cast parity, UTC,
   * AQE, low shuffle partitions) — a tool hand-rolling its own builder
   * and missing one config would silently measure/verify under different

@@ -598,23 +598,8 @@ object SqlCrossCheck {
     def fullRewrite(sql0: String): String =
       toSparkDialect(hexCast2.replaceAllIn(hexCast.replaceAllIn(
         readParquet.replaceAllIn(
-          sql0.replace(eventsSnippet, "events")
-            .replace(SimilarityQueries.IvfCentroidsToken,
-              SimilarityQueries.ivfModelPath(sfDir))
-            .replace(SimilarityQueries.PqCodebooksToken,
-              SimilarityQueries.pqModelPath(sfDir))
-            .replace(graft.queries.TextQueries.BpeMergesToken,
-              graft.queries.TextQueries.bpeModelPath(sfDir))
-            .replace(graft.queries.TextQueries.UnigramPiecesToken,
-              graft.queries.TextQueries.unigramModelPath(sfDir))
-            .replace(graft.queries.DedupQueries.clusterLabelsToken("text"),
-              graft.queries.DedupQueries.clusterModelPath(sfDir, "text"))
-            .replace(graft.queries.DedupQueries.clusterLabelsToken("media"),
-              graft.queries.DedupQueries.clusterModelPath(sfDir, "media"))
-            .replace(graft.queries.DedupQueries.clusterLabelsToken("audio"),
-              graft.queries.DedupQueries.clusterModelPath(sfDir, "audio"))
-            .replace(graft.queries.DedupQueries.clusterLabelsToken("video"),
-              graft.queries.DedupQueries.clusterModelPath(sfDir, "video"))
+          graft.sources.Artifacts.resolveTokens(
+              sql0.replace(eventsSnippet, "events"), sfDir)
             .replace("list_dot_product", "dot_product")
             .replace(" AS VARCHAR)", " AS STRING)"),
           m => s"parquet.`${m.group(1)}`"),

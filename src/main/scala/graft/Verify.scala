@@ -47,21 +47,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .filter(kv => wanted(kv._1))
       .map { case (k, v) =>
-        val sql = v
-          .replace(graft.queries.SimilarityQueries.IvfCentroidsToken,
-            graft.queries.SimilarityQueries.ivfModelPath(sfDir))
-          .replace(graft.queries.SimilarityQueries.PqCodebooksToken,
-            graft.queries.SimilarityQueries.pqModelPath(sfDir))
-          .replace(graft.queries.TextQueries.BpeMergesToken,
-            graft.queries.TextQueries.bpeModelPath(sfDir))
-          .replace(graft.queries.TextQueries.UnigramPiecesToken,
-            graft.queries.TextQueries.unigramModelPath(sfDir))
-        val sql2 = Seq("text", "media", "audio", "video").foldLeft(sql) {
-          (s, kind) => s.replace(
-            graft.queries.DedupQueries.clusterLabelsToken(kind),
-            graft.queries.DedupQueries.clusterModelPath(sfDir, kind))
-        }
-        s"${q(k)}: ${q(sql2)}"
+        s"${q(k)}: ${q(graft.sources.Artifacts.resolveTokens(v, sfDir))}"
       }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -171,27 +171,22 @@ object MultimodalQueries {
   // ==========================================================================
 
   /** One decoded-signature table per (session, dir) for the modalities
-    * that checkpoint theirs — the same derived-artifact discipline as the
-    * text side's shingle/cluster caches: the DECODE runs once per lake
-    * snapshot and the tiny (media_id, phash) table is localCheckpoint'ed
-    * for every consumer (near-dup pairs, cluster formation). */
-  private val mediaSigCacheMap = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+    * that checkpoint theirs: the DECODE runs once per lake snapshot and
+    * the tiny (media_id, phash) table is localCheckpoint'ed for every
+    * consumer (near-dup pairs, cluster formation). */
+  private val mediaSigCache =
+    new DedupQueries.SessionCache(_.localCheckpoint())
 
-  /** Evict the decoded-signature artifact (paired with
+  /** Evict the decoded-signature tables (paired with
     * [[DedupQueries.clearShingleCache]] — Bench calls both after its
     * warmup pass so warmup-dir checkpoint blocks don't occupy executor
     * storage during the measured run). */
-  def clearMediaSigCache(): Unit = {
-    mediaSigCacheMap.values.foreach(df =>
-      try df.unpersist() catch { case _: Throwable => () })
-    mediaSigCacheMap.clear()
-  }
+  def clearMediaSigCache(): Unit = mediaSigCache.clear()
 
   /** What one media modality's dedup pipeline needs that the others do
-    * not; every stage is a method here, written once.
-    *  - `kind`: the cluster-label artifact kind; the lake priors the
-    *    incremental merge extends are `<kind>-lake[-b<bound>]`.
+    * not; every stage is a method here or of the
+    * [[DedupQueries.ClusterLifecycle]] it extends, written once.
+    *  - `kind`: the cluster-label artifact kind.
     *  - `maxHamming`: the near-dup bound, the largest distance the
     *    modality's 4-band pigeonhole still finds exactly.
     *  - `scheme`, `what`: the signature index's version tag and its name
@@ -203,12 +198,14 @@ object MultimodalQueries {
     *  - `volume`: an item's payload size (pixels, samples, frames) from
     *    its id; `countCol`/`totalCol`/`keptCol` name the canonical and
     *    incremental outputs. */
-  private[graft] final class MediaModality(val kind: String,
+  private[graft] final class MediaModality(kind: String,
       val maxHamming: Int, scheme: String, what: String,
       blobsRange: (SparkSession, String, Long, Long) => DataFrame,
       signaturesOf: DataFrame => DataFrame, checkpointed: Boolean,
       volume: Column => Column,
-      countCol: String, totalCol: String, keptCol: String) {
+      countCol: String, totalCol: String, keptCol: String)
+      extends DedupQueries.ClusterLifecycle(kind, "media_id", countCol,
+        totalCol, volume(col("doc_id"))) {
 
     /** The persisted signature index of lake `dir`: ranges are derived
       * from the lake's blobs, ingest batches from their own bytes. */
@@ -237,14 +234,7 @@ object MultimodalQueries {
         if (ix.trained(spark)) ix.read(spark)
         else signaturesOf(blobsRange(spark, dir, 0L, Long.MaxValue))
       }
-      if (!checkpointed) build
-      else {
-        mediaSigCacheMap.keys.foreach { case k @ (s, _) =>
-          if (s.sparkContext.isStopped) mediaSigCacheMap.remove(k)
-        }
-        mediaSigCacheMap.getOrElseUpdate((spark, dir),
-          build.localCheckpoint())
-      }
+      if (checkpointed) mediaSigCache(spark, dir)(build) else build
     }
 
     private def sigsDs(spark: SparkSession, dir: String) = {
@@ -263,61 +253,23 @@ object MultimodalQueries {
       Multimodal.mediaNearDups(sigsDs(spark, dir), maxHamming)
         .orderBy("id_a", "id_b")
 
-    /** Offline clustering setup (idempotent): persist the near-dup
-      * cluster labels under [[DedupQueries.clusterModelPath]] as `kind`
-      * — the same trained-artifact pattern as the text labels, so the
-      * cluster views are pure reads that fail fast — plus the lake-side
-      * (src_num < 10) prior the incremental merge extends. The prior
-      * restricts the SAME corpus-censused pair set to lake endpoints, so
-      * the merge over it provably equals full-corpus retraining.
-      * Trained over the signature artifact: the decode is not re-paid. */
-    def trainClusterLabels(spark: SparkSession, dir: String): Unit = {
-      def pairs = Multimodal.mediaNearDups(sigsDs(spark, dir), maxHamming)
+    /** Trained over the signature artifact: the decode is not re-paid. */
+    protected def corpusPairs(spark: SparkSession, dir: String): DataFrame =
+      Multimodal.mediaNearDups(sigsDs(spark, dir), maxHamming)
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-      DedupQueries.trainLabelArtifact(spark, dir, kind)(pairs)
-      DedupQueries.trainLabelArtifact(spark, dir, priorKind(10)) {
-        val srcn = mediaSrcs(spark, dir).select("media_id", "src_num")
-        pairs
-          .join(srcn.select(col("media_id").as("doc_a"),
-            col("src_num").as("sa")), "doc_a")
-          .join(srcn.select(col("media_id").as("doc_b"),
-            col("src_num").as("sb")), "doc_b")
-          .filter(col("sa") < 10 && col("sb") < 10)
-          .select("doc_a", "doc_b")
-      }
-    }
 
-    /** The prior-artifact kind for a lake boundary: src_num < `lakeBound`
-      * is the lake (the media form of [[DedupQueries.lakePriorKind]]). */
-    def priorKind(lakeBound: Int): String =
-      if (lakeBound == 10) s"$kind-lake" else s"$kind-lake-b$lakeBound"
-
-    def clusterLabels(spark: SparkSession, dir: String): DataFrame =
-      DedupQueries.persistedLabels(spark, dir, kind)
-        .select(col("doc_id").as("media_id"), col("cluster_id"))
-
-    /** Dedup cluster formation: the persisted connected components of the
-      * banded near-dup pair graph, from the SAME min-label propagation as
-      * the text side ([[DedupQueries.clusterLabels]]) — every clustered
-      * item carries the smallest media_id reachable from it. The oracle
-      * re-derives the closure independently (unrolled label CTEs), so a
-      * green hash certifies the offline training. */
-    def clusters(spark: SparkSession, dir: String): DataFrame =
-      clusterLabels(spark, dir).orderBy("media_id")
-
-    /** The dedup end-product: keep the min-media_id representative of
-      * each near-dup cluster, with survivor accounting per source (item
-      * count + total payload volume retained). */
-    def canonical(spark: SparkSession, dir: String): DataFrame = {
-      val drops = clusterLabels(spark, dir)
-        .filter(col("media_id") =!= col("cluster_id"))
-        .select(col("media_id").as("doc_id"))
-      Tables(spark, dir, "documents")
-        .join(drops, Seq("doc_id"), "left_anti")
-        .groupBy("source")
-        .agg(count(lit(1)).as(countCol),
-          sum(volume(col("doc_id"))).as(totalCol))
-        .orderBy("source")
+    /** The SAME corpus-censused pair set restricted to lake endpoints,
+      * so the merge over the prior provably equals full-corpus
+      * retraining. */
+    protected def lakePairs(spark: SparkSession, dir: String): DataFrame = {
+      val srcn = mediaSrcs(spark, dir).select("media_id", "src_num")
+      corpusPairs(spark, dir)
+        .join(srcn.select(col("media_id").as("doc_a"),
+          col("src_num").as("sa")), "doc_a")
+        .join(srcn.select(col("media_id").as("doc_b"),
+          col("src_num").as("sb")), "doc_b")
+        .filter(col("sa") < 10 && col("sb") < 10)
+        .select("doc_a", "doc_b")
     }
 
     /** Incremental dedup — the batch-vs-lake shape a GROWING corpus
@@ -356,16 +308,16 @@ object MultimodalQueries {
         .orderBy("source")
     }
 
-    /** Undirected near-dup pairs TOUCHING the batch — the merge graph
-      * for incremental clustering: batch-batch pairs from a self-join of
-      * the batch's informative bands, batch-lake pairs from the batch
-      * probing the lake's band buckets. Lake×lake candidates are never
-      * generated (the prior already contracted that structure), so
-      * candidate volume is bounded by the BATCH's band occupancy. The hot
-      * census runs over the corpus-so-far (src_num < batchBound): the
-      * ingest-time semantics, which coincides with the corpus-wide census
-      * whenever no bucket crosses the cap between boundaries. */
-    private def pairsAmong(spark: SparkSession, dir: String,
+    /** Batch-batch pairs from a self-join of the batch's informative
+      * bands, batch-lake pairs from the batch probing the lake's band
+      * buckets. The hot census runs over the corpus-so-far
+      * (src_num < batchBound): the ingest-time semantics, which coincides
+      * with the corpus-wide census whenever no bucket crosses the cap
+      * between boundaries. There is no pre-merge step: cluster boundaries
+      * live in src_num space while the signature ladder advances in
+      * media_id space as blobs land, so by the time a src batch is
+      * compacted its signatures are already on disk. */
+    protected def batchPairs(spark: SparkSession, dir: String,
         lakeBound: Int, batchBound: Int): DataFrame = {
       val srcn = mediaSrcs(spark, dir).select("media_id", "src_num")
       val okb = okbOf(sigs(spark, dir).join(srcn, "media_id")
@@ -386,70 +338,6 @@ object MultimodalQueries {
         .select(least(col("a.media_id"), col("c.media_id")).as("doc_a"),
           greatest(col("a.media_id"), col("c.media_id")).as("doc_b"))
       bb.unionByName(bl).distinct()
-    }
-
-    /** The incremental cluster merge shared by [[clustersIncremental]]
-      * (the oracle-checked query) and [[compactClusterLabels]] (which
-      * persists it): the `lakeBound` prior's labels extended by the
-      * batch-touching pair graph through the SAME contraction +
-      * bounded-union-find machinery as the text side
-      * ([[DedupQueries.incrementalLabels]]). Returns (doc_id, cluster_id,
-      * prior_id) for every node of the merge. */
-    private def clustersIncrementalLabels(spark: SparkSession, dir: String,
-        lakeBound: Int = 10, batchBound: Int = Int.MaxValue): DataFrame =
-      DedupQueries.incrementalLabels(
-        DedupQueries.persistedLabels(spark, dir, priorKind(lakeBound))
-          .select("doc_id", "cluster_id"),
-        pairsAmong(spark, dir, lakeBound, batchBound))
-
-    /** The compaction step closing the modality's continual-ingest loop
-      * (blobs arrive → [[graft.streaming.StreamingPipeline.ingestMediaSink]]
-      * maintains the signature index → THIS merges the new items'
-      * near-dup structure into the persisted cluster prior and advances
-      * it): merges the pair graph of src_num ∈ [lakeBound, batchBound)
-      * into the `lakeBound` prior and persists the result as the prior
-      * for `batchBound`; an unbounded `batchBound` lands in the
-      * full-corpus `kind` artifact, which equals from-scratch retraining
-      * exactly (MediaSpec proves the single-shot and the staged-ladder
-      * equality). Unlike the text form, this step does NOT append the
-      * signature index: cluster boundaries live in src_num space while
-      * the ladder advances in media_id space as blobs land, so by the
-      * time a src batch is compacted its signatures are already on disk. */
-    def compactClusterLabels(spark: SparkSession, dir: String,
-        lakeBound: Int = 10, batchBound: Int = Int.MaxValue): Unit = {
-      require(batchBound > lakeBound,
-        s"compactClusterLabels($kind): batchBound $batchBound must exceed " +
-          s"lakeBound $lakeBound — a reversed call would read the " +
-          s"$lakeBound prior and persist it mislabeled")
-      val merged = clustersIncrementalLabels(spark, dir, lakeBound,
-          batchBound)
-        .select("doc_id", "cluster_id")
-      val out = if (batchBound == Int.MaxValue) kind else priorKind(batchBound)
-      merged.coalesce(1).write.mode("overwrite")
-        .parquet(DedupQueries.clusterModelPath(dir, out))
-      // release the merge's batch-node checkpoint (same discipline as the
-      // text compaction — the repeated loop must not accumulate blocks)
-      DedupQueries.releaseGeneration(merged)
-    }
-
-    /** Incremental clustering as an oracle-checked query: the
-      * src_num ≥ 10 items arrive as the batch, the persisted lake prior
-      * stands in for the compacted lake, and every item of the merged
-      * graph reports its final cluster and how it got it (batch arrival /
-      * lake cluster merged by a batch bridge / stable). The DuckDB oracle
-      * recomputes the FULL closure independently and derives the prior's
-      * closure from the lake-restricted pair set — a green hash proves
-      * merge ≡ full retraining, the theorem the compaction loop rests
-      * on. */
-    def clustersIncremental(spark: SparkSession, dir: String): DataFrame = {
-      val srcn = mediaSrcs(spark, dir).select(
-        col("media_id").as("doc_id"), col("src_num"))
-      clustersIncrementalLabels(spark, dir).join(srcn, "doc_id")
-        .select(col("doc_id").as("media_id"), col("cluster_id"),
-          when(col("src_num") >= 10, lit("batch"))
-            .when(col("cluster_id") =!= col("prior_id"), lit("merged"))
-            .otherwise(lit("stable")).as("status"))
-        .orderBy("media_id")
     }
   }
 

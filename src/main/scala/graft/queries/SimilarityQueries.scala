@@ -17,7 +17,7 @@ import graft.Tables
   * broadcastable query side, no cross join anywhere. Narrow buckets plus
   * Hamming-radius multiprobe on the query side (only probe rows fan out,
   * never the corpus index) buys recall at a fraction of the scan share
-  * wide buckets would pay; layout tuned with [[graft.LshTune]], measured
+  * wide buckets would pay; layout tuned with [[graft.AnnQuality]], measured
   * in README's recall table. An IVF layout (k-means centroids) drops
   * into the same join shape.
   *
@@ -39,7 +39,7 @@ object SimilarityQueries {
     * is unchanged, only the query fans out, so recall is bought with
     * probe rows (queries × tables × probe masks — broadcastable) instead
     * of corpus scan share. Values tuned empirically with
-    * [[graft.LshTune]] at sf0.1 — (7, 1) reaches recall@1 = 1.00 (from
+    * [[graft.AnnQuality]]'s LSH grid at sf0.1 — (7, 1) reaches recall@1 = 1.00 (from
     * 0.80 single-probe) visiting 41% of the corpus; wider radii push
     * recall@10 higher only by visiting > 45%, and the round-7 grid shows
     * every ≤20%-visited layout collapsing below 0.80 recall@1 — which is
@@ -47,7 +47,7 @@ object SimilarityQueries {
     * documented scale route. See README's recall table. */
   private val LSH_PLANES = 7
   private val LSH_RADIUS = 1
-  /** Hyperplane pool depth — [[LshTune]] sweeps planes ≤ this; pools are
+  /** Hyperplane pool depth — [[graft.AnnQuality]] sweeps planes ≤ this; pools are
     * prefix-stable so tuning and production share hyperplanes. */
   private val LSH_MAX_PLANES = 12
   private val DIM = 64
@@ -379,8 +379,7 @@ object SimilarityQueries {
   }
 
   /** Distinct LSH candidate pairs (query_id, vec_id) under the given
-    * layout — the shared core of [[annLsh]], the recall diagnostics and
-    * [[graft.LshTune]]'s sweep. */
+    * layout — the shared core of [[annLsh]] and [[annRecall]]. */
   private[queries] def lshCandidatesOf(e: DataFrame, planes: Int,
       radius: Int): DataFrame = {
     val buckets = lshBucketsOf(e, planes)
@@ -895,7 +894,7 @@ object SimilarityQueries {
   private val PQ_RERANK_MULT = 2
 
   /** Driver-side twin of the in-query budget expression, for diagnostics
-    * ([[annRecallStats]]'s visited-fraction column). */
+    * ([[annRecall]]'s visited-fraction column). */
   private[queries] def pqRerankBudget(n: Long): Long =
     math.max(PQ_RERANK_FLOOR.toLong,
       TOPK.toLong * math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(n - 1))
@@ -1308,9 +1307,6 @@ object SimilarityQueries {
   final case class AnnRouteStats(route: String, recallAt1: Double,
     recallAt10: Double, visitedFraction: Double)
 
-  /** Offline diagnostic (NOT a registry query): measures both ANN routes
-    * against [[annBrute]] ground truth on `dir`. Trains the IVF model if
-    * absent — this is setup tooling, the same tier as training itself. */
   /** recall@k of `res` against the brute-force truth table. */
   private def recallVs(brute: DataFrame, res: DataFrame, k: Int): Double = {
     val truth = brute.filter(col("rank") <= k)
@@ -1320,102 +1316,73 @@ object SimilarityQueries {
       Seq("query_id", "neighbor_id")).count().toDouble / truth.count()
   }
 
-  /** Measure a grid of LSH (planes, radius) layouts against brute-force
-    * truth on `dir` — the tuning tool ([[graft.LshTune]]) behind the
-    * production LSH_PLANES/LSH_RADIUS choice. */
-  def lshSweep(spark: SparkSession, dir: String,
-      layouts: Seq[(Int, Int)]): Seq[((Int, Int), AnnRouteStats)] = {
+  /** The production ANN routes [[annRecall]] can measure. */
+  val AnnRoutes: Seq[String] = Seq("lsh", "ivf", "pq", "ivfpq")
+
+  /** Offline ANN quality report (NOT a registry query) against
+    * [[annBrute]] ground truth on `dir`: one row per LSH (planes, radius)
+    * layout in `layouts` (route `lsh(p,r)` — the grid behind the
+    * production LSH_PLANES/LSH_RADIUS choice), then one per production
+    * route in `routes` (of [[AnnRoutes]]). Trains the models the routes
+    * read if absent — IVF for every route but lsh, PQ codes for pq and
+    * ivfpq — setup tooling, the same tier as training itself. */
+  def annRecall(spark: SparkSession, dir: String, layouts: Seq[(Int, Int)],
+      routes: Seq[String]): Seq[AnnRouteStats] = {
+    if (routes.exists(_ != "lsh")) {
+      trainIvfCentroids(spark, dir)
+      trainIvfAssignments(spark, dir)
+    }
+    if (routes.exists(_.endsWith("pq"))) trainPqCodes(spark, dir)
     val n = Tables(spark, dir, "embeddings").count()
     val brute = annBrute(spark, dir)
       .select("query_id", "neighbor_id", "rank").cache()
-    val out = layouts.map { case (planes, radius) =>
+    def measured(route: String, res0: DataFrame, visited: Double) = {
+      val res = res0.cache()
+      try AnnRouteStats(route, recallVs(brute, res, 1),
+        recallVs(brute, res, TOPK), visited)
+      finally res.unpersist()
+    }
+    // LSH cost: distinct multiprobe candidates per query, as total pairs
+    // / (queries · corpus) — a per-query avg over the grouped counts
+    // would silently DROP zero-candidate queries and overstate visited%
+    // exactly for the sparsest layouts
+    def lsh(route: String, planes: Int, radius: Int) = {
       require(planes <= LSH_MAX_PLANES, s"pool holds $LSH_MAX_PLANES planes")
       val e = embeddingsOf(spark, dir)
       val cand = lshCandidatesOf(e, planes, radius).cache()
-      val res = exactTopK(e, cand)
-      // total pairs / (queries · corpus): a per-query avg over the
-      // grouped counts would silently DROP zero-candidate queries and
-      // overstate visited% exactly for the sparsest layouts in the grid
-      val visited = cand.count().toDouble / (NQUERIES * (n - 1.0))
-      val stats = AnnRouteStats(s"lsh($planes,$radius)",
-        recallVs(brute, res, 1), recallVs(brute, res, TOPK), visited)
-      cand.unpersist()
-      (planes, radius) -> stats
+      try measured(route, exactTopK(e, cand),
+        cand.count().toDouble / (NQUERIES * (n - 1.0)))
+      finally cand.unpersist()
     }
-    brute.unpersist()
-    out
-  }
-
-  /** IVF-only recall reading: ground truth (annBrute) + the IVF route
-    * and its probed-list fraction, nothing else — no PQ codebook
-    * training, no LSH/PQ/IVFPQ runs. This is what ScaleDemo prints at
-    * each scale point; the full four-route table stays
-    * [[annRecallStats]] (RecallEval's diagnostic). */
-  def annRecallIvf(spark: SparkSession, dir: String): AnnRouteStats = {
-    trainIvfCentroids(spark, dir)
-    trainIvfAssignments(spark, dir)
-    val n = Tables(spark, dir, "embeddings").count()
-    val brute = annBrute(spark, dir)
-      .select("query_id", "neighbor_id", "rank").cache()
-    val ranked = centroidScored(spark, dir).cache()
-    val listSizes = centroidAssigned(ranked)
-      .groupBy("c_id").agg(count(lit(1)).as("sz"))
-    val ivfVisited = centroidProbes(ranked)
-      .select("query_id", "c_id")
-      .join(listSizes, "c_id")
-      .groupBy("query_id").agg(sum("sz").as("visited"))
-      .agg(avg((col("visited") - 1.0) / (n - 1.0))).first().getDouble(0)
-    val ivfRes = annIvf(spark, dir).cache()
-    val out = AnnRouteStats("ivf", recallVs(brute, ivfRes, 1),
-      recallVs(brute, ivfRes, TOPK), ivfVisited)
-    Seq(brute, ranked, ivfRes).foreach(_.unpersist())
-    out
-  }
-
-  def annRecallStats(spark: SparkSession, dir: String): Seq[AnnRouteStats] = {
-    trainIvfCentroids(spark, dir)
-    trainIvfAssignments(spark, dir)
-    trainPqCodes(spark, dir)
-    val n = Tables(spark, dir, "embeddings").count()
-    val brute = annBrute(spark, dir)
-      .select("query_id", "neighbor_id", "rank").cache()
-    // LSH cost: distinct multiprobe candidates per query (total pairs /
-    // (queries · corpus) — counts zero-candidate queries, unlike an avg
-    // over grouped per-query counts)
-    val lshVisited = lshCandidatesOf(embeddingsOf(spark, dir),
-        LSH_PLANES, LSH_RADIUS)
-      .count().toDouble / (NQUERIES * (n - 1.0))
     // IVF cost: sizes of each query's NPROBE probed lists (lists are
     // disjoint — crank 1 partitions the corpus); −1 for the query itself,
     // which always sits in one of its own probed lists
-    val ranked = centroidScored(spark, dir).cache()
-    val listSizes = centroidAssigned(ranked)
-      .groupBy("c_id").agg(count(lit(1)).as("sz"))
-    val ivfVisited = centroidProbes(ranked)
-      .select("query_id", "c_id")
-      .join(listSizes, "c_id")
-      .groupBy("query_id").agg(sum("sz").as("visited"))
-      .agg(avg((col("visited") - 1.0) / (n - 1.0))).first().getDouble(0)
-    val lshRes = annLsh(spark, dir).cache()
-    val ivfRes = annIvf(spark, dir).cache()
-    val pqRes = annPq(spark, dir).cache()
-    val ivfpqRes = annIvfPq(spark, dir).cache()
-    val out = Seq(
-      AnnRouteStats("lsh", recallVs(brute, lshRes, 1), recallVs(brute, lshRes, TOPK),
-        lshVisited),
-      AnnRouteStats("ivf", recallVs(brute, ivfRes, 1), recallVs(brute, ivfRes, TOPK),
-        ivfVisited),
-      // PQ's ADC pass touches every CODE (by design — compression tier);
-      // "visited" here reports the exact-rerank fraction, the share of
-      // raw vectors actually read — clamped to the n−1 candidates that
-      // exist, since the budget formula can exceed them on tiny corpora
-      AnnRouteStats("pq", recallVs(brute, pqRes, 1), recallVs(brute, pqRes, TOPK),
-        math.min(pqRerankBudget(n), n - 1).toDouble / (n - 1.0)),
-      AnnRouteStats("ivfpq", recallVs(brute, ivfpqRes, 1), recallVs(brute, ivfpqRes, TOPK),
-        math.min(pqRerankBudget(n), n - 1).toDouble / (n - 1.0)))
-    Seq(brute, ranked, lshRes, ivfRes, pqRes, ivfpqRes)
-      .foreach(_.unpersist())
-    out
+    def ivfVisited = {
+      val ranked = centroidScored(spark, dir).cache()
+      val listSizes = centroidAssigned(ranked)
+        .groupBy("c_id").agg(count(lit(1)).as("sz"))
+      try centroidProbes(ranked)
+        .select("query_id", "c_id")
+        .join(listSizes, "c_id")
+        .groupBy("query_id").agg(sum("sz").as("visited"))
+        .agg(avg((col("visited") - 1.0) / (n - 1.0))).first().getDouble(0)
+      finally ranked.unpersist()
+    }
+    // PQ's ADC pass touches every CODE (by design — compression tier);
+    // "visited" here reports the exact-rerank fraction, the share of raw
+    // vectors actually read — clamped to the n−1 candidates that exist,
+    // since the budget formula can exceed them on tiny corpora
+    def pqVisited = math.min(pqRerankBudget(n), n - 1).toDouble / (n - 1.0)
+    try layouts.map { case (p, r) => lsh(s"lsh($p,$r)", p, r) } ++
+      routes.map {
+        case "lsh" => lsh("lsh", LSH_PLANES, LSH_RADIUS)
+        case "ivf" => measured("ivf", annIvf(spark, dir), ivfVisited)
+        case "pq" => measured("pq", annPq(spark, dir), pqVisited)
+        case "ivfpq" => measured("ivfpq", annIvfPq(spark, dir), pqVisited)
+        case r => throw new IllegalArgumentException(
+          s"unknown ANN route '$r' (one of ${AnnRoutes.mkString(", ")})")
+      }
+    finally brute.unpersist()
   }
 
   /** kNN label propagation (weak supervision): each query vector takes
@@ -1869,7 +1836,7 @@ object SimilarityQueries {
       headline = false),
     // Correctness tier, not headline: the hyperplane family tops out at
     // 41% corpus scan for recall@1 = 1.00 on this data — the round-7
-    // LshTune grid (README recall table) shows every ≤20%-visited layout
+    // AnnQuality LSH grid (README recall table) shows every ≤20%-visited layout
     // collapsing to recall@1 ≤ 0.80, so LSH is demoted in favor of
     // q_ann_ivfpq (11% visited, 0.94@10, logarithmic re-rank) as the
     // documented 100 TB route.

@@ -33,7 +33,7 @@ object Artifacts {
     Artifact("pq_codes", "embeddings", S.trainPqCodes),
     Artifact("bpe_merges", "documents", T.trainBpeMerges),
     Artifact("unigram_pieces", "documents", T.trainUnigramPieces),
-    Artifact("text_cluster_labels", "documents", D.trainClusterLabels),
+    Artifact("text_cluster_labels", "documents", D.Text.trainClusterLabels),
     Artifact("audio_sig_index", "documents",
       (s, d) => M.Audio.index(d).train(s), Some(M.Audio.index)),
     Artifact("video_sig_index", "documents",
@@ -64,6 +64,18 @@ object Artifacts {
   }
 
   private val root = new java.io.File("target").getAbsolutePath
+
+  /** Resolve the artifact-path tokens an oracle SQL string carries (the
+    * IVF centroids, PQ codebooks, BPE merges, unigram pieces and every
+    * modality's cluster labels) to lake `dir`'s artifact paths. */
+  def resolveTokens(sql: String, dir: String): String =
+    (Seq(S.IvfCentroidsToken -> S.ivfModelPath(dir),
+      S.PqCodebooksToken -> S.pqModelPath(dir),
+      T.BpeMergesToken -> T.bpeModelPath(dir),
+      T.UnigramPiecesToken -> T.unigramModelPath(dir)) ++
+      Seq(D.Text, M.Image, M.Audio, M.Video).map(m =>
+        D.clusterLabelsToken(m.kind) -> D.clusterModelPath(dir, m.kind)))
+      .foldLeft(sql) { case (s, (token, path)) => s.replace(token, path) }
 
   /** Train every artifact whose source table exists in `dir` — a
     * documents-only corpus gets the documents-derived artifacts and no

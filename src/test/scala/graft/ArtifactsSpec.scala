@@ -8,13 +8,13 @@ import graft.sources.Artifacts
 /** The artifact table's set-up contract, the one every tool relies on:
   * `ensureAll` trains what the lake has a source table for, one bad
   * artifact never skips the rest, and a second call rewrites nothing. */
-class ArtifactsSpec extends SparkSpec {
+class ArtifactsSpec extends SparkSpec with TempLakes {
   /** A private lake (artifacts are keyed by the dir's absolute path, so
     * nothing here collides with other suites' sf0.001 artifacts) holding
     * a copy of sf0.001's documents, plus an `embeddings.parquet` of
     * garbage bytes when asked. */
   private def lake(tag: String, garbageEmbeddings: Boolean): String = {
-    val dir = Files.createTempDirectory(s"graft_artifacts_$tag").toString
+    val dir = tempLake(s"graft_artifacts_$tag")
     Files.copy(Paths.get("/root/testdata/sf0.001/documents.parquet"),
       Paths.get(s"$dir/documents.parquet"))
     if (garbageEmbeddings)

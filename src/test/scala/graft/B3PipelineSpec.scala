@@ -6,7 +6,7 @@ import graft.operators.B3Pipeline
 /** Unit coverage for the pandas-semantics corners called out in
   * SURVEY.md §7.3 — each on a tiny literal frame with a hand-computed
   * expectation. */
-class B3PipelineSpec extends SparkSpec {
+class B3PipelineSpec extends SparkSpec with TempLakes {
   import org.apache.spark.sql.Row
 
   private def ev(rows: Seq[(String, Int, Double, Long)]) = {
@@ -87,7 +87,7 @@ class B3PipelineSpec extends SparkSpec {
   }
 
   test("historicalLoad: CSV -> filter/coerce/dropna/parse -> partitioned parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hist").toString
+    val dir = tempLake("graft_hist")
     // COTAHIST-shaped rows: one lot-padrao (CODBDI=2), one odd-lot (=96),
     // one with a garbage price (coerce -> null -> dropped)
     val header = graft.Schemas.cotahistBar.fieldNames.mkString(",")

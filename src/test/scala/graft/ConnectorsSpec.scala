@@ -8,9 +8,9 @@ import org.apache.spark.sql.types._
 import graft.sources.Connectors
 import graft.operators.Multimodal
 
-class ConnectorsSpec extends SparkSpec {
+class ConnectorsSpec extends SparkSpec with TempLakes {
 
-  private def tmp() = Files.createTempDirectory("graft_conn").toString
+  private def tmp() = tempLake("graft_conn")
 
   test("readCsv: declared schema + latin-1 encoding, coerced nulls") {
     val dir = tmp()

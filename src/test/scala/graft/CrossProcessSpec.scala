@@ -46,8 +46,7 @@ class CrossProcessSpec extends SparkSpec with TempLakes {
   }
 
   test("a second JVM appends while this one compacts and GCs: nothing lost, nothing leaked") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_xp").toString + "/artifact"
+    val base = tempLake("graft_xp") + "/artifact"
     val lad = XpLadder.make(base)
     lad.train(spark, 8L)
     lad.append(spark, 12L)

@@ -150,7 +150,7 @@ class DedupSpec extends SparkSpec with TempLakes {
     DedupQueries.clearShingleCache()
     System.gc() // let ContextCleaner drop unreferenced RDDs from prior tests
     val before = spark.sparkContext.getPersistentRDDs.size
-    DedupQueries.trainClusterLabels(spark, sf) // may be a no-op if trained
+    DedupQueries.Text.trainClusterLabels(spark, sf) // may be a no-op if trained
     val out = q.fn(spark, sf)
     assert(out.count() > 0)
     val after = spark.sparkContext.getPersistentRDDs.size
@@ -197,12 +197,12 @@ class DedupSpec extends SparkSpec with TempLakes {
   test("compactClusterLabels: incremental merge + overwrite equals from-scratch retraining") {
     import graft.queries.DedupQueries
     val sf = "/root/testdata/sf0.001"
-    DedupQueries.trainClusterLabels(spark, sf)
+    DedupQueries.Text.trainClusterLabels(spark, sf)
     val full = spark.read.parquet(DedupQueries.clusterModelPath(sf, "text"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // compact: merge the batch (src10+) into the lake prior and
     // OVERWRITE the full artifact — the continual-ingest loop's last leg
-    DedupQueries.compactClusterLabels(spark, sf)
+    DedupQueries.Text.compactClusterLabels(spark, sf)
     val compacted = spark.read
       .parquet(DedupQueries.clusterModelPath(sf, "text"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -215,7 +215,7 @@ class DedupSpec extends SparkSpec with TempLakes {
   test("staged compaction advances the lake: b10 → b18 → full equals from-scratch retraining") {
     import graft.queries.DedupQueries
     val sf = "/root/testdata/sf0.001"
-    DedupQueries.trainClusterLabels(spark, sf)
+    DedupQueries.Text.trainClusterLabels(spark, sf)
     val full = spark.read.parquet(DedupQueries.clusterModelPath(sf, "text"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // Maintain the shingle index through the SAME ladder: committed at
@@ -226,10 +226,10 @@ class DedupSpec extends SparkSpec with TempLakes {
     // stage 1: fold src10-17 into the src<10 lake. The merged labels
     // are persisted as the PRIOR FOR BOUNDARY 18 — the refreshed lake —
     // NOT a re-merge target left stale at src<10.
-    DedupQueries.compactClusterLabels(spark, sf,
+    DedupQueries.Text.compactClusterLabels(spark, sf,
       lakeBound = 10, batchBound = 18)
     assert(DedupQueries.clusterModelTrained(spark, sf,
-      DedupQueries.lakePriorKind(18)),
+      DedupQueries.Text.priorKind(18)),
       "stage-1 compaction must persist the advanced b18 prior")
     assert(DedupQueries.shingleIndexBound(spark, sf) == Some(18),
       "stage-1 compaction must append the batch's shingle slice")
@@ -239,7 +239,7 @@ class DedupSpec extends SparkSpec with TempLakes {
     // would be missing from the prior and absent from stage 2's
     // batch-bounded edges — the final labels would diverge from the
     // from-scratch closure below.
-    DedupQueries.compactClusterLabels(spark, sf, lakeBound = 18)
+    DedupQueries.Text.compactClusterLabels(spark, sf, lakeBound = 18)
     val staged = spark.read
       .parquet(DedupQueries.clusterModelPath(sf, "text"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -392,7 +392,7 @@ class DedupSpec extends SparkSpec with TempLakes {
     DedupQueries.dropShingleIndex(spark, dir)
     DedupQueries.trainShingleIndex(spark, dir, bound = 10)
     val e = intercept[IllegalStateException] {
-      DedupQueries.compactClusterLabels(spark, dir,
+      DedupQueries.Text.compactClusterLabels(spark, dir,
         lakeBound = 10, batchBound = Int.MaxValue)
     }
     assert(e.getMessage.contains("crossed the df cap"))
@@ -408,7 +408,7 @@ class DedupSpec extends SparkSpec with TempLakes {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     val sf = "/root/testdata/sf0.001"
-    DedupQueries.trainClusterLabels(spark, sf)
+    DedupQueries.Text.trainClusterLabels(spark, sf)
     val docsSrc = Tables(spark, sf, "documents")
       .withColumn("src_num", expr("cast(substring(source, 4, 8) AS INT)"))
     // From-scratch labels of the src_num < bound prefix corpus: shingle
@@ -432,18 +432,18 @@ class DedupSpec extends SparkSpec with TempLakes {
     for (ladder <- ladders) {
       var lake = 10
       for (b <- ladder) {
-        DedupQueries.compactClusterLabels(spark, sf,
+        DedupQueries.Text.compactClusterLabels(spark, sf,
           lakeBound = lake, batchBound = b)
         val prior = spark.read
           .parquet(DedupQueries.clusterModelPath(sf,
-            DedupQueries.lakePriorKind(b)))
+            DedupQueries.Text.priorKind(b)))
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         assert(prior == scratch(b),
           s"ladder $ladder: compacted prior at b$b diverged from " +
             "from-scratch clustering of the prefix corpus")
         lake = b
       }
-      DedupQueries.compactClusterLabels(spark, sf, lakeBound = lake)
+      DedupQueries.Text.compactClusterLabels(spark, sf, lakeBound = lake)
       val staged = spark.read
         .parquet(DedupQueries.clusterModelPath(sf, "text"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -452,7 +452,7 @@ class DedupSpec extends SparkSpec with TempLakes {
     }
     // reversed boundaries refuse instead of persisting a mislabeled prior
     intercept[IllegalArgumentException] {
-      DedupQueries.compactClusterLabels(spark, sf,
+      DedupQueries.Text.compactClusterLabels(spark, sf,
         lakeBound = 18, batchBound = 12)
     }
   }
@@ -460,15 +460,15 @@ class DedupSpec extends SparkSpec with TempLakes {
   test("continual-ingest soak: repeated merge+compact rounds do not grow storage blocks") {
     import graft.queries.DedupQueries
     val sf = "/root/testdata/sf0.001"
-    DedupQueries.trainClusterLabels(spark, sf)
+    DedupQueries.Text.trainClusterLabels(spark, sf)
     // warm round: materializes the session shingle cache and any
     // one-time cached buffers, so the baseline below is steady-state
-    DedupQueries.compactClusterLabels(spark, sf)
+    DedupQueries.Text.compactClusterLabels(spark, sf)
     System.gc() // let ContextCleaner drain blocks unreferenced by prior tests
     Thread.sleep(200)
     val baseline = spark.sparkContext.getPersistentRDDs.keySet
     for (round <- 1 to 3) {
-      DedupQueries.compactClusterLabels(spark, sf)
+      DedupQueries.Text.compactClusterLabels(spark, sf)
       val leaked = spark.sparkContext.getPersistentRDDs.keySet -- baseline
       assert(leaked.isEmpty,
         s"round $round leaked ${leaked.size} storage blocks (RDD ids " +

@@ -29,7 +29,7 @@ class PlanSpec extends SparkSpec {
     super.beforeAll()
     graft.queries.SimilarityQueries.trainIvfCentroids(spark, sf)
     graft.queries.SimilarityQueries.trainPqCodes(spark, sf)
-    graft.queries.DedupQueries.trainClusterLabels(spark, sf)
+    graft.queries.DedupQueries.Text.trainClusterLabels(spark, sf)
     graft.queries.MultimodalQueries.Image.trainClusterLabels(spark, sf)
     graft.queries.MultimodalQueries.Audio.trainClusterLabels(spark, sf)
     graft.queries.MultimodalQueries.Video.trainClusterLabels(spark, sf)

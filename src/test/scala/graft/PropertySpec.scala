@@ -200,7 +200,7 @@ class PropertySpec extends SparkSpec {
     // q_tok_fertility reads the trained BPE merge table, the cluster-view
     // queries the persisted label artifacts (idempotent trains)
     graft.queries.TextQueries.trainBpeMerges(spark, sf)
-    graft.queries.DedupQueries.trainClusterLabels(spark, sf)
+    graft.queries.DedupQueries.Text.trainClusterLabels(spark, sf)
     graft.queries.MultimodalQueries.Image.trainClusterLabels(spark, sf)
     // q_bitext_margin reads the persisted IVF inverted file
     graft.queries.SimilarityQueries.trainIvfCentroids(spark, sf)

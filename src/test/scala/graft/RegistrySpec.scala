@@ -18,7 +18,7 @@ class RegistrySpec extends SparkSpec {
     graft.queries.SimilarityQueries.trainPqCodes(spark, sf)
     graft.queries.TextQueries.trainBpeMerges(spark, sf)
     graft.queries.TextQueries.trainUnigramPieces(spark, sf)
-    graft.queries.DedupQueries.trainClusterLabels(spark, sf)
+    graft.queries.DedupQueries.Text.trainClusterLabels(spark, sf)
     graft.queries.MultimodalQueries.Image.trainClusterLabels(spark, sf)
   }
 

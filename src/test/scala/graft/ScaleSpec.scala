@@ -6,7 +6,7 @@ import graft.operators.Skew
 /** Executable checks of the 100 TB design notes: salting spreads heavy
   * keys without changing results; bucketed tables co-locate joins (no
   * Exchange in the plan). */
-class ScaleSpec extends SparkSpec {
+class ScaleSpec extends SparkSpec with TempLakes {
 
   test("saltedSumCount: identical result to plain groupBy on skewed data") {
     import spark.implicits._
@@ -28,7 +28,7 @@ class ScaleSpec extends SparkSpec {
     import graft.sources.Layout
     val events = Tables(spark, "/root/testdata/sf0.001", "events")
       .select("event_id", "user_id", "value")
-    val base = java.nio.file.Files.createTempDirectory("zorder").toString
+    val base = tempLake("zorder")
     events.repartition(8).write.mode("overwrite").parquet(s"$base/naive")
     Layout.writeZOrdered(events, "event_id", "value", s"$base/clustered", 8)
 
@@ -110,7 +110,7 @@ class ScaleSpec extends SparkSpec {
 
   test("bucketed tables: co-located join plans without a shuffle") {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val wh = tempLake("graft_wh")
     spark.sql("DROP TABLE IF EXISTS b_orders")
     spark.sql("DROP TABLE IF EXISTS b_lines")
     (1 to 1000).map(i => (i.toLong, s"o$i")).toDF("okey", "otag")

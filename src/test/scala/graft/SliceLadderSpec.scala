@@ -12,7 +12,7 @@ import graft.sources.SliceLadder
   * The per-modality ladder-equality specs (DedupSpec / MediaSpec /
   * StreamingSpec) prove each instance's derivation; this suite proves
   * the mechanics those proofs stand on. */
-class SliceLadderSpec extends SparkSpec {
+class SliceLadderSpec extends SparkSpec with TempLakes {
 
   private val LakeRows = 20L
 
@@ -37,7 +37,7 @@ class SliceLadderSpec extends SparkSpec {
       })
 
   private def tmpBase(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_ladder_$tag").toString +
+    tempLake(s"graft_ladder_$tag") +
       "/artifact"
 
   test("append and train maintain a contiguous ladder; read equals the derivation") {

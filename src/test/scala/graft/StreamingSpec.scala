@@ -15,6 +15,70 @@ class StreamingSpec extends SparkSpec with TempLakes {
 
   private def ts(s: Long) = new Timestamp(s * 1000)
 
+  /** One state-store provider's reading: the state operator's own
+    * telemetry plus the JVM heap growth across the run (GC'd before each
+    * sample). */
+  private final case class Reading(label: String, rowsTotal: Long,
+      stateMemBytes: Long, heapDeltaBytes: Long)
+
+  private def heapUsed(): Long = {
+    System.gc(); Thread.sleep(200); System.gc()
+    val r = Runtime.getRuntime; r.totalMemory() - r.freeMemory()
+  }
+
+  /** Runs the H6 latest-per-key pipeline over `nKeys` keys × `nBatches`
+    * micro-batches under each state-store provider (RocksDB, then the
+    * heap-backed default) and returns the readings. Restores the
+    * session's provider config afterwards. */
+  private def measure(nKeys: Int, nBatches: Int): Seq[Reading] = {
+    import graft.streaming.KeyedValue
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def batch(b: Int) = (0 until nKeys).map(k =>
+      KeyedValue(s"k$k",
+        new Timestamp(1700000000000L + b * 1000L), b.toLong, k * 1.0 + b))
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val before = spark.conf.getOption(providerKey)
+    try {
+      Seq(
+        "rocksdb" -> ("org.apache.spark.sql.execution.streaming.state." +
+          "RocksDBStateStoreProvider"),
+        "hdfs-heap" -> ("org.apache.spark.sql.execution.streaming.state." +
+          "HDFSBackedStateStoreProvider")
+      ).map { case (label, provider) =>
+        spark.conf.set(providerKey, provider)
+        val mem = MemoryStream[KeyedValue]
+        val h0 = heapUsed()
+        val q = StreamingPipeline.latestPerKeyState(mem.toDS(), "10 minutes")
+          .toDF.writeStream.format("noop")
+          .option("checkpointLocation", tempLake(s"graft_ssp_$label"))
+          .outputMode("append")
+          .trigger(Trigger.AvailableNow())
+        // micro-batches over the SAME keyspace: state holds nKeys rows
+        // throughout, each batch rewrites every key (the worst-case
+        // update pattern for a latest-per-key operator)
+        var last: org.apache.spark.sql.streaming.StreamingQueryProgress = null
+        (0 until nBatches).foreach { b =>
+          mem.addData(batch(b))
+          val run = q.start()
+          run.awaitTermination()
+          if (run.lastProgress != null) last = run.lastProgress
+        }
+        val h1 = heapUsed()
+        // a misconfigured run (no progress reported, or a progress with
+        // no state operator) must surface as a named error, not an NPE
+        val so = Option(last).flatMap(_.stateOperators.headOption)
+          .getOrElse(throw new IllegalStateException(
+            s"state probe [$label]: no micro-batch reported state-operator " +
+              "progress — the pipeline did not run stateful"))
+        Reading(label, so.numRowsTotal, so.memoryUsedBytes, h1 - h0)
+      }
+    } finally before match {
+      case Some(v) => spark.conf.set(providerKey, v)
+      case None => spark.conf.unset(providerKey)
+    }
+  }
+
   test("dedupFirstWins: ON CONFLICT DO NOTHING semantics on (key, ts)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -106,7 +170,7 @@ class StreamingSpec extends SparkSpec with TempLakes {
   test("streaming training-data ingest: content dedup → quality gate → idempotent upsert") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val target = Files.createTempDirectory("graft_ingest").toString + "/docs"
+    val target = tempLake("graft_ingest") + "/docs"
     def ingest(batch: Seq[(Long, Timestamp, String)], name: String): Unit = {
       val mem = MemoryStream[(Long, Timestamp, String)]
       mem.addData(batch: _*)
@@ -358,7 +422,7 @@ class StreamingSpec extends SparkSpec with TempLakes {
   test("E2E §3.2: stream → dedup → enrich → upsert → batch metrics") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val target = Files.createTempDirectory("graft_e2e").toString + "/dw"
+    val target = tempLake("graft_e2e") + "/dw"
     // minute 1: quotes arrive (with an in-batch duplicate)
     val mem = MemoryStream[(String, Timestamp, Double, Double)]
     mem.addData(
@@ -402,7 +466,7 @@ class StreamingSpec extends SparkSpec with TempLakes {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
-    val staged = Files.createTempDirectory("graft_b3_twin").toString + "/events"
+    val staged = tempLake("graft_b3_twin") + "/events"
     val ev = Tables(spark, dir, "events")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
       .collect()
@@ -656,7 +720,7 @@ class StreamingSpec extends SparkSpec with TempLakes {
     // two ingest sessions against ONE checkpoint: the second resumes and
     // processes only the rows added after the first drained — the
     // restart-resume shape a continual ingest actually runs
-    val ckpt = Files.createTempDirectory("graft_ivf_ingest").toString
+    val ckpt = tempLake("graft_ivf_ingest")
     val mem = MemoryStream[(Long, Seq[Double])]
     def drain(): Unit =
       StreamingPipeline.ingestVectorsSink(mem.toDF.toDF("vec_id", "v"), dir)
@@ -710,7 +774,7 @@ class StreamingSpec extends SparkSpec with TempLakes {
     val q = StreamingPipeline.ingestVectorsSink(mem.toDF.toDF("vec_id", "v"),
         dir)
       .option("checkpointLocation",
-        Files.createTempDirectory("graft_ivf_once").toString)
+        tempLake("graft_ivf_once"))
       .start()
     q.awaitTermination()
     // a foreachBatch body that evaluates its batch twice (a guard pass,
@@ -895,7 +959,7 @@ class StreamingSpec extends SparkSpec with TempLakes {
         .map(d => (d._1, d._2, d._3)).toSeq
     // two ingest sessions against ONE checkpoint: the second resumes
     // and processes only the sources added after the first drained
-    val ckpt = Files.createTempDirectory("graft_docs_ingest").toString
+    val ckpt = tempLake("graft_docs_ingest")
     val mem = MemoryStream[(Long, String, String)]
     def drain(): Unit =
       StreamingPipeline.ingestDocsSink(
@@ -953,7 +1017,7 @@ class StreamingSpec extends SparkSpec with TempLakes {
     val (first, rest) = rows.splitAt(rows.length / 2)
     // two ingest sessions against ONE checkpoint: the second resumes
     // and hashes only the blobs added after the first drained
-    val ckpt = Files.createTempDirectory("graft_media_ingest").toString
+    val ckpt = tempLake("graft_media_ingest")
     val mem = MemoryStream[(Long, Array[Byte])]
     def drain(): Unit =
       StreamingPipeline.ingestMediaSink(mem.toDF.toDF("media_id", "bytes"), dir,
@@ -1087,8 +1151,7 @@ class StreamingSpec extends SparkSpec with TempLakes {
       .selectExpr("doc_id", "cast(20 + doc_id % 11 AS INT) AS n")
       .as[(Long, Int)].collect().sorted
     val chunks = rows.grouped(math.max(1, rows.length / 8)).toSeq
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_video_ingest").toString
+    val ckpt = tempLake("graft_video_ingest")
     val mem = MemoryStream[(Long, Int)]
     chunks.foreach { c =>
       mem.addData(c.toSeq)
@@ -1401,7 +1464,7 @@ class StreamingSpec extends SparkSpec with TempLakes {
 
   test("H4 durable offsets: checkpointed file stream processes each file once") {
     import spark.implicits._
-    val work = Files.createTempDirectory("graft_ckpt").toString
+    val work = tempLake("graft_ckpt")
     new java.io.File(s"$work/in").mkdirs()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$work/in/a.json"), """{"k":"a","v":1}""")
@@ -1442,7 +1505,7 @@ class StreamingSpec extends SparkSpec with TempLakes {
       .contains("RocksDBStateStoreProvider"))
     assert(spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
       .endsWith(".FileSystemBasedCheckpointFileManager"))
-    val work = Files.createTempDirectory("graft_rocksdb").toString
+    val work = tempLake("graft_rocksdb")
     val mem = MemoryStream[KeyedValue]
     def runOnce(): Unit = {
       val q = StreamingPipeline.latestPerKeyState(mem.toDS(), "1 hour")
@@ -1486,16 +1549,14 @@ class StreamingSpec extends SparkSpec with TempLakes {
   }
 
   test("RocksDB keeps keyed state off the JVM heap (the mechanism, asserted)") {
-    // promotes StateScaleProbe's manual reading into CI: at an identical
-    // keyset, the heap provider's state lives ON the JVM heap (its
+    // at an identical keyset, the heap provider's state lives ON the JVM heap (its
     // memoryUsedBytes tracks the keyspace and the heap grows with it)
     // while RocksDB's on-heap share stays near-flat — the mechanism the
     // 100 TB latest-per-key design depends on. Margins are generous
     // (4x ratio, with a flat-size escape hatch) because the heap deltas
-    // are GC-sampled; the probe main measures the same thing at 300k
-    // keys for the PLANS numbers.
+    // are GC-sampled.
     val nKeys = 80000
-    val rs = StateScaleProbe.measure(spark, nKeys, nBatches = 2)
+    val rs = measure(nKeys, nBatches = 2)
       .map(r => r.label -> r).toMap
     val rocks = rs("rocksdb"); val heap = rs("hdfs-heap")
     // both providers really held the whole keyspace
@@ -1519,7 +1580,7 @@ class StreamingSpec extends SparkSpec with TempLakes {
   test("upsertSink: insert-if-absent across micro-batches and re-runs") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val target = Files.createTempDirectory("graft_upsert").toString + "/tbl"
+    val target = tempLake("graft_upsert") + "/tbl"
     val mem = MemoryStream[(String, Long, Double)]
     mem.addData(("A", 1L, 10.0), ("A", 1L, 99.0), ("B", 2L, 20.0))
     val w = StreamingPipeline.upsertSink(

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * values, and that an unknown third shape fails loudly at the read
   * instead of silently corrupting every downstream query.
   */
-class TablesSpec extends SparkSpec {
+class TablesSpec extends SparkSpec with TempLakes {
 
   /** Micros under test: chosen so the nanos encoding (×1000 + 789) is NOT
     * µs-aligned — proving the ns→µs path truncates rather than rescales
@@ -68,7 +68,7 @@ class TablesSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
 
   test("both shipped ts vintages normalize to identical TimestampType values") {
-    val root = Files.createTempDirectory("graft_vintage").toString
+    val root = tempLake("graft_vintage")
     new java.io.File(s"$root/nanos/events.parquet").mkdirs()
     writeNanosVintage(s"$root/nanos/events.parquet")
     writeNtzVintage(s"$root/ntz/events.parquet")
@@ -94,7 +94,7 @@ class TablesSpec extends SparkSpec {
 
   test("an unknown third ts vintage fails loudly at the read, not downstream") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_vintage3").toString
+    val root = tempLake("graft_vintage3")
     Seq((1L, "2023-11-14 22:13:20")).toDF("event_id", "ts")
       .write.parquet(s"$root/events.parquet")
     val e = intercept[IllegalStateException] {
